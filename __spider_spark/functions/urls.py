@@ -193,14 +193,17 @@ def resolve_link(base: pd.Series, link: pd.Series) -> pd.Series:
     """Vectorized href resolution against the parent URL (Arrow-batched).
     Absolute http(s) hrefs — the overwhelmingly common case in discovered
     link streams — do not depend on the base at all: RFC 3986 §5.2.2
-    takes the reference verbatim when it carries a scheme, so the cached
-    single-string canonicalizer serves them and the per-pair
-    urljoin+split path only runs for genuinely relative references."""
+    takes the reference verbatim when it carries a scheme and an
+    authority, so the cached single-string canonicalizer serves them and
+    the per-pair urljoin+split path only runs for the rest. An empty
+    authority (``http:///x``, ``http://``) is NOT verbatim: urljoin fills
+    it from a same-scheme base, so those take resolve_one too."""
     out = []
     for b, x in zip(base, link):
         if x is not None:
             xs = x.strip()
-            if xs.startswith(("http://", "https://")):
+            if (xs.startswith(("http://", "https://"))
+                    and xs.split("://", 1)[1][:1] not in ("", "/", "?", "#")):
                 out.append(_canonicalize_cached(xs))
                 continue
         out.append(resolve_one(b, x))

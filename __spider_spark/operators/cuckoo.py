@@ -318,6 +318,7 @@ class SeenCuckoo:
             cur = self.parts.setdefault(
                 p, CuckooFilter(self.buckets_per_part))
             cur.merge_pairs(tbl, _overflow_multiset(over))
+            self._check_load(p, cur)
         self.n_keys += n_new
 
     def rebuild(self, seen: DataFrame, key_col: str = "url_hash") -> None:
@@ -330,6 +331,8 @@ class SeenCuckoo:
                 _overflow_multiset(over))
             for p, (bts, over) in raw.items()
         }
+        for p, cf in self.parts.items():
+            self._check_load(p, cf)
         self.n_keys = seen.count()
 
     def udf(self, spark: SparkSession):

@@ -2,22 +2,26 @@
 
 ``row_number().over(Window.orderBy(...))`` funnels every row through ONE
 task — fine for a 4k-row wave, an Amdahl wall for a 10^7-row wave. This
-operator assigns the identical total order in parallel:
+operator assigns the identical total order in parallel by cutting the key
+space into buckets that are a pure function of the row:
+``(priority, url_hash >> (64 - b))``. The top ``b`` bits of the signed
+hash are monotone in the hash, so within one priority level every bucket
+is a contiguous range of the ``(priority, url_hash)`` key and the buckets
+never interleave, in either sort direction.
 
-  1. ``repartitionByRange`` on the order key (range sampling splits the key
-     space across P partitions);
-  2. per-partition counts → running-sum offsets (a P-row aggregate, not
-     rows), broadcast-joined back — NO driver collect: the offsets are a
-     subquery of the SAME plan, so the whole rank is one job and the
-     range exchange is computed once and reused (ReusedExchange), instead
-     of a separate counts action that re-materialized the upstream chain
-     every scheduling round;
-  3. parallel ``row_number`` windows partitioned by partition id, plus the
-     partition's offset.
+  1. per-bucket counts — one row per (priority level, bucket), not rows;
+  2. running-sum offsets over that table, ordered by ``order_cols`` with
+     ``min(url_hash)`` standing in for the bucket (any member orders a
+     disjoint range the same way); the window's single task is O(buckets),
+     never O(rows), and the table is broadcast-joined back;
+  3. parallel ``row_number`` windows partitioned by bucket, plus the
+     bucket's offset.
 
-The resulting rank depends only on the sort key (keys must be unique —
-ours end in url_hash), NOT on where range boundaries land, so the crawl
+No sampling pass decides where a row is ranked, so the rank depends only
+on the sort key (keys are unique — they end in url_hash) and the crawl
 order stays byte-identical at any parallelism (O3 invariant, SURVEY §2.6).
+Buckets come from hash bits, not hosts, so a hot host cannot pile up in
+one of them.
 """
 
 from __future__ import annotations
@@ -27,35 +31,33 @@ from pyspark.sql import functions as F
 
 
 def global_rank(df: DataFrame, order_cols: list[Column],
-                rank_col: str = "rank",
-                small_threshold: int | None = None) -> DataFrame:
-    """Attach a 1-based dense total-order rank over ``order_cols``.
-
-    ``small_threshold``: if given and df has fewer rows, fall back to the
-    single-partition window (cheaper below ~100k rows)."""
-    if small_threshold is not None and df.count() <= small_threshold:
-        return df.withColumn(
-            rank_col, F.row_number().over(Window.orderBy(*order_cols)))
-
+                rank_col: str = "rank") -> DataFrame:
+    """Attach a 1-based dense total-order rank over ``order_cols``, which
+    must order by ``priority`` then ``url_hash`` (either direction). Input
+    must carry (priority, url_hash); all columns pass through."""
+    # ~4 buckets per shuffle partition (per priority level) keeps the
+    # bucket windows balanced after the hash exchange
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    ranged = (
-        df.repartitionByRange(n_part, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    # running-sum offsets over the P-row per-partition counts; the window
-    # orders a tiny aggregate (one row per range partition), so its single
-    # task is O(P), never O(rows)
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    bits = min(max(n_part - 1, 1).bit_length() + 2, 32)
+    keyed = df.withColumn("__bucket",
+                          F.shiftright(F.col("url_hash"), 64 - bits))
+    w_off = Window.orderBy(*order_cols).rowsBetween(
+        Window.unboundedPreceding, -1)
     offsets = (
-        ranged.groupBy("__pid").agg(F.count("*").alias("__n"))
-        .withColumn("__offset",
-                    F.coalesce(F.sum("__n").over(w_off), F.lit(0)))
-        .select("__pid", "__offset")
+        keyed.groupBy("priority", "__bucket")
+        .agg(F.min("url_hash").alias("url_hash"), F.count("*").alias("__n"))
+        .select(F.col("priority").alias("__p"),
+                F.col("__bucket").alias("__b"),
+                F.coalesce(F.sum("__n").over(w_off), F.lit(0))
+                .alias("__offset"))
     )
-    w = Window.partitionBy("__pid").orderBy(*order_cols)
+    w = Window.partitionBy("priority", "__bucket").orderBy(*order_cols)
+    ranked = keyed.withColumn("__rn", F.row_number().over(w))
     return (
-        ranged.join(F.broadcast(offsets), "__pid")
-        .withColumn(rank_col,
-                    (F.row_number().over(w) + F.col("__offset")).cast("int"))
-        .drop("__pid", "__offset")
+        ranked.join(F.broadcast(offsets),
+                    F.col("priority").eqNullSafe(F.col("__p"))
+                    & (F.col("__bucket") == F.col("__b")))
+        .select(*df.columns,
+                (F.col("__rn") + F.col("__offset")).cast("int")
+                .alias(rank_col))
     )

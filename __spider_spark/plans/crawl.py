@@ -135,12 +135,6 @@ class CrawlConfig:
     # count and garbage — the same cadence trade as compact_every.
     frontier_mode: str = "cow"
     frontier_fold_every: int | None = None
-    # optional single-task-window fallback for tiny waves; measured SLOWER
-    # than the parallel rank at bench scale (the fallback's count() action
-    # re-materializes the clip chain: 22.0s vs 20.8s on the 3-round
-    # bench), so default off — the parallel path is also the 10^8-row-wave
-    # path. Ranks are byte-identical either way.
-    rank_small_threshold: int | None = None
     # retry pyramid (reference: YlSpiderMiddleware.py:80-109 retries a
     # transient failure 2-3 times before giving up): total tries per URL
     # including the first; a transient (503) failure re-enters the frontier
@@ -546,12 +540,11 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
         flagged_cached = True
 
     # 3. politeness clip → this round's wave, with a deterministic total
-    #    fetch order (O3 invariant). The clipped wave is persisted across
-    #    the rank: global_rank's repartitionByRange SAMPLES its child to
-    #    pick range boundaries, so an unpersisted clip chain (two windows
-    #    + the Bloom-routed anti-join, Python UDF included on Bloom
-    #    rounds) executes TWICE per round — once for the sampling pass,
-    #    once for the real exchange (guide §2.4: remove recomputed
+    #    fetch order (O3 invariant). The clipped wave is persisted because
+    #    global_rank consumes it twice — the per-bucket counts and the
+    #    ranked rows — so an unpersisted clip chain (two windows + the
+    #    Bloom-routed anti-join, Python UDF included on Bloom rounds)
+    #    would execute TWICE per round (guide §2.4: remove recomputed
     #    subtrees). The wave is budget-bounded (≤ budget × hosts) by
     #    construction, so the cache is wave-sized, never frontier-sized;
     #    released right after the staged write materializes.
@@ -561,8 +554,7 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
     # whole wave through one task); identical ranks at any parallelism
     wave = global_rank(
         clipped, [F.col("priority").desc(), F.col("url_hash").asc()],
-        rank_col="fetch_order",
-        small_threshold=cfg.rank_small_threshold)
+        rank_col="fetch_order")
 
     # 4+5. simulated fetch: wave ⋈ pages (url_hash); missing page -> 404
     #      (the reference's sentinel response, YlSpiderMiddleware.py:186-195,

@@ -79,6 +79,19 @@ def test_cuckoo_partitioned_build_and_merge(spark):
     assert flagged.filter(~F.col("m")).count() == 0
 
 
+def test_cuckoo_load_warns_after_rebuild_and_merge(spark):
+    """The big-wave paths (rebuild from the seen table, merge of an
+    executor-built delta) make the load cliff loud, like update()."""
+    seen = spark.range(0, 100).select(
+        (F.col("id") * 2654435761).alias("url_hash"))
+    sc = SeenCuckoo(n_parts=2, buckets_per_part=8)  # 64 slots, 100 keys
+    with pytest.warns(RuntimeWarning, match="SeenCuckoo partition"):
+        sc.rebuild(seen)
+    sc = SeenCuckoo(n_parts=2, buckets_per_part=8)
+    with pytest.warns(RuntimeWarning, match="SeenCuckoo partition"):
+        sc.merge_raw(sc.delta_raw(seen), 100)
+
+
 def test_crawl_with_cuckoo_matches_bloom(spark):
     """seen_filter='cuckoo' commits byte-identical lakehouse tables to
     the Bloom run (routing differs; the anti-join decides), and an

@@ -1,9 +1,13 @@
-"""Politeness clip: ≤ budget per host, deterministic, salt-invariant (SURVEY §5.1)."""
+"""Politeness clip: ≤ budget per host, deterministic, salt-invariant (SURVEY §5.1);
+the wave's global fetch-order rank."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from __spider_spark.operators.order import global_rank
 from __spider_spark.operators.politeness import clip_wave
 from __spider_spark.operators.robots import allowed_one, parse_robots
 
@@ -84,3 +88,29 @@ def test_crawl_delay_budgets():
          "verys.test": "User-agent: *\nCrawl-delay: 120\n"},
         round_seconds=60)
     assert b == {"slow.test": 6, "verys.test": 1}
+
+
+@pytest.mark.parametrize("parts", [3, 16])
+def test_global_rank_matches_single_task_row_number(spark, parts):
+    """The parallel rank is the single-task row_number, row for row:
+    compared as an exact url_hash -> rank map (never by sorting on the
+    rank, which would hide duplicate or shifted ranks)."""
+    df = spark.range(10_000).select(
+        F.xxhash64("id").alias("url_hash"),  # negative and positive
+        (F.lit(1.0) / (1 + F.col("id") % 3)).alias("priority"),
+    ).cache()
+    order = [F.col("priority").desc(), F.col("url_hash").asc()]
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        ranked = global_rank(df, order, rank_col="r").select("url_hash", "r")
+        got = dict(ranked.collect())
+        plan = ranked._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    want = dict(df.select("url_hash", F.row_number().over(
+        Window.orderBy(*order))).collect())
+    df.unpersist()
+    assert min(want) < 0 < max(want)
+    assert got == want
+    assert "rangepartitioning" not in plan  # no sampled range exchange

@@ -69,7 +69,12 @@ def test_canonicalize_idempotent(url):
 def test_vectorized_matches_scalar(spark):
     from pyspark.sql import functions as F
 
-    from __spider_spark.functions.urls import canonicalize_url, with_url_keys
+    from __spider_spark.functions.urls import (
+        canonicalize_url,
+        resolve_link,
+        resolve_one,
+        with_url_keys,
+    )
 
     raws = [c[0] for c in CASES]
     df = spark.createDataFrame([(r,) for r in raws], "url string")
@@ -84,6 +89,18 @@ def test_vectorized_matches_scalar(spark):
         [("HTTP://A.com:80/x",), ("http://a.com/x",)], "url string")
     h = [r.url_hash for r in with_url_keys(df2).collect()]
     assert h[0] == h[1]
+    # resolve_link (absolute-href fast path included) == resolve_one,
+    # the scalar reference_sim resolves with
+    base = "http://h.test/p/q"
+    hrefs = ["http://a.test/x", "https://a.test:443/y", "http:///x",
+             "http://", "https:///a/b", "https://", "http://?q",
+             " http:///z ", "rel/r", "/abs", "//o.test/s", "#f", None]
+    df3 = spark.createDataFrame([(base, x) for x in hrefs],
+                                "base string, href string")
+    got = [r[0] for r in df3.select(
+        resolve_link(F.col("base"), F.col("href"))).collect()]
+    assert got == [resolve_one(base, x) for x in hrefs]
+    assert got[2:4] == ["http://h.test/x", "http://h.test/p/q"]
 
 
 def test_resolve_relative_links():
