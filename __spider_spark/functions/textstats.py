@@ -108,15 +108,20 @@ def quality_score(col: Column) -> Column:
     return quality_score_from(tokens(col))
 
 
-def lang_guess(col: Column) -> Column:
-    """n-gram-free language heuristic: CJK chars → zh; Spanish stopword hit
-    → es; else en. (A real pipeline plugs fasttext via mapInPandas; the
-    operator shape — pure column expr in the scan stage — is the point.)"""
+def lang_guess_from(col: Column, toks: Column) -> Column:
+    """n-gram-free language heuristic over the text and its tokens: CJK
+    chars → zh; Spanish stopword hit → es; else en. (A real pipeline plugs
+    fasttext via mapInPandas; the operator shape — pure column expr in the
+    scan stage — is the point.)"""
     has_cjk = col.rlike("[一-鿿]")
     has_es = F.arrays_overlap(
-        tokens(col), F.array(*[F.lit(w) for w in ("el", "la", "de", "que")])
+        toks, F.array(*[F.lit(w) for w in ("el", "la", "de", "que")])
     )
     return F.when(has_cjk, "zh").when(has_es, "es").otherwise("en")
+
+
+def lang_guess(col: Column) -> Column:
+    return lang_guess_from(col, tokens(col))
 
 
 def fingerprint(col: Column) -> Column:

@@ -226,11 +226,3 @@ def url_hash_col(col):
     """
     return F.xxhash64(col)
 
-
-def with_url_keys(df, url_col: str = "url"):
-    """Attach (url_canonical, host, url_hash) — the standard key triple."""
-    return (
-        df.withColumn("url_canonical", canonicalize_url(F.col(url_col)))
-        .withColumn("host", url_host(F.col("url_canonical")))
-        .withColumn("url_hash", url_hash_col(F.col("url_canonical")))
-    )

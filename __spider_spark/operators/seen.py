@@ -1,4 +1,4 @@
-"""URL-seen set: partitioned Bloom pre-filter + anti-join ground truth.
+"""URL-seen set: partitioned sketch pre-filter + anti-join ground truth.
 
 Reference analogue: Scrapy's RFPDupeFilter is *disabled* on every request
 (``dont_filter=True``, /root/reference/spiders/ctripSpider.py:225,
@@ -8,17 +8,22 @@ ylSpider06.py:278) and the durable seen-record is a Redis set sink
 
   candidates LEFT ANTI JOIN seen ON url_hash          -- exact, distributed
 
-with a **partitioned Bloom filter** broadcast to executors as a cheap
-pre-filter: rows whose key the Bloom rejects are *definitely unseen* and
-skip the join's shuffle; only "maybe seen" rows (true positives + FPR)
-enter the anti-join. No false negatives by construction (property-tested).
+with a **partitioned sketch** broadcast to executors as a cheap pre-filter:
+rows whose key the sketch rejects are *definitely unseen* and skip the
+join's shuffle; only "maybe seen" rows (true positives + FPR) enter the
+anti-join. No false negatives by construction (property-tested).
 
-Sizing at 10^10 URLs (SURVEY.md §7 hard part (c)): one monolithic bitmap
-does not fit a broadcast, so the filter is partitioned by
-``pmod(url_hash, P)``; each scheduling round only needs the partitions that
-its candidate hash-range touches, and the filter is REBUILT from the ``seen``
-table on restart rather than checkpointed (bitmaps are derived state).
-Within the sandbox all P partitions are built and broadcast together.
+:class:`PartitionedSketch` is the one core both seen filters share. One
+monolithic sketch does not fit a broadcast at 10^10 URLs (SURVEY.md §7
+hard part (c)), so keys are routed by ``pmod(url_hash, P)``: the driver
+routes with ``np.mod`` (non-negative for P > 0, like Spark's ``pmod``),
+executors build one sketch per partition in a single ``applyInPandas``
+pass, the driver adopts or folds each partition, and one routing
+``pandas_udf`` decodes only the partitions a batch touches. Sketches are
+derived state: REBUILT from the ``seen`` table on restart, never
+checkpointed. A sketch type plugs in with an empty-filter factory, a
+``frombytes`` decoder, a fold and, optionally, an after-insert hook —
+:class:`SeenBloom` below and ``operators.cuckoo.SeenCuckoo``.
 
 Bloom math: m bits for n keys at target FPR p -> m = -n ln p / (ln 2)^2,
 k = m/n ln 2 hash probes, double-hashing g_i = h1 + i*h2 from the single
@@ -27,6 +32,7 @@ xxhash64 key (Kirsch-Mitzenmacher), so no re-hashing of strings.
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -54,6 +60,15 @@ class Bloom:
         k = max(1, round(m / n_keys * math.log(2)))
         return cls(m, min(k, 16))
 
+    @classmethod
+    def frombytes(cls, n_bits: int, n_hashes: int, raw) -> "Bloom":
+        """Zero-copy view of :meth:`tobytes` output (writable only when
+        ``raw`` is)."""
+        return cls(n_bits, n_hashes, np.frombuffer(raw, dtype=np.uint64))
+
+    def tobytes(self) -> bytes:
+        return self.words.tobytes()
+
     def _probe(self, keys: np.ndarray) -> list[np.ndarray]:
         u = keys.astype(np.int64).view(np.uint64)
         h1 = u % np.uint64(self.m)
@@ -79,126 +94,122 @@ class Bloom:
         return Bloom(self.m, self.k, self.words | other.words)
 
 
-def build_partitioned_bloom(
-    seen: DataFrame,
-    n_parts: int = 16,
-    bits_per_part: int = 1 << 20,
-    n_hashes: int = 7,
-    key_col: str = "url_hash",
-) -> dict[int, bytes]:
-    """Distributed Bloom build: one bitmap per pmod(url_hash, P) partition,
-    built executor-side via applyInPandas, returned as {part: packed bytes}.
-    At 10^10 scale these bitmaps live in the lakehouse per partition and are
-    broadcast selectively; here they come back to the driver (P × m/8 bytes,
-    e.g. 16 × 128 KiB)."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = Bloom(bits_per_part, n_hashes)
-        b.add_many(pdf[key_col].to_numpy(dtype=np.int64))
-        part = int(pdf["__part"].iloc[0])
-        return pd.DataFrame({"part": [part], "bits": [b.words.tobytes()]})
-
-    rows = (
-        seen.select(key_col)
-        .withColumn("__part", F.pmod(F.col(key_col), F.lit(n_parts)))
-        .groupBy("__part")
-        .applyInPandas(build, schema="part int, bits binary")
-        .collect()
-    )
-    return {r["part"]: bytes(r["bits"]) for r in rows}
-
-
-def bloom_maybe_seen_udf(
-    spark: SparkSession,
-    parts: dict[int, bytes],
-    n_parts: int,
-    bits_per_part: int = 1 << 20,
-    n_hashes: int = 7,
-):
-    """Arrow-batched predicate: True = maybe seen (must go to anti-join),
-    False = definitely unseen (skips the join)."""
-    bc = spark.sparkContext.broadcast(parts)
-
-    @pandas_udf(BooleanType())
-    def maybe_seen(keys: pd.Series) -> pd.Series:
-        local = {
-            p: Bloom(bits_per_part, n_hashes,
-                     np.frombuffer(raw, dtype=np.uint64))
-            for p, raw in bc.value.items()
-        }
-        arr = keys.to_numpy(dtype=np.int64)
-        part = np.mod(arr, n_parts)
-        part = np.where(part < 0, part + n_parts, part)
-        out = np.zeros(len(arr), dtype=bool)
-        for p in np.unique(part):
-            b = local.get(int(p))
-            if b is None:
-                continue
-            idx = part == p
-            out[idx] = b.contains_many(arr[idx])
-        return pd.Series(out)
-
-    return maybe_seen
-
-
-class SeenBloom:
-    """Driver-maintained partitioned Bloom over the seen-set.
+class PartitionedSketch:
+    """Driver-maintained sketch over the seen-set, one per pmod(key, P)
+    partition.
 
     Incremental: each round's newly-seen keys (budget-bounded, already on
-    the driver for metrics) are folded in without touching the cluster;
-    on restart the filter is REBUILT from the seen table (bitmaps are
-    derived state — never checkpointed, SURVEY.md §7 hard part (c))."""
+    the driver for metrics) go through :meth:`update` without touching the
+    cluster; a big wave goes through :meth:`delta_raw` + :meth:`merge_raw`;
+    on restart :meth:`rebuild` builds it from the seen table.
 
-    def __init__(self, n_parts: int = 16, bits_per_part: int = 1 << 20,
-                 n_hashes: int = 7):
+    Subclasses pass ``empty`` (no-argument factory of an empty sketch) and
+    ``decode`` (``bytes -> sketch``), both picklable — executors receive
+    them, never ``self`` — and implement :meth:`_fold`. A sketch has
+    ``add_many``, ``contains_many`` and ``tobytes``."""
+
+    def __init__(self, n_parts: int, empty, decode):
         self.n_parts = n_parts
-        self.bits = bits_per_part
-        self.k = n_hashes
-        self.parts: dict[int, Bloom] = {}
+        self._empty = empty
+        self._decode = decode
+        self.parts: dict = {}
         self.n_keys = 0
 
-    def update(self, keys) -> None:
-        arr = np.asarray(list(keys), dtype=np.int64)
-        if len(arr) == 0:
-            return
+    def _fold(self, cur, delta):
+        """Return ``cur`` with every key of ``delta`` in it."""
+        raise NotImplementedError
+
+    def _inserted(self, p: int, sketch) -> None:
+        """Hook run after keys went into partition ``p``."""
+
+    def _route(self, keys) -> dict[int, np.ndarray]:
+        arr = np.asarray(keys, dtype=np.int64)
         part = np.mod(arr, self.n_parts)
-        part = np.where(part < 0, part + self.n_parts, part)
-        for p in np.unique(part):
-            b = self.parts.setdefault(int(p), Bloom(self.bits, self.k))
-            b.add_many(arr[part == p])
-        self.n_keys += len(arr)
+        return {int(p): arr[part == p] for p in np.unique(part)}
 
-    def delta_raw(self, newly_seen: DataFrame) -> dict[int, bytes]:
-        """Executor-built partition bitmaps for a round's newly-seen keys
-        (same surface as cuckoo.SeenCuckoo.delta_raw, so the crawl plan
-        dispatches on the configured filter without branching)."""
-        return build_partitioned_bloom(
-            newly_seen, self.n_parts, self.bits, self.k)
+    def update(self, keys) -> None:
+        for p, arr in self._route(keys).items():
+            sketch = self.parts.setdefault(p, self._empty())
+            sketch.add_many(arr)
+            self.n_keys += len(arr)
+            self._inserted(p, sketch)
 
-    def merge_raw(self, raw: dict[int, bytes], n_new: int) -> None:
-        """Fold executor-built partition bitmaps (the per-round delta) into
-        the driver state — bitwise OR, so merge order is irrelevant."""
-        for p, b in raw.items():
-            delta = Bloom(self.bits, self.k,
-                          np.frombuffer(b, dtype=np.uint64).copy())
+    def delta_raw(self, newly_seen: DataFrame,
+                  key_col: str = "url_hash") -> dict[int, tuple[int, bytes]]:
+        """Executor-built sketches of ``newly_seen``'s keys, one per
+        partition, returned as {part: (n_keys, payload bytes)} — at 10^10
+        scale these live in the lakehouse per partition; here they come
+        back to the driver (P × one sketch, e.g. 16 × 128 KiB)."""
+        empty = self._empty
+
+        def build(pdf: pd.DataFrame) -> pd.DataFrame:
+            keys = pdf[key_col].to_numpy(dtype=np.int64)
+            sketch = empty()
+            sketch.add_many(keys)
+            return pd.DataFrame({"part": [int(pdf["__part"].iloc[0])],
+                                 "n": [len(keys)],
+                                 "payload": [sketch.tobytes()]})
+
+        rows = (
+            newly_seen.select(key_col)
+            .withColumn("__part", F.pmod(F.col(key_col), F.lit(self.n_parts)))
+            .groupBy("__part")
+            .applyInPandas(build, schema="part int, n long, payload binary")
+            .collect()
+        )
+        return {r["part"]: (r["n"], bytes(r["payload"])) for r in rows}
+
+    def merge_raw(self, raw: dict[int, tuple[int, bytes]], n_new: int) -> None:
+        """Adopt each delta partition the driver lacks, fold the others."""
+        for p, (_, payload) in raw.items():
+            delta = self._decode(bytearray(payload))  # writable copy
             cur = self.parts.get(p)
-            self.parts[p] = delta if cur is None else cur.merge(delta)
+            self.parts[p] = delta if cur is None else self._fold(cur, delta)
+            self._inserted(p, self.parts[p])
         self.n_keys += n_new
 
     def rebuild(self, seen: DataFrame, key_col: str = "url_hash") -> None:
-        raw = build_partitioned_bloom(seen, self.n_parts, self.bits,
-                                      self.k, key_col)
-        self.parts = {
-            p: Bloom(self.bits, self.k,
-                     np.frombuffer(b, dtype=np.uint64).copy())
-            for p, b in raw.items()
-        }
-        self.n_keys = seen.count()
+        raw = self.delta_raw(seen, key_col)
+        self.parts = {}
+        self.n_keys = 0
+        self.merge_raw(raw, sum(n for n, _ in raw.values()))
 
     def udf(self, spark: SparkSession):
-        return bloom_maybe_seen_udf(
-            spark, {p: b.words.tobytes() for p, b in self.parts.items()},
-            self.n_parts, self.bits, self.k)
+        """Arrow-batched predicate: True = maybe seen (must go to the
+        anti-join), False = definitely unseen (skips the join)."""
+        bc = spark.sparkContext.broadcast(
+            {p: s.tobytes() for p, s in self.parts.items()})
+        n_parts, decode = self.n_parts, self._decode
+
+        @pandas_udf(BooleanType())
+        def maybe_seen(keys: pd.Series) -> pd.Series:
+            arr = keys.to_numpy(dtype=np.int64)
+            part = np.mod(arr, n_parts)
+            out = np.zeros(len(arr), dtype=bool)
+            payloads = bc.value
+            for p in np.unique(part):
+                raw = payloads.get(int(p))
+                if raw is not None:
+                    idx = part == p
+                    out[idx] = decode(raw).contains_many(arr[idx])
+            return pd.Series(out)
+
+        return maybe_seen
+
+
+class SeenBloom(PartitionedSketch):
+    """Partitioned Bloom filter over the seen-set; partitions fold by
+    bitwise OR, so merge order is irrelevant."""
+
+    def __init__(self, n_parts: int = 16, bits_per_part: int = 1 << 20,
+                 n_hashes: int = 7):
+        super().__init__(
+            n_parts,
+            functools.partial(Bloom, bits_per_part, n_hashes),
+            functools.partial(Bloom.frombytes, bits_per_part, n_hashes))
+
+    def _fold(self, cur: Bloom, delta: Bloom) -> Bloom:
+        return cur.merge(delta)
 
 
 def filter_unseen(
@@ -207,7 +218,7 @@ def filter_unseen(
     bloom_udf=None,
     key_col: str = "url_hash",
 ) -> DataFrame:
-    """candidates ∖ seen. Exactness comes from the anti-join; the Bloom
+    """candidates ∖ seen. Exactness comes from the anti-join; the sketch
     routes definitely-unseen rows around it (SURVEY.md §2.3 J6)."""
     if seen is None:
         return candidates

@@ -58,7 +58,7 @@ from ..operators.robots import (
     robots_gate,
     robots_rules_df,
 )
-from ..operators.seen import SeenBloom, filter_unseen
+from ..operators.seen import PartitionedSketch, SeenBloom, filter_unseen
 from ..sources.lakehouse import Lakehouse, StagedFragment
 from .detail import detail_index, fetch_details
 
@@ -433,7 +433,7 @@ def pages_index(pages: DataFrame) -> DataFrame:
 
 
 def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
-              cfg: CrawlConfig, bloom: "SeenBloom | object | None" = None,
+              cfg: CrawlConfig, bloom: PartitionedSketch | None = None,
               rules_df: DataFrame | None = None,
               budgets_df: DataFrame | None = None,
               flaky_df: DataFrame | None = None,
@@ -573,20 +573,25 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
     # every attempt is logged (503s included — the reference logs failed
     # tries too), so fetch_order stays gap-free within the round
     curation_names: list[str] = []
+    curation_toks = []
     curation_cols = []
     if cfg.curate:
         from ..functions.textstats import (
             fingerprint,
-            lang_guess,
-            quality_score,
-            token_count,
+            lang_guess_from,
+            quality_score_from,
+            token_count_from,
+            tokens,
         )
-        t = F.col("text")
+        # tokens projected once for all three token stats (see the note
+        # above textstats.token_count_from)
+        curation_toks = [tokens(F.col("page.text")).alias("__toks")]
+        t, toks = F.col("text"), F.col("__toks")
         curation_names = ["lang_guess", "quality", "n_tokens", "fingerprint"]
         curation_cols = [
-            lang_guess(t).alias("lang_guess"),
-            F.round(quality_score(t), 6).alias("quality"),
-            token_count(t).alias("n_tokens"),
+            lang_guess_from(t, toks).alias("lang_guess"),
+            F.round(quality_score_from(toks), 6).alias("quality"),
+            token_count_from(toks).alias("n_tokens"),
             fingerprint(t).alias("fingerprint"),
         ]
     # the round's wave artifact: ONE distributed pass does fetch join +
@@ -612,6 +617,7 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
         .select("*", status_expr.alias("status"))
         .select("*", extract_page(
             F.when(F.col("status") == 200, F.col("html"))).alias("page"))
+        .select("*", *curation_toks)
         .select(
             "url", "url_hash", "host",
             F.lit(k).alias("round"), "fetch_order", "status",

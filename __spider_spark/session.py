@@ -10,6 +10,7 @@ stamps, ctripSpider.py:158-159 — we pin UTC for reproducibility).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -24,16 +25,23 @@ def _package_zip() -> str:
     """Zip this package so executors can import it (the local analogue of
     ``spark-submit --py-files app.zip`` mandated by the north_rule; without
     it Python workers spawned outside the repo cwd fail with
-    ModuleNotFoundError)."""
+    ModuleNotFoundError). The zip is named by a hash of the sources, so two
+    checkouts sharing a temp dir never ship each other's code."""
     pkg_dir = Path(__file__).resolve().parent
-    out = Path(tempfile.gettempdir()) / "__spider_spark_pyfiles.zip"
-    srcs = sorted(p for p in pkg_dir.rglob("*.py") if "__pycache__" not in p.parts)
-    newest = max(p.stat().st_mtime for p in srcs)
-    if not out.exists() or out.stat().st_mtime < newest:
-        tmp = out.with_suffix(".zip.tmp")
+    srcs = [(str(Path(pkg_dir.name) / p.relative_to(pkg_dir)), p.read_bytes())
+            for p in sorted(pkg_dir.rglob("*.py"))
+            if "__pycache__" not in p.parts]
+    digest = hashlib.sha256()
+    for arc, data in srcs:
+        digest.update(f"{arc}\0{len(data)}\0".encode())
+        digest.update(data)
+    out = (Path(tempfile.gettempdir())
+           / f"__spider_spark_pyfiles-{digest.hexdigest()[:16]}.zip")
+    if not out.exists():
+        tmp = out.with_suffix(f".{os.getpid()}.tmp")
         with zipfile.ZipFile(tmp, "w") as z:
-            for p in srcs:
-                z.write(p, arcname=str(Path(pkg_dir.name) / p.relative_to(pkg_dir)))
+            for arc, data in srcs:
+                z.writestr(arc, data)
         os.replace(tmp, out)
     return str(out)
 

@@ -96,10 +96,13 @@ class Lakehouse:
         return json.loads(p.read_text())
 
     def versions(self) -> list[int]:
-        """All committed snapshot versions, ascending."""
+        """All committed snapshot versions, ascending. A manifest newer
+        than ``LATEST`` was never published (a crash between writing it
+        and replacing ``LATEST``) and is not a version."""
+        latest = self._latest_version()
         return sorted(
-            int(p.stem.lstrip("v"))
-            for p in (self.root / "_manifests").glob("v*.json")
+            v for p in (self.root / "_manifests").glob("v*.json")
+            if (v := int(p.stem.lstrip("v"))) <= latest
         )
 
     def latest_round(self) -> int:
@@ -287,31 +290,8 @@ class Lakehouse:
             # expire, so do nothing
             return {"manifests": 0, "data_dirs": 0, "bytes": 0}
         kept, expired = versions[-keep_last:], versions[:-keep_last]
-        now = time.time()
-        keep_dirs = {
-            self._entry_dir(e)
-            for v in kept
-            for dirs in self.snapshot(v)["tables"].values()
-            for e in dirs
-        }
-        reclaimed = {"manifests": 0, "data_dirs": 0, "bytes": 0}
-        for table_dir in self.root.iterdir():
-            if table_dir.name == "_manifests" or not table_dir.is_dir():
-                continue
-            for frag in table_dir.iterdir():
-                rel = str(frag.relative_to(self.root))
-                if rel in keep_dirs:
-                    continue
-                if min_age_seconds > 0:
-                    try:
-                        if now - frag.stat().st_mtime < min_age_seconds:
-                            continue
-                    except OSError:
-                        continue
-                reclaimed["bytes"] += sum(
-                    f.stat().st_size for f in frag.rglob("*") if f.is_file())
-                shutil.rmtree(frag, ignore_errors=True)
-                reclaimed["data_dirs"] += 1
+        reclaimed = {"manifests": 0,
+                     **self._reap_unreferenced(kept, min_age_seconds)}
         for v in expired:
             self._manifest_path(v).unlink(missing_ok=True)
             reclaimed["manifests"] += 1
@@ -330,11 +310,19 @@ class Lakehouse:
         (:func:`plans.crawl.run_crawl` calls it there). With zero committed
         manifests every dir is presumed in flight and nothing is touched.
         Returns {"data_dirs": n, "bytes": n} reclaimed."""
-        if not self.versions():
+        versions = self.versions()
+        if not versions:
             return {"data_dirs": 0, "bytes": 0}
+        return self._reap_unreferenced(versions, min_age_seconds)
+
+    def _reap_unreferenced(self, versions: list[int],
+                           min_age_seconds: float) -> dict:
+        """Delete every data dir no manifest in ``versions`` references,
+        sparing dirs younger than ``min_age_seconds``. Returns
+        {"data_dirs": n, "bytes": n} reclaimed."""
         referenced = {
             self._entry_dir(e)
-            for v in self.versions()
+            for v in versions
             for dirs in self.snapshot(v)["tables"].values()
             for e in dirs
         }

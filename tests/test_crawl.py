@@ -3,6 +3,7 @@ equivalence, lakehouse atomicity (SURVEY §5.2/.4)."""
 
 from __future__ import annotations
 
+import json
 import tempfile
 
 import pytest
@@ -158,6 +159,30 @@ def test_lakehouse_atomic_commit(spark):
     lake.destroy()
 
 
+def test_unpublished_manifest_is_not_a_version(spark):
+    """A crash after vN.json is written but before LATEST is replaced
+    leaves an unpublished manifest: versions() ends at the published one,
+    retention keeps the snapshot LATEST names, and the orphan sweep reaps
+    the unpublished manifest's data dir."""
+    lake = Lakehouse(tempfile.mkdtemp(prefix="lake_crash_"))
+    df = spark.range(5).select(F.col("id").alias("x"))
+    lake.commit(1, append={"t": df})
+    lake.commit(2, append={"t": df})
+    lost = lake._write_data(spark.range(99).select(F.col("id").alias("x")),
+                            "t")
+    manifest = lake.snapshot()
+    manifest["tables"]["t"].append(lost)
+    lake._manifest_path(3).write_text(json.dumps({**manifest, "round": 3}))
+    assert lake.versions() == [1, 2]
+    assert lake.remove_orphans()["data_dirs"] == 1
+    assert not (lake.root / lost).exists()
+    lake.expire_snapshots(1)
+    assert lake.versions() == [2]
+    assert lake.latest_round() == 2
+    assert lake.read(spark, "t").count() == 10
+    lake.destroy()
+
+
 def test_lakehouse_time_travel(spark, crawled):
     """Iceberg VERSION-AS-OF parity: every committed snapshot stays
     readable exactly as it was — across appends, replaces, and
@@ -263,6 +288,26 @@ def test_curate_stamps_match_and_order_unchanged(spark, sim):
     ).count()
     assert bad == 0
     lake.destroy()
+
+
+def test_curate_tokenizes_once(spark, monkeypatch):
+    """The curation stamps share ONE projected token split per page: the
+    optimized plan of the staged wave holds a single ``split(``."""
+    plans = []
+    stage = Lakehouse.stage
+
+    def recording_stage(self, df, table):
+        if table == "results":
+            plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return stage(self, df, table)
+
+    monkeypatch.setattr(Lakehouse, "stage", recording_stage)
+    lake = Lakehouse(tempfile.mkdtemp(prefix="lake_tok_"))
+    cfg = CrawlConfig(default_budget=3, use_bloom=False, curate=True)
+    run_crawl(spark, lake, generate_pages(spark, 60, 3),
+              make_seeds(spark, 60, 6, 3), cfg, 1)
+    lake.destroy()
+    assert [p.count("split(") for p in plans] == [1]
 
 
 def test_pagerank_blend_order_matches_sim(spark):

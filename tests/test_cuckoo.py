@@ -14,11 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from __spider_spark.operators.cuckoo import (
-    CuckooFilter,
-    SeenCuckoo,
-    build_partitioned_cuckoo,
-)
+from __spider_spark.operators.cuckoo import CuckooFilter, SeenCuckoo
 
 
 @given(st.lists(st.integers(min_value=-(2 ** 63), max_value=2 ** 63 - 1),
@@ -68,8 +64,8 @@ def test_cuckoo_delete_restores_unseen():
 def test_cuckoo_partitioned_build_and_merge(spark):
     df = spark.range(0, 20_000).select(
         (F.col("id") * 2654435761).alias("url_hash"))
-    raw = build_partitioned_cuckoo(df, n_parts=8, buckets_per_part=1 << 11)
     sc = SeenCuckoo(n_parts=8, buckets_per_part=1 << 11)
+    raw = sc.delta_raw(df)
     sc.merge_raw(raw, 20_000)
     keys = np.arange(0, 20_000, dtype=np.int64) * 2654435761
     for p, arr in sc._route(keys).items():

@@ -73,7 +73,7 @@ def test_vectorized_matches_scalar(spark):
         canonicalize_url,
         resolve_link,
         resolve_one,
-        with_url_keys,
+        url_hash_col,
     )
 
     raws = [c[0] for c in CASES]
@@ -81,13 +81,15 @@ def test_vectorized_matches_scalar(spark):
     got = [r[0] for r in
            df.select(canonicalize_url(F.col("url"))).collect()]
     assert got == [c[1] for c in CASES]
-    keyed = with_url_keys(df)
-    rows = keyed.select("url_canonical", "host", "url_hash").collect()
-    assert all(r.url_hash is not None for r in rows)
+
+    def keyed(d):
+        return d.select(
+            url_hash_col(canonicalize_url(F.col("url"))).alias("url_hash"))
+    assert all(r.url_hash is not None for r in keyed(df).collect())
     # same canonical url -> same hash regardless of raw form
     df2 = spark.createDataFrame(
         [("HTTP://A.com:80/x",), ("http://a.com/x",)], "url string")
-    h = [r.url_hash for r in with_url_keys(df2).collect()]
+    h = [r.url_hash for r in keyed(df2).collect()]
     assert h[0] == h[1]
     # resolve_link (absolute-href fast path included) == resolve_one,
     # the scalar reference_sim resolves with
