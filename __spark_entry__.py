@@ -27,11 +27,9 @@ from __spider_spark.functions.textstats import (  # noqa: E402
     ascii_ratio,
     fingerprint,
     hash60_sql,
-    lang_guess,
-    mean_token_len,
-    quality_score,
-    stopword_ratio,
-    token_count,
+    lang_guess_from,
+    token_count_from,
+    tokens,
 )
 from __spider_spark.functions.urls import (  # noqa: E402
     canonicalize_url,
@@ -366,9 +364,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return simhash(_t(spark, sf, "documents"), "text", "doc_id")
     q["q19_simhash"] = q19
 
-    # token/quality stats — tokens projected ONCE (the text-col builders
-    # inline the regex split per stat: the old 4-stat projection embedded
-    # 18 split() calls and interpreted HOF lambdas defeat codegen CSE —
+    # token/quality stats — tokens projected ONCE (a regex split inlined
+    # per stat embedded 18 split() calls in the 4-stat projection, and
+    # interpreted HOF lambdas defeat codegen CSE —
     # measured 3.7s -> 0.4s at sf1.0 with the single projection + spread;
     # values bit-identical, oracle-pinned)
     def q20(spark, sf):
@@ -376,8 +374,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             mean_token_len_from,
             quality_score_from,
             stopword_ratio_from,
-            token_count_from,
-            tokens,
         )
         from __spider_spark.operators.dedup import spread_small_input
         base = spread_small_input(_t(spark, sf, "documents")).select(
@@ -396,7 +392,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q21(spark, sf):
         return _t(spark, sf, "documents").select(
             "doc_id",
-            lang_guess(F.col("text")).alias("lang_guess"),
+            lang_guess_from(F.col("text"), tokens(F.col("text")))
+            .alias("lang_guess"),
             F.round(ascii_ratio(F.col("text")), 4).alias("ascii_ratio"),
         )
     q["q21_lang_quality"] = q21
@@ -618,7 +615,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pat = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
         return _t(spark, sf, "documents").select(
             "doc_id",
-            token_count(F.col("text")).alias("ws_tokens"),
+            token_count_from(tokens(F.col("text"))).alias("ws_tokens"),
             F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), 0))
             .alias("bpe_tokens"),
         )
@@ -738,11 +735,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q45(spark, sf):
         from pyspark.sql import Window
 
-        from __spider_spark.functions.textstats import (
-            stopword_ratio_from,
-            token_count_from,
-            tokens,
-        )
+        from __spider_spark.functions.textstats import stopword_ratio_from
         from __spider_spark.operators.curation import decontaminate
         clean = decontaminate(_t(spark, sf, "documents"),
                               (F.col("doc_id") % 19) == 0, k=5)

@@ -19,7 +19,12 @@ table can be constructed independently, not by running this code):
     space and strip; drop chunks that are then empty;
   * join surviving chunks with ``"\n"``.
 
-Both UDFs are Arrow-batched pandas UDFs (input_hint: no per-row Python UDFs).
+Link contract: ``links`` are the ``<a href>`` values (unescaped) in document
+order, duplicates kept, except ``rel="detail"`` anchors; the first of those
+is ``detail_href``, the key of the second-stage fetch (S6), not discovery.
+
+``extract_page_one`` is the one parser; ``extract_page`` is its Arrow-batched
+pandas UDF (no per-row Python UDFs), one boundary crossing per page.
 """
 
 from __future__ import annotations
@@ -35,91 +40,9 @@ from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 _WS_RE = re.compile(r"\s+")
 
 
-class _TextExtractor(HTMLParser):
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.chunks: list[str] = []
-        self._in_body = False
-        self._skip_depth = 0
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag == "body":
-            self._in_body = True
-        elif tag in ("script", "style"):
-            self._skip_depth += 1
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag == "body":
-            self._in_body = False
-        elif tag in ("script", "style") and self._skip_depth > 0:
-            self._skip_depth -= 1
-
-    def handle_data(self, data: str) -> None:
-        if self._in_body and self._skip_depth == 0:
-            s = _WS_RE.sub(" ", data).strip()
-            if s:
-                self.chunks.append(s)
-
-
-class _LinkExtractor(HTMLParser):
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.links: list[str] = []
-        # first rel="detail" anchor: the content-derived second-stage key
-        # (S6); navigation, not frontier discovery — kept OUT of links
-        self.detail_href: str | None = None
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag == "a":
-            d = dict(attrs)
-            href = d.get("href")
-            if not href:
-                return
-            if d.get("rel") == "detail":
-                if self.detail_href is None:
-                    self.detail_href = unescape(href)
-            else:
-                self.links.append(unescape(href))
-
-
-def extract_text_one(html: bytes | None) -> str | None:
-    """Pure text extraction from html bytes (utf-8, errors replaced)."""
-    if html is None:
-        return None
-    p = _TextExtractor()
-    p.feed(html.decode("utf-8", errors="replace"))
-    p.close()
-    return "\n".join(p.chunks)
-
-
-def extract_links_one(html: bytes | None) -> list[str]:
-    """Frontier hrefs: all <a href> values in document order, duplicates
-    preserved, EXCLUDING rel=\"detail\" navigation anchors (those feed the
-    keyed second-stage fetch, not discovery)."""
-    if html is None:
-        return []
-    p = _LinkExtractor()
-    p.feed(html.decode("utf-8", errors="replace"))
-    p.close()
-    return p.links
-
-
-@pandas_udf(StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    """Vectorized html→text (Arrow-batched; pure per element)."""
-    return html.map(extract_text_one, na_action="ignore")
-
-
-@pandas_udf(ArrayType(StringType()))
-def extract_links(html: pd.Series) -> pd.Series:
-    """Vectorized html→outlinks (Arrow-batched; pure per element)."""
-    return html.map(extract_links_one, na_action="ignore")
-
-
 class _PageExtractor(HTMLParser):
-    """One-pass text + link extraction (same contracts as the two
-    single-purpose extractors; fused so the crawl hot path tokenizes each
-    page once instead of twice)."""
+    """One-pass text + link extraction: the page is tokenized once for
+    both contracts."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
@@ -160,6 +83,7 @@ class _PageExtractor(HTMLParser):
 def extract_page_one(
     html: bytes | None,
 ) -> tuple[str, list[str], str | None] | None:
+    """(text, links, detail_href) of one page, or None for no html."""
     if html is None:
         return None
     p = _PageExtractor()

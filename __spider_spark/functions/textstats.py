@@ -4,6 +4,11 @@ Everything here is JVM-side (pyspark.sql.functions only, whole-stage
 codegen-able): token counting, language-ID heuristic, quality scoring,
 document fingerprinting. No UDFs — these run in the scan stage at 100 TB.
 
+The token stats (``*_from``) have one form: they take the token array that
+:func:`tokens` projects, so a caller tokenizes each document once however
+many stats it derives. ``ascii_ratio`` and ``fingerprint`` read the text
+itself.
+
 Reference analogue: the crawler extracts strings and does ad-hoc per-row
 string math (/root/reference/spiders/ctripSpider.py:269-292); the engine
 gives the same family of derivations as reusable declarative expressions
@@ -46,13 +51,9 @@ TOKENS_SQL = (
 )
 
 
-# Each stat builder has a ``*_from`` twin taking an ALREADY-MATERIALIZED
-# token-array column. Consumers that need several stats per row should
-# project ``tokens(text)`` ONCE and use the ``_from`` forms: the text-col
-# conveniences below inline the regex split per use, and a multi-stat
-# projection (q20's four stats = 18 embedded splits) re-tokenizes the doc
-# per stat — codegen CSE does not reach across the interpreted
-# higher-order lambdas (measured 3.7s -> 1.9s at sf1.0 from this alone;
+# Why one tokenization: a regex split inlined per stat re-tokenizes the doc
+# per stat — codegen CSE does not reach across the interpreted higher-order
+# lambdas (q20's four stats: 3.7s -> 1.9s at sf1.0 from tokenizing once;
 # same discipline as dedup.shingles_from).
 
 
@@ -60,19 +61,11 @@ def token_count_from(toks: Column) -> Column:
     return F.size(toks)
 
 
-def token_count(col: Column) -> Column:
-    return token_count_from(tokens(col))
-
-
 def stopword_ratio_from(toks: Column) -> Column:
     """Fraction of tokens that are stopwords (0.0 for empty docs)."""
     n_stop = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
     return F.when(F.size(toks) == 0, F.lit(0.0)) \
             .otherwise(n_stop / F.size(toks))
-
-
-def stopword_ratio(col: Column) -> Column:
-    return stopword_ratio_from(tokens(col))
 
 
 def ascii_ratio(col: Column) -> Column:
@@ -88,10 +81,6 @@ def mean_token_len_from(toks: Column) -> Column:
             .otherwise(total.cast("double") / F.size(toks))
 
 
-def mean_token_len(col: Column) -> Column:
-    return mean_token_len_from(tokens(col))
-
-
 def quality_score_from(toks: Column) -> Column:
     """Heuristic [0,1] quality: enough tokens, sane word length, some
     stopwords (the classic Gopher-style gates, simplified + deterministic)."""
@@ -104,10 +93,6 @@ def quality_score_from(toks: Column) -> Column:
     return F.round((gate_len + gate_wl + gate_sw) / F.lit(3.0), 4)
 
 
-def quality_score(col: Column) -> Column:
-    return quality_score_from(tokens(col))
-
-
 def lang_guess_from(col: Column, toks: Column) -> Column:
     """n-gram-free language heuristic over the text and its tokens: CJK
     chars → zh; Spanish stopword hit → es; else en. (A real pipeline plugs
@@ -118,10 +103,6 @@ def lang_guess_from(col: Column, toks: Column) -> Column:
         toks, F.array(*[F.lit(w) for w in ("el", "la", "de", "que")])
     )
     return F.when(has_cjk, "zh").when(has_es, "es").otherwise("en")
-
-
-def lang_guess(col: Column) -> Column:
-    return lang_guess_from(col, tokens(col))
 
 
 def fingerprint(col: Column) -> Column:

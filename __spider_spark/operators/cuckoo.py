@@ -16,8 +16,9 @@ Layout: buckets of 4 × uint16 fingerprints; key → fingerprint f and two
 candidate buckets i1 = h(key), i2 = i1 XOR h(f) (partial-key cuckoo
 hashing — the alternate bucket is computable from (bucket, f) alone, so
 executor-built partition tables fold into the driver's slot by slot
-without the original keys). Inserts are vectorized multi-pass numpy (one
-key per bucket per pass); the rare leftovers take the classic kick loop
+without the original keys). Inserts and folds share one vectorized
+multi-pass numpy insert over (bucket, f) pairs (one pair per bucket per
+pass); the rare leftovers take the classic kick loop
 with a DETERMINISTIC eviction slot (fp & 3 — no RNG anywhere, repo
 discipline). A kick chain that exceeds max_kicks parks its orphan
 (bucket, f) pair in an overflow multiset, so the no-false-negative
@@ -89,9 +90,14 @@ class CuckooFilter:
 
     # -- ops --------------------------------------------------------------
     def add_many(self, keys: np.ndarray) -> None:
-        if len(keys) == 0:
-            return
-        f, i1, i2 = self._parts(np.asarray(keys))
+        if len(keys):
+            f, i1, _ = self._parts(np.asarray(keys))
+            self._insert(f, i1)
+
+    def _insert(self, f: np.ndarray, i1: np.ndarray) -> None:
+        """Insert (fingerprint, bucket) pairs; each pair may land in i1 or
+        its alternate bucket."""
+        i2 = self._alt(i1, f)
         pending = np.arange(len(f))
         progress = True
         while len(pending) and progress:
@@ -100,7 +106,7 @@ class CuckooFilter:
                 if not len(pending):
                     break
                 b = alt[pending]
-                # one key per bucket per pass: np.unique picks the first
+                # one pair per bucket per pass: np.unique picks the first
                 uniq, first = np.unique(b, return_index=True)
                 slots = self.buckets[uniq]
                 has_free = (slots == 0).any(axis=1)
@@ -181,11 +187,13 @@ class CuckooFilter:
         bucket is i ^ h(f), so no keys are needed (partial-key hashing)."""
         assert buckets.shape == self.buckets.shape
         rows, cols = np.nonzero(buckets)
-        for i, s in zip(rows, cols):
-            self._insert_kick(int(i), int(buckets[i, s]))
-        for (i, fp), n in overflow.items():
-            for _ in range(n):
-                self._insert_kick(i, fp)
+        over = np.array([(i, fp, n) for (i, fp), n in overflow.items()],
+                        dtype=np.int64).reshape(-1, 3)
+        self._insert(
+            np.concatenate([buckets[rows, cols],
+                            np.repeat(over[:, 1], over[:, 2])
+                            .astype(np.uint16)]),
+            np.concatenate([rows, np.repeat(over[:, 0], over[:, 2])]))
 
     def tobytes(self) -> bytes:
         """The bucket table, then the overflow multiset as sorted int64

@@ -344,11 +344,11 @@ def decontamination_report(
     contaminated by two benchmarks is charged to BOTH rows (the question
     each row answers is "what did benchmark B leak into the corpus", not
     a partition of the removals)."""
-    from ..functions.textstats import token_count
+    from ..functions.textstats import token_count_from, tokens
     flags = contamination(df, is_eval, text_col, id_col, k,
                           bench_col=bench_col)
     toks = df.select(F.col(id_col),
-                     token_count(F.col(text_col)).alias("__nt"))
+                     token_count_from(tokens(F.col(text_col))).alias("__nt"))
     return (
         flags.join(toks, id_col)
         .groupBy("bench")

@@ -1,4 +1,5 @@
-"""Link-graph analytics: PageRank for frontier prioritization.
+"""Link-graph analytics: PageRank for frontier prioritization, and
+connected components (batch and incremental) for duplicate clustering.
 
 The reference's crawl order is static (seed-file order × date,
 /root/reference/spiders/ctripSpider.py:136-154). A web-scale frontier
@@ -17,6 +18,10 @@ pre-partitioned by the 8-byte hash) + one groupBy(dst) sum. Checkpoint
 every ~5 iterations on a real cluster to cut lineage (here n_iter is
 small). Dangling nodes keep the (1-d) floor — the standard simplified
 formulation.
+
+Connected components have one algorithm, :func:`connected_components_star`;
+:func:`delta_connected_components` runs it over a contracted wave-sized
+graph to fold new edges into an existing assignment.
 """
 
 from __future__ import annotations
@@ -63,83 +68,6 @@ def pagerank(
     return ranks
 
 
-def connected_components(
-    edges: DataFrame,          # (src long, dst long), treated undirected
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components by min-label propagation: every node ends up
-    labeled with the SMALLEST node id reachable from it. Returns
-    (node, component).
-
-    This is the transitive closure the pair-based near-dedup policies
-    need: LSH/Jaccard emit PAIRS (a~b, b~c), and keeping "min of each
-    pair" can retain both a and c even though a~c transitively; grouping
-    by component collapses the whole duplicate cluster to one canonical
-    representative (component = min doc id in the cluster).
-
-    Each iteration: labels ⋈ symmetrized edges (keyed on the 8-byte id)
-    + one groupBy-min; the loop stops when an iteration changes no label
-    (one count per iteration reaches the driver — O(diameter) rounds,
-    and duplicate clusters are shallow). Lineage is truncated with
-    ``localCheckpoint`` every few rounds — without it Catalyst re-analyzes
-    a plan that grows per iteration and the driver, not the data, becomes
-    the bottleneck (the same discipline pagerank documents). For graphs
-    with adversarial diameter use :func:`connected_components_star`
-    (Kiveris et al. large-star/small-star), which squares the
-    convergence rate with the same per-round shuffle shape and computes
-    the identical relation (equivalence pytest-pinned).
-
-    Exact-fixpoint semantics (not a fixed-iteration cut), so an ANSI
-    recursive CTE computes the identical relation — oracle-checkable.
-    """
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint()
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        # candidate label for dst = min over incoming neighbors' labels
-        prop = (
-            sym.join(labels, sym.src == labels.node)
-            .select(F.col("dst").alias("node"),
-                    F.col("component").alias("cand"))
-            .groupBy("node")
-            .agg(F.min("cand").alias("cand"))
-        )
-        # localCheckpoint truncates lineage each round: the plan stays
-        # O(1) deep, so 20+ rounds don't drown the driver in re-analysis
-        updated = (
-            labels.join(prop, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("component"),
-                        F.coalesce(F.col("cand"), F.col("component")))
-                .alias("component"),
-            )
-            .localCheckpoint()
-        )
-        n_changed = (
-            updated.join(labels.withColumnRenamed("component", "__old"),
-                         "node")
-            .filter(F.col("component") != F.col("__old"))
-            .count()
-        )
-        labels = updated
-        if n_changed == 0:
-            return labels
-    # Silently returning a non-fixpoint would break the documented
-    # exact-fixpoint contract (and the recursive-CTE oracle equality) —
-    # found by the star-equivalence test on a 40-edge walk in round 5.
-    raise RuntimeError(
-        f"connected_components did not reach a fixpoint within "
-        f"max_iter={max_iter} rounds (graph diameter too large); raise "
-        f"max_iter or use connected_components_star (O(log²) rounds)")
-
-
 def connected_components_star(
     edges: DataFrame,          # (src long, dst long), treated undirected
     max_iter: int = 50,
@@ -147,13 +75,17 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components by the large-star/small-star alternation
     (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") — same (node, component = min reachable id) output as
-    :func:`connected_components`, but converging in O(log²ⁿ) rounds
-    worst-case (≈ 2·log₂ n observed on a path graph, pytest-asserted)
-    instead of O(diameter): the adversarial-diameter case the min-label
-    loop documents. Each round is two groupBy-min + join passes over the
-    edge relation, all keyed on the 8-byte node id — the same per-round
-    shuffle shape, just squared convergence.
+    Beyond"): every node ends up labeled with the SMALLEST node id
+    reachable from it. Returns (node, component).
+
+    Near-dedup emits PAIRS (a~b, b~c); keeping "min of each pair" can
+    retain both a and c, while grouping by component collapses the whole
+    duplicate cluster to one representative (its min doc id).
+
+    Converges in O(log²ⁿ) rounds worst-case (≈ 2·log₂ n observed on a
+    path graph, pytest-asserted) instead of the O(diameter) rounds of
+    min-label propagation. Each round is two groupBy-min + join passes
+    over the edge relation, all keyed on the 8-byte node id.
 
       * large-star: for each node u, every strictly-larger neighbor is
         re-pointed at min(Γ(u) ∪ {u}) — tall trees flatten.
@@ -164,7 +96,8 @@ def connected_components_star(
     anti-join counts per round — bounded driver actions, no row data
     collected); at the fixpoint every edge is (node, component-min).
     ``stats["rounds"]`` reports the round count when a dict is passed.
-    Isolated self-loops vanish (same as the label-prop operator)."""
+    Isolated self-loops vanish. At the fixpoint the relation equals the
+    one an ANSI recursive CTE computes — oracle-checkable (q23)."""
     e = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -194,7 +127,7 @@ def connected_components_star(
             .unionByName(j.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint()   # O(1)-deep plan per round, as label-prop
+            .localCheckpoint()   # O(1)-deep plan per round
         )
         rounds += 1
         changed = (

@@ -35,13 +35,12 @@ Scale notes (the 100 TB / 10^10-URL case):
 
 from __future__ import annotations
 
-import os
+import functools
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
 
 from ..functions.text import extract_page
 from ..functions.urls import (
@@ -70,20 +69,43 @@ PROFILE_ACC: list[tuple[str, float]] | None = None
 
 
 def _prof(label: str, t0: float) -> float:
-    """Opt-in stage timing (SPIDER_SPARK_PROFILE=1 prints; PROFILE_ACC
-    collects)."""
-    env_on = os.environ.get("SPIDER_SPARK_PROFILE") == "1"
-    if not env_on and PROFILE_ACC is None:
+    """Opt-in stage timing, collected into PROFILE_ACC when it is set."""
+    if PROFILE_ACC is None:
         return t0
     t = time.perf_counter()
-    if PROFILE_ACC is not None:
-        PROFILE_ACC.append((label, t - t0))
-    if env_on:
-        print(f"    [crawl-prof] {label}: {t - t0:.2f}s", flush=True)
+    PROFILE_ACC.append((label, t - t0))
     return t
+
 
 FRONTIER_COLS = ["url", "url_hash", "host", "priority", "round",
                  "parent_url", "seed_index", "attempts"]
+# a fetched row's outcome; every one but retried_503 is terminal and marks
+# the URL seen
+OUTCOMES = ("fetched", "fetched_404", "retried_503", "failed_gave_up")
+
+
+def _outcome(max_attempts: int) -> Column:
+    """The outcome of a fetch from its status and the tries it used."""
+    return (F.when(F.col("status") == 200, "fetched")
+            .when(F.col("status") == 404, "fetched_404")
+            .when(F.col("attempts") + 1 >= max_attempts, "failed_gave_up")
+            .otherwise("retried_503"))
+
+
+def _entries(df: DataFrame, priority, round_k: int, attempts=0,
+             parent_url=None, seed_index=None) -> DataFrame:
+    """Frontier rows (FRONTIER_COLS) over ``df``'s url, url_hash and host;
+    each other field is a Column or a constant (None: a typed null)."""
+    def as_col(v, dtype: str) -> Column:
+        return v if isinstance(v, Column) else F.lit(v).cast(dtype)
+
+    return df.select(
+        "url", "url_hash", "host",
+        as_col(priority, "double").alias("priority"),
+        F.lit(round_k).alias("round"),
+        as_col(parent_url, "string").alias("parent_url"),
+        as_col(seed_index, "long").alias("seed_index"),
+        as_col(attempts, "int").alias("attempts"))
 
 
 @dataclass
@@ -366,15 +388,9 @@ def init_crawl(spark: SparkSession, lake: Lakehouse, seeds: DataFrame,
     # *post-alias* canonical URL (P2/J3 graft form)
     frontier = apply_host_aliases(
         frontier, aliases_df(spark, cfg.aliases))
-    frontier = (
-        frontier
-        .withColumn("url_hash", url_hash_col(F.col("url")))
-        .withColumn("priority", F.lit(1.0))
-        .withColumn("round", F.lit(1))
-        .withColumn("parent_url", F.lit(None).cast("string"))
-        .withColumn("attempts", F.lit(0))
-        .select(*FRONTIER_COLS)
-    )
+    frontier = _entries(
+        frontier.withColumn("url_hash", url_hash_col(F.col("url"))),
+        1.0, 1, seed_index=F.col("seed_index"))
     lake.commit(0, replace={"frontier": _dedup_frontier(frontier)})
 
 
@@ -399,9 +415,7 @@ def _budgets_df(spark: SparkSession, cfg: CrawlConfig,
             .withColumn("__prec", F.lit(1)))
     if not parts:
         return None
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
+    merged = functools.reduce(DataFrame.unionByName, parts)
     w = Window.partitionBy("host").orderBy(F.col("__prec").desc())
     return (
         merged.withColumn("__rn", F.row_number().over(w))
@@ -474,17 +488,9 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
         if n_due:
             seen = seen.join(due.select("url_hash"), "url_hash",
                              "left_anti")
-            refreshed = (
-                due
-                .withColumn("host", url_host(F.col("url")))
-                .withColumn("priority",
-                            F.lit(float(cfg.recrawl_priority)))
-                .withColumn("round", F.lit(k))
-                .withColumn("parent_url", F.lit(None).cast("string"))
-                .withColumn("seed_index", F.lit(None).cast("long"))
-                .withColumn("attempts", F.lit(0))
-                .select(*FRONTIER_COLS)
-            )
+            refreshed = _entries(
+                due.withColumn("host", url_host(F.col("url"))),
+                float(cfg.recrawl_priority), k)
             # the refresh row REPLACES any stale frontier entry for the
             # url (mor keeps fetched entries physically until a fold;
             # letting the old row win the dedup would fork lineage and
@@ -514,30 +520,27 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
             and bloom.n_keys >= cfg.bloom_min_seen):
         bloom_udf = bloom.udf(spark)
     candidates = filter_unseen(frontier, seen, bloom_udf)
-    # (an observed blocked-count on the flagged cache was tried in r7 and
-    # reverted: CollectMetrics under .cache() yields a schemaless metrics
-    # row when the cache materializes through a non-SQL sub-job — the
-    # blocked count stays a branch of the metrics job instead)
+    # the blocked count is a branch of the metrics job, not an observation
+    # on the flagged cache: CollectMetrics under .cache() yields a
+    # schemaless metrics row when the cache materializes through a non-SQL
+    # sub-job
     from pyspark.sql import Observation
     if rules_df is None:
         # no robots dim: every candidate is allowed and ``blocked`` is
-        # empty BY CONSTRUCTION. The generic path can't exploit that —
-        # the lit(True) gate column loses its literal-ness through the
-        # cache boundary, so every blocked branch (seen union, metrics
-        # aggregate, bloom collect input) stayed a real scan+filter.
-        # Specialize: no gate column, no cache (the clipped-wave persist
-        # downstream is the only multi-consumer materialization point),
-        # blocked = None prunes every downstream branch at plan-build
-        # time.
-        flagged = candidates
-        allowed = candidates
+        # empty BY CONSTRUCTION. A lit(True) gate column would lose its
+        # literal-ness through the cache boundary and leave every blocked
+        # branch (seen union, metrics aggregate, bloom collect input) a
+        # real scan+filter; so no gate column and no cache (the
+        # clipped-wave persist downstream is the only multi-consumer
+        # materialization point), and blocked = None prunes every
+        # downstream branch at plan-build time. The flagged cache exists
+        # exactly when blocked is not None.
+        flagged = allowed = candidates
         blocked = None
-        flagged_cached = False
     else:
         flagged = robots_gate(candidates, rules_df).cache()
         allowed = flagged.filter(F.col("__allowed")).drop("__allowed")
         blocked = flagged.filter(~F.col("__allowed")).drop("__allowed")
-        flagged_cached = True
 
     # 3. politeness clip → this round's wave, with a deterministic total
     #    fetch order (O3 invariant). The clipped wave is persisted because
@@ -599,9 +602,9 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
     # downstream consumer is a column-pruned read of that parquet, and the
     # ``results`` table publishes the same files through a manifest
     # projection (StagedFragment.cols) — the page text crosses memory once
-    # per round instead of three times (wide in-memory cache materialize +
-    # cache re-read + results rewrite in the commit). This is also the
-    # 100 TB shape: a full wave's payloads never sit in executor cache.
+    # per round: no wide in-memory cache, no cache re-read, no results
+    # rewrite in the commit. This is also the 100 TB shape: a full wave's
+    # payloads never sit in executor cache.
     # err_html (raw body kept for the quarantine table) can only be
     # non-null when a transient-failure (503) serves a real body — a 404
     # has no body at all — so without a flaky dim the column is provably
@@ -637,56 +640,42 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
     )
     results_cols = ("url", "url_hash", "host", "round", "fetch_order",
                     "status", "text", *curation_names, "lineage")
-    # wave outcome counts ride the staged write as observed metrics
+    # the wave's outcome counts ride the staged write as observed metrics
     # (CollectMetrics — a free driver-side accumulator on the job that
-    # runs anyway), so the metrics job below no longer re-reads the
-    # fragment to group by outcome. Blocked rides the flagged cache's
-    # observation; only the discovered count needs its own aggregate.
-    gave_up_now = F.col("attempts") + 1 >= F.lit(cfg.max_attempts)
+    # runs anyway), so no job re-reads the fragment to group by outcome.
+    # The outcome is never written: the observation counts it and the
+    # fragment's read projects it.
+    outcome = _outcome(cfg.max_attempts)
     obs = Observation()
     wide = wide.observe(
-        obs,
-        F.count(F.when(F.col("status") == 200, 1)).alias("n_ok"),
-        F.count(F.when(F.col("status") == 404, 1)).alias("n_404"),
-        F.count(F.when((F.col("status") == 503) & gave_up_now, 1))
-        .alias("n_gave_up"),
-        F.count(F.when((F.col("status") == 503) & ~gave_up_now, 1))
-        .alias("n_retried"),
-    )
+        obs, *[F.count(F.when(outcome == o, 1)).alias(o) for o in OUTCOMES])
     t0 = _prof("plan building", t0)
     frag = lake.stage(wide, "results")
     clipped.unpersist()
-    wave_counts = obs.get
+    counts = {o: int(c) for o, c in obs.get.items()}
     t0 = _prof("stage wave artifact (fetch, extract, write)", t0)
-    extracted = lake.read_fragment(spark, frag)
-    if not keep_err_html:
-        extracted = extracted.withColumn(
-            "err_html", F.lit(None).cast("binary"))
+    extracted = lake.read_fragment(spark, frag).select(
+        "*", outcome.alias("outcome"),
+        *([] if keep_err_html
+          else [F.lit(None).cast("binary").alias("err_html")]))
 
     # 5b. retry pyramid: a transient failure with tries left re-enters the
     #     frontier with decayed priority and attempts+1 (never marked seen);
     #     one that exhausted max_attempts is quarantined below.
-    gave_up_cond = F.col("attempts") + 1 >= F.lit(cfg.max_attempts)
-    retries = (
-        extracted.filter((F.col("status") == 503) & ~gave_up_cond)
-        .select(
-            "url", "url_hash", "host",
-            (F.col("priority") * F.lit(cfg.retry_decay)).alias("priority"),
-            F.lit(k + 1).alias("round"),
-            F.col("lineage.parent_url").alias("parent_url"),
-            F.col("lineage.seed_index").alias("seed_index"),
-            (F.col("attempts") + 1).alias("attempts"),
-        )
-    )
+    retries = _entries(
+        extracted.filter(F.col("outcome") == "retried_503"),
+        F.col("priority") * F.lit(cfg.retry_decay), k + 1,
+        attempts=F.col("attempts") + 1,
+        parent_url=F.col("lineage.parent_url"),
+        seed_index=F.col("lineage.seed_index"))
 
     # 5c. error/artifact quarantine (reference persists failed raw bodies,
     #     ctripSpider.py:318-332, ylSpider06.py:422-435): permanent 404s and
     #     gave-up transients land in the ``errors`` table WITH the raw html
     #     payload, in the same atomic commit.
     errors = (
-        extracted.filter(
-            (F.col("status") == 404)
-            | ((F.col("status") == 503) & gave_up_cond))
+        extracted.filter(F.col("outcome").isin("fetched_404",
+                                               "failed_gave_up"))
         .select(
             "url", "url_hash", "host", F.lit(k).alias("round"),
             "status",
@@ -721,41 +710,19 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
     # cached: discovery (link resolve + canonicalize + hash, the round's
     # other Arrow-UDF pass) feeds the distinct-discovered metric, the
     # frontier merge, and (blend mode) the edges append — without the
-    # cache each consumer re-ran the Python resolve/hash work.
-    # (one select, not a withColumn chain: each withColumn is a separate
-    # py4j round-trip + analysis pass, and run_round builds this plan
-    # every scheduling round — driver plan-building is a measured phase)
-    discovered = (
-        discovered
-        .select(
-            "url",
-            url_hash_col(F.col("url")).alias("url_hash"),
-            "host",
-            (F.col("parent_priority") * F.lit(cfg.priority_decay))
-            .alias("priority"),
-            F.lit(k + 1).alias("round"),
-            "parent_url", "seed_index",
-            F.lit(0).alias("attempts"),
-        )
-        .select(*FRONTIER_COLS)
-        .cache()
-    )
+    # cache each consumer would re-run the Python resolve/hash work.
+    discovered = _entries(
+        discovered.select("*", url_hash_col(F.col("url")).alias("url_hash")),
+        F.col("parent_priority") * F.lit(cfg.priority_decay), k + 1,
+        parent_url=F.col("parent_url"),
+        seed_index=F.col("seed_index")).cache()
 
     # 7. state transition: terminal outcomes (fetched / 404 / gave-up /
     #    robots-blocked) become seen; retries do NOT. frontier' =
     #    ((frontier ∪ discovered) ∖ waved ∖ seen) ∪ retries, deduped with
     #    attempts ranked first so rediscovery can't reset a retry counter.
-    newly_seen = (
-        extracted.filter(F.col("status") != 503)
-        .select(
-            "url_hash", "url",
-            F.when(F.col("status") == 200, "fetched")
-             .otherwise("fetched_404").alias("outcome"))
-        .unionByName(
-            extracted.filter((F.col("status") == 503) & gave_up_cond)
-            .select("url_hash", "url",
-                    F.lit("failed_gave_up").alias("outcome")))
-    )
+    newly_seen = (extracted.filter(F.col("outcome") != "retried_503")
+                  .select("url_hash", "url", "outcome"))
     if blocked is not None:
         newly_seen = newly_seen.unionByName(
             blocked.select("url_hash", "url")
@@ -776,24 +743,17 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
     #    counts and P small Bloom bitmaps ever reach the driver, so waves of
     #    any size scale (never collect() wave rows).
     t0 = _prof("plan building", t0)
-    # ONE counts-only metrics job: outcome counts + retried + distinct-
-    # discovered as a union of aggregates over the staged wave artifact +
-    # cached discovery (3 separate actions previously -> 2 extra
-    # job-scheduling round-trips per round). Counts stay counts — an
-    # earlier form piggybacked a sliced collect_list of newly-seen hashes
-    # here, which bounded the DRIVER payload but not the aggregation
-    # buffers: every hash of the round funneled into <=4 reduce tasks (one
-    # per outcome group) before truncation was detectable. The Bloom fold
-    # below instead gates on the count this job already produced and runs
-    # its own bounded collect.
-    # the discovery cache (link resolve + canonicalize + hash — the
-    # round's second Arrow-UDF pass) materializes inside the metrics job
-    # below. Wave outcome counts arrived free with the staged write
-    # (observed metrics above), so this job only aggregates the two
-    # relations the wave artifact can't see: robots-blocked rows (cached
-    # flagged) and the distinct-discovered count (must be exact — the
-    # metrics table is simulator-pinned — and distinct aggregates are
-    # not allowed in observations).
+    # ONE counts-only metrics job, which also materializes the discovery
+    # cache (link resolve + canonicalize + hash — the round's second
+    # Arrow-UDF pass). The wave's outcome counts arrived free with the
+    # staged write (observed metrics above), so this job aggregates only
+    # the two relations the wave artifact can't see: robots-blocked rows
+    # (cached flagged) and the distinct-discovered count (must be exact —
+    # the metrics table is simulator-pinned — and distinct aggregates are
+    # not allowed in observations). It collects counts only, never keys:
+    # a collect_list of newly-seen hashes here would funnel every hash of
+    # the round into one reduce task per outcome group; the sketch fold
+    # below gates on these counts and collects its keys separately.
     metrics_agg = (discovered.agg(F.count_distinct("url_hash").alias("n"))
                    .select(F.lit("discovered").alias("outcome"), "n"))
     if blocked is not None:
@@ -803,18 +763,18 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
     metric_rows = metrics_agg.collect()
     outcome_counts = {r["outcome"]: r["n"] for r in metric_rows}
     t0 = _prof("metrics counts (incl discovery materialize)", t0)
-    n_ok = int(wave_counts["n_ok"])
-    n_404 = int(wave_counts["n_404"])
-    n_gave_up = int(wave_counts["n_gave_up"])
+    n_ok = counts["fetched"]
     n_blocked = int(outcome_counts.get("robots_blocked", 0))
-    n_retried = int(wave_counts["n_retried"])
     n_discovered = int(outcome_counts.get("discovered", 0))
     metrics_row = {
-        "round": k, "wave": n_ok + n_404 + n_gave_up + n_retried,
-        "fetched_200": n_ok, "fetched_404": n_404,
-        "retried_503": n_retried, "failed_gave_up": n_gave_up,
+        "round": k, "wave": sum(counts.values()),
+        "fetched_200": n_ok, "fetched_404": counts["fetched_404"],
+        "retried_503": counts["retried_503"],
+        "failed_gave_up": counts["failed_gave_up"],
         "robots_blocked": n_blocked, "discovered": n_discovered,
     }
+    # terminal outcomes plus robots-blocked rows: the keys marked seen
+    n_new_seen = metrics_row["wave"] - counts["retried_503"] + n_blocked
     import pyarrow as pa
     metrics = pa.table({k: [v] for k, v in metrics_row.items()})
 
@@ -841,7 +801,7 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
                              .limit(1).count() > 0)))
         if not recrawl_pending and not (
                 cfg.budget_carry and flagged.limit(1).count() > 0):
-            if flagged_cached:
+            if blocked is not None:
                 flagged.unpersist()
             discovered.unpersist()
             lake.discard_staged(frag)
@@ -849,17 +809,14 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
 
     # results publish = manifest projection of the already-written wave
     # artifact (zero extra write; see the staged-write comment above).
-    # In the common bounded-wave case the driver Bloom's newly-seen keys
+    # In the common bounded-wave case the driver sketch's newly-seen keys
     # ride the seen WRITE as an observed collect_list — no dedicated
     # collect job at all. The count gate runs BEFORE any job: every term
-    # of n_new_seen came from observations on jobs already finished, so
-    # the collect buffer is provably ≤ bloom_inline_max keys when the
-    # write launches (a strictly earlier gate than the old post-metrics
-    # collect). The observed copy feeds ONLY the seen append; all other
-    # consumers (removal_keys, the metrics that were here before) keep
-    # the unobserved plan, so the observation fires exactly once, on the
-    # committed write.
-    n_new_seen = n_ok + n_404 + n_gave_up + n_blocked
+    # of n_new_seen came from jobs already finished, so the collect
+    # buffer is provably ≤ bloom_inline_max keys when the write launches.
+    # The observed copy feeds ONLY the seen append; every other consumer
+    # (removal_keys, the big-wave sketch build) keeps the unobserved
+    # plan, so the observation fires exactly once, on the committed write.
     obs_seen = None
     seen_append = newly_seen
     if (bloom is not None and 0 < n_new_seen
@@ -871,9 +828,9 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
                "results": StagedFragment(frag.path, results_cols),
                "errors": errors, "metrics": metrics}
     # the metrics counts are already on the driver — drop writes that are
-    # provably empty (each one is a full Spark job + py4j round-trip; an
-    # error-free round was paying for an empty `errors` fragment)
-    if n_404 + n_gave_up == 0:
+    # provably empty (each one is a full Spark job + py4j round-trip, and
+    # an error-free round has no `errors` rows)
+    if counts["fetched_404"] + counts["failed_gave_up"] == 0:
         del appends["errors"]
     discard_after_round = False
     if metrics_row["wave"] == 0:          # blocked-only round
@@ -882,7 +839,7 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
         # (removal_keys) AND by the post-commit Bloom fold (newly_seen):
         # discard it only once the round is fully done with it
         discard_after_round = True
-    if n_ok + n_404 + n_gave_up + n_blocked == 0:  # all-retry round
+    if n_new_seen == 0:  # all-retry round
         del appends["seen"]
     if cfg.curate_repetition and n_ok > 0:
         from ..operators.curation import repetition_stats
@@ -947,14 +904,12 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
         )
         appends["edges"] = round_edges
         if k % cfg.blend_pagerank_every == 0:
-            # PageRank blend applied INSIDE this round's atomic snapshot
-            # (previously a second commit after the round's — a crash in
-            # that window resumed with an unblended frontier, silently
-            # diverging from an uninterrupted run's crawl order). The
-            # blended frontier and the round's appends now publish in ONE
-            # snapshot, so resume-determinism holds through blend rounds.
+            # PageRank blend applied INSIDE this round's atomic snapshot:
+            # the blended frontier and the round's appends publish in ONE
+            # snapshot, so a crash can never resume with an unblended
+            # frontier and resume-determinism holds through blend rounds.
             # The simulator mirrors the same arithmetic (10-dp rounding
-            # pins parallel-sum noise), so order equivalence still holds.
+            # pins parallel-sum noise), so order equivalence holds.
             prior_edges = lake.read(spark, "edges")
             if prior_edges is not None or n_discovered > 0:
                 all_edges = (round_edges if prior_edges is None
@@ -975,7 +930,7 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
     else:
         replace = {}
         delta_parts = []
-        if n_discovered + n_retried > 0:
+        if n_discovered + counts["retried_503"] > 0:
             delta_parts.append(discovered.unionByName(retries))
         if refreshed is not None:
             # re-injected refresh rows must be durable in the mor delta
@@ -988,10 +943,8 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
             # (cross-round resolution happens in the read view). An
             # all-terminal round appends nothing: the frontier shrinks
             # logically via the read-side seen anti-join alone.
-            d = delta_parts[0]
-            for extra in delta_parts[1:]:
-                d = d.unionByName(extra)
-            appends["frontier"] = _dedup_frontier(d)
+            appends["frontier"] = _dedup_frontier(
+                functools.reduce(DataFrame.unionByName, delta_parts))
     if replace_components is not None:
         # no-dup rounds skip the rewrite entirely (the table is only as
         # stale as the last round that actually found a pair)
@@ -1025,7 +978,7 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
             # Bloom and cuckoo share the crawl plan
             bloom.merge_raw(bloom.delta_raw(newly_seen), n_new_seen)
             t0 = _prof("bloom delta build+merge", t0)
-    if flagged_cached:
+    if blocked is not None:
         flagged.unpersist()
     discovered.unpersist()
     if discard_after_round:

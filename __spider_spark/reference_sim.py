@@ -23,11 +23,7 @@ from urllib.parse import urlsplit
 
 from .functions.detail import cheapest_cabin_one, extract_detail_one
 from .functions.hashing import spark_xxhash64_str
-from .functions.text import (
-    extract_links_one,
-    extract_page_one,
-    extract_text_one,
-)
+from .functions.text import extract_page_one
 from .functions.urls import canonicalize_one, host_of_one, resolve_one
 from .operators.aliases import alias_one
 from .operators.robots import (
@@ -208,12 +204,12 @@ def simulate_crawl(
             statuses[e["url"]] = 200
             n_ok += 1
             terminal.add(e["url_hash"])
-            texts[e["url"]] = extract_text_one(html)
+            text, links, href = extract_page_one(html)
+            texts[e["url"]] = text
             if detail_pages is not None:
                 # content-derived key (same rule as plans/detail.py):
                 # rel="detail" href resolved+canonicalized; fallback =
                 # /detail suffix inserted before any query string
-                href = extract_page_one(html)[2]
                 du = resolve_one(e["url"], href) if href else None
                 if not du:
                     base = e["url"]
@@ -230,7 +226,7 @@ def simulate_crawl(
                     "min_cabin": best[0] if best else None,
                     "min_price": best[1] if best else None,
                 }
-            for raw_link in extract_links_one(html):
+            for raw_link in links:
                 u = resolve_one(e["url"], raw_link)
                 if not u:
                     continue

@@ -163,14 +163,10 @@ class Lakehouse:
                 for src, mode in ((replace, "replace"), (append, "append"))
                 for name, df in (src or {}).items()
                 if not isinstance(df, StagedFragment)]
-        # sequential by default: concurrent write jobs oversubscribe python
-        # workers at high local core counts (measured 91s vs 65s at local[32])
-        # 2 concurrent write jobs measured best on the bench (25.3s ->
-        # 20.8s for the 3-round crawl): overlaps the small-table writes
-        # (errors/metrics/details) under the big ones without the python-
-        # worker oversubscription that full parallelism caused at local[32]
-        n_threads = int(os.environ.get("SPIDER_COMMIT_THREADS", "2"))
-        with ThreadPoolExecutor(max_workers=max(n_threads, 1)) as ex:
+        # 2 concurrent write jobs overlap the small-table writes
+        # (errors/metrics/details) under the big ones; more oversubscribe
+        # the python workers (measured 91s vs 65s at local[32])
+        with ThreadPoolExecutor(max_workers=2) as ex:
             paths = list(ex.map(lambda j: self._write_data(j[1], j[0]), jobs))
         entries = list(zip(jobs, paths)) + [
             (j, j[1].manifest_entry()) for j in staged]
@@ -221,37 +217,19 @@ class Lakehouse:
             out = out.unionByName(p)
         return out
 
-    def _compaction_plan(self, spark: SparkSession, table: str,
-                         partition_col: str | None = None,
-                         n_files: int | None = None) -> DataFrame | None:
+    def _compaction_plan(self, spark: SparkSession,
+                         table: str) -> DataFrame | None:
         df = self.read(spark, table)
         if df is None:
             return None
-        if partition_col:
-            return df.repartition(f"{partition_col}")
-        if n_files:
-            return df.coalesce(n_files)
         return df.coalesce(max(1, df.rdd.getNumPartitions() // 8))
 
-    def compact(self, spark: SparkSession, table: str,
-                partition_col: str | None = None,
-                n_files: int | None = None) -> None:
-        """Rewrite a table's many append dirs into one dir (the lakehouse
-        small-files problem: a long crawl appends one dir per round to
-        ``seen``/``results``; reads then union hundreds of fragments).
-        Atomic: readers keep the old snapshot until the single manifest
-        rename. Analogous to Iceberg's rewrite_data_files."""
-        df = self._compaction_plan(spark, table, partition_col, n_files)
-        if df is None:
-            return
-        self.commit(self.latest_round(), replace={table: df},
-                    props={"compacted": table})
-
     def compact_many(self, spark: SparkSession, tables: list[str]) -> None:
-        """Compact several tables in ONE atomic commit, so a maintenance
-        pass publishes a single snapshot and a crash mid-compaction can
-        never leave the table set asymmetrically rewritten (the same
-        multi-table atomicity ``commit`` gives the crawl rounds)."""
+        """Rewrite each table's many append dirs (one per round) into one
+        dir, like Iceberg's rewrite_data_files, in ONE atomic commit that
+        does not advance the round: readers keep the old snapshot until
+        the manifest rename, and a crash can never leave the table set
+        asymmetrically rewritten."""
         plans = {t: p for t in tables
                  if (p := self._compaction_plan(spark, t)) is not None}
         if not plans:

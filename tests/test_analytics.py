@@ -9,10 +9,11 @@ from pyspark.sql import functions as F
 
 from __spider_spark.functions.textstats import (
     fingerprint,
-    lang_guess,
-    quality_score,
-    stopword_ratio,
-    token_count,
+    lang_guess_from,
+    quality_score_from,
+    stopword_ratio_from,
+    token_count_from,
+    tokens,
 )
 from __spider_spark.operators.dedup import (
     exact_dedup,
@@ -81,12 +82,13 @@ def test_simhash_near_dup_small_hamming(spark):
 
 
 def test_textstats(spark):
-    df = _docs(spark).select(
+    t = F.col("toks")
+    df = _docs(spark).withColumn("toks", tokens(F.col("text"))).select(
         "doc_id",
-        token_count(F.col("text")).alias("tc"),
-        stopword_ratio(F.col("text")).alias("sr"),
-        quality_score(F.col("text")).alias("q"),
-        lang_guess(F.col("text")).alias("lang"),
+        token_count_from(t).alias("tc"),
+        stopword_ratio_from(t).alias("sr"),
+        quality_score_from(t).alias("q"),
+        lang_guess_from(F.col("text"), t).alias("lang"),
         fingerprint(F.col("text")).alias("fp"),
     )
     rows = {r.doc_id: r for r in df.collect()}
@@ -251,7 +253,7 @@ def test_lakehouse_compaction(spark):
     before = lake.read(spark, "t")
     assert len(lake.snapshot()["tables"]["t"]) == 5
     rows_before = sorted(r.x for r in before.collect())
-    lake.compact(spark, "t", n_files=1)
+    lake.compact_many(spark, ["t"])
     assert len(lake.snapshot()["tables"]["t"]) == 1
     assert sorted(r.x for r in lake.read(spark, "t").collect()) == rows_before
     assert lake.latest_round() == 4  # compaction does not advance the round

@@ -117,11 +117,19 @@ def test_restart_equivalence(spark, sim):
     lake.destroy()
 
 
-def test_bloom_forced_on_same_result(spark, sim):
-    """bloom_min_seen=0 forces the Bloom prefilter into every round (incl.
-    a resume-rebuild) — results must be identical to the plain anti-join."""
+@pytest.mark.parametrize("seen_filter,bloom_inline_max",
+                         [("bloom", 65_536), ("cuckoo", 0)])
+def test_bloom_forced_on_same_result(spark, sim, seen_filter,
+                                     bloom_inline_max):
+    """bloom_min_seen=0 forces the sketch prefilter into every round (incl.
+    a resume-rebuild) — results must be identical to the plain anti-join.
+    bloom_inline_max=0 sends every round's newly-seen keys through the
+    big-wave fold (an executor-built sketch delta merged on the driver)
+    instead of the inline observed collect."""
     cfg = _cfg()
     cfg.bloom_min_seen = 0
+    cfg.seen_filter = seen_filter
+    cfg.bloom_inline_max = bloom_inline_max
     lake = Lakehouse(tempfile.mkdtemp(prefix="lake_fb_"))
     pages = generate_pages(spark, N, HOSTS)
     seeds = make_seeds(spark, N, SEEDS, HOSTS)
@@ -208,7 +216,7 @@ def test_lakehouse_time_travel(spark, crawled):
     # compaction publishes a NEW snapshot; the old one still reads intact
     before = lake.read(spark, "seen").count()
     v_before = lake.versions()[-1]
-    lake.compact(spark, "seen", n_files=2)
+    lake.compact_many(spark, ["seen"])
     assert lake.read(spark, "seen").count() == before
     assert lake.read(spark, "seen", version=v_before).count() == before
     assert lake.versions()[-1] > v_before
@@ -262,7 +270,8 @@ def test_curate_stamps_match_and_order_unchanged(spark, sim):
     that row's own text (catches row-misalignment in the fused select)."""
     import tempfile as _tf
     from __spider_spark.functions.textstats import (
-        fingerprint, lang_guess, quality_score, token_count)
+        fingerprint, lang_guess_from, quality_score_from, token_count_from,
+        tokens)
     lake = Lakehouse(_tf.mkdtemp(prefix="lake_cur_"))
     cfg = _cfg()
     cfg.curate = True
@@ -277,12 +286,12 @@ def test_curate_stamps_match_and_order_unchanged(spark, sim):
         for k in range(1, ROUNDS + 1)
     ]
     assert got_waves == sim.waves  # curation must not perturb scheduling
-    t = F.col("text")
+    t, toks = F.col("text"), tokens(F.col("text"))
     bad = res.filter(F.col("status") == 200).filter(
         ~(
-            (F.col("lang_guess") == lang_guess(t))
-            & (F.col("quality") == F.round(quality_score(t), 6))
-            & (F.col("n_tokens") == token_count(t))
+            (F.col("lang_guess") == lang_guess_from(t, toks))
+            & (F.col("quality") == F.round(quality_score_from(toks), 6))
+            & (F.col("n_tokens") == token_count_from(toks))
             & (F.col("fingerprint") == fingerprint(t))
         )
     ).count()

@@ -38,6 +38,40 @@ def test_cuckoo_overfill_keeps_contract():
     assert cf.overflow, "expected overflow at 16x load"
 
 
+def test_cuckoo_fold_is_vectorized(monkeypatch):
+    """Folding a delta table into a filter re-inserts its (bucket,
+    fingerprint) pairs in vectorized passes: only the rare leftovers take
+    a Python kick chain. Past capacity, the overflow pairs fold in too and
+    no key of either filter is lost."""
+    rng = np.random.default_rng(7)
+    old, new = (rng.integers(-2 ** 63, 2 ** 63 - 1, n, dtype=np.int64)
+                for n in (12_000, 4_000))
+    cf, delta = CuckooFilter(1 << 13), CuckooFilter(1 << 13)
+    cf.add_many(old)
+    delta.add_many(new)
+    calls = []
+    kick = CuckooFilter._insert_kick
+    monkeypatch.setattr(CuckooFilter, "_insert_kick",
+                        lambda self, *a: calls.append(a) or kick(self, *a))
+    cf.merge_pairs(delta.buckets, delta.overflow)
+    assert len(calls) <= 40, len(calls)
+    assert cf.contains_many(old).all() and cf.contains_many(new).all()
+    monkeypatch.undo()
+
+    old, new = (rng.integers(-2 ** 63, 2 ** 63 - 1, n, dtype=np.int64)
+                for n in (3_500, 1_500))
+    cf, delta = CuckooFilter(1 << 10), CuckooFilter(1 << 10)
+    cf.add_many(old)
+    delta.add_many(new)
+    cf.merge_pairs(delta.buckets, delta.overflow)
+    assert cf.overflow, "5,000 keys in 4,096 slots must overflow"
+    assert cf.contains_many(old).all() and cf.contains_many(new).all()
+    # a filter whose overflow holds pairs folds them in by their count
+    empty = CuckooFilter(1 << 10)
+    empty.merge_pairs(cf.buckets, cf.overflow)
+    assert empty.contains_many(old).all() and empty.contains_many(new).all()
+
+
 def test_cuckoo_fpr_is_small():
     keys = np.arange(10_000, dtype=np.int64) * 0x9E3779B9
     probe = np.arange(10_000, dtype=np.int64) * 0x9E3779B9 + 1

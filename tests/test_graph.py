@@ -44,21 +44,21 @@ def test_reprioritize_frontier(spark):
     assert out[1] > out[2]                     # rank order respected
     assert 0.0 <= min(out.values()) and max(out.values()) <= 1.0
 
+
 def test_connected_components_transitive(spark):
     """Pairs a~b, b~c collapse into one component labeled min-id; disjoint
-    pairs stay separate; a 21-node path (worst-case diameter for plain
-    min-propagation) still converges to the single min label."""
-    from __spider_spark.operators.graph import connected_components
-    from pyspark.sql import functions as F  # noqa: F401
+    pairs stay separate; a 21-node path still converges to the single min
+    label."""
+    from __spider_spark.operators.graph import connected_components_star
     edges = spark.createDataFrame(
         [(2, 3), (3, 1), (1, 2), (10, 11)], "src long, dst long")
     out = {r.node: r.component
-           for r in connected_components(edges).collect()}
+           for r in connected_components_star(edges).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(20, 40)], "src long, dst long")
     outc = {r.node: r.component
-            for r in connected_components(chain).collect()}
+            for r in connected_components_star(chain).collect()}
     assert len(outc) == 21 and set(outc.values()) == {20}
 
 
@@ -80,31 +80,41 @@ def test_connected_components_star_log_rounds(spark):
     assert stats["rounds"] <= 2 * math.ceil(math.log2(n)), stats
 
 
+def _union_find_components(edges):
+    """Driver-side reference: (node, min id of its component) for every
+    node on a non-self-loop edge."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        if u == v:
+            continue
+        for x in (u, v):
+            parent.setdefault(x, x)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)   # the root stays the min
+    return sorted((x, find(x)) for x in parent)
+
+
 def test_connected_components_star_equiv(spark):
-    """Star alternation computes the identical relation to min-label
-    propagation on a mixed graph (cycles + tails + disjoint pairs +
-    hash-scattered ids, so orientation/min logic is actually exercised)."""
-    from __spider_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    """Star alternation computes the same relation as a union-find on a
+    mixed graph (cycles + tails + disjoint pairs + hash-scattered ids, so
+    orientation/min logic is actually exercised)."""
+    from __spider_spark.operators.graph import connected_components_star
     edges = [(2, 3), (3, 1), (1, 2), (10, 11), (7, 3), (100, 7)]
     # deterministic scattered component: i*7919 % 997 walks
     edges += [((i * 7919) % 997 + 200, ((i + 1) * 7919) % 997 + 200)
               for i in range(40)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    # the 40-edge walk has diameter > the label-prop default max_iter;
-    # the first equivalence run caught label-prop silently returning a
-    # non-fixpoint there — it now raises instead (exact-fixpoint contract)
-    import pytest
-
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components(df).collect()
-    a = sorted((r.node, r.component)
-               for r in connected_components(df, max_iter=60).collect())
-    b = sorted((r.node, r.component)
-               for r in connected_components_star(df).collect())
-    assert a == b
+    got = sorted((r.node, r.component)
+                 for r in connected_components_star(df).collect())
+    assert got == _union_find_components(edges)
 
 
 def test_delta_connected_components_accumulates_to_batch(spark):

@@ -1,18 +1,18 @@
-"""Pages generator + extractor: byte-identity invariant (BASELINE input_hint)."""
+"""Pages generator + extractor: byte-identity invariant (BASELINE input_hint).
+
+The reference the extractor is checked against is the generator's golden
+row, built by construction (``build_page``), not a second parser."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from __spider_spark.functions.text import (
-    extract_links_one,
-    extract_text,
-    extract_text_one,
-)
+from __spider_spark.functions.text import extract_page, extract_page_one
 from __spider_spark.functions.urls import canonicalize_one
 from __spider_spark.sources.pages import (
     build_page,
     canonical_url,
+    detail_href_of,
     generate_pages,
     outlink_ids,
     raw_url,
@@ -20,6 +20,14 @@ from __spider_spark.sources.pages import (
 )
 
 N, HOSTS = 300, 10
+# stub pages, and the article weight of the extract-bound benchmark
+WEIGHTS = (1, 8)
+
+
+def _golden_rows():
+    for w in WEIGHTS:
+        for i in range(N):
+            yield w, i, build_page(i, N, HOSTS, weight=w)
 
 
 def test_raw_canonicalizes_to_canonical():
@@ -28,27 +36,29 @@ def test_raw_canonicalizes_to_canonical():
 
 
 def test_extract_text_byte_identical_local():
-    """extract_text(html) == golden text, byte-for-byte (utf-8)."""
-    for i in range(N):
-        row = build_page(i, N, HOSTS)
-        got = extract_text_one(row["html"])
-        assert got == row["text"], i
-        assert got.encode("utf-8") == row["text"].encode("utf-8")
+    """extract_page_one text == golden text, byte-for-byte (utf-8), for
+    every page at every weight."""
+    for w, i, row in _golden_rows():
+        text, _, _ = extract_page_one(row["html"])
+        assert text.encode("utf-8") == row["text"].encode("utf-8"), (w, i)
 
 
 def test_extract_links_match_outlinks():
-    for i in range(0, N, 17):
-        row = build_page(i, N, HOSTS)
-        links = extract_links_one(row["html"])
-        want = [raw_url(t, HOSTS) for t in outlink_ids(i, N)]
-        assert links == want
+    """Frontier links are the page's outlinks in document order, and the
+    rel="detail" href is kept out of them, for every page at every
+    weight."""
+    for w, i, row in _golden_rows():
+        _, links, detail_href = extract_page_one(row["html"])
+        assert links == [raw_url(t, HOSTS) for t in outlink_ids(i, N)], \
+            (w, i)
+        assert detail_href == detail_href_of(i, HOSTS), (w, i)
 
 
 def test_generate_pages_distributed(spark):
     df = generate_pages(spark, N, HOSTS).cache()
     assert df.count() == N
     # byte-identity holds through Arrow batches + any partitioning
-    bad = df.withColumn("x", extract_text(F.col("html"))).filter(
+    bad = df.withColumn("x", extract_page(F.col("html")).text).filter(
         F.col("x") != F.col("text")
     )
     assert bad.count() == 0
