@@ -142,10 +142,14 @@ class CuckooFilter:
         out = ((self.buckets[i1] == f[:, None]).any(axis=1)
                | (self.buckets[i2] == f[:, None]).any(axis=1))
         if self.overflow:
-            for j in np.nonzero(~out)[0]:
-                if ((int(i1[j]), int(f[j])) in self.overflow
-                        or (int(i2[j]), int(f[j])) in self.overflow):
-                    out[j] = True
+            # misses meet the overflow pairs as int64 (bucket << 16) | fp
+            # keys in numpy, never as per-key dict lookups
+            over = np.array([(i << 16) | fp for i, fp in self.overflow],
+                            dtype=np.int64)
+            miss = np.nonzero(~out)[0]
+            fm = f[miss].astype(np.int64)
+            out[miss] = (np.isin((i1[miss] << 16) | fm, over)
+                         | np.isin((i2[miss] << 16) | fm, over))
         return out
 
     def delete_many(self, keys: np.ndarray) -> int:
@@ -231,8 +235,8 @@ class SeenCuckoo(PartitionedSketch):
 
     def _inserted(self, p: int, cf: CuckooFilter) -> None:
         """ADVICE r6: the fixed-size tables degrade SILENTLY past ~0.9
-        load (every further insert lands in the driver-side python
-        overflow and miss checks fall off the vectorized path). Make the
+        load (every further insert runs a Python kick chain and lands in
+        the overflow, and false-positive routing grows with it). Make the
         cliff loud once per partition; the operator keeps working —
         correctness never depends on the table, only routing speed."""
         if p in self._load_warned:

@@ -96,8 +96,10 @@ def connected_components_star(
     anti-join counts per round — bounded driver actions, no row data
     collected); at the fixpoint every edge is (node, component-min).
     ``stats["rounds"]`` reports the round count when a dict is passed.
-    Isolated self-loops vanish. At the fixpoint the relation equals the
-    one an ANSI recursive CTE computes — oracle-checkable (q23)."""
+    Raises ``RuntimeError`` when ``max_iter`` rounds end short of the
+    fixpoint, instead of returning a partial labeling. Isolated self-loops
+    vanish. At the fixpoint the relation equals the one an ANSI recursive
+    CTE computes — oracle-checkable (q23)."""
     e = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -137,6 +139,11 @@ def connected_components_star(
         e = small
         if not changed:
             break
+    else:
+        if max_iter:  # every round, the last one included, changed edges
+            raise RuntimeError(
+                f"connected_components_star: no fixpoint after "
+                f"{max_iter} rounds; raise max_iter")
     if stats is not None:
         stats["rounds"] = rounds
     return (

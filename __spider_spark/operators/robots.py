@@ -167,7 +167,9 @@ def robots_rules_df(spark: SparkSession,
     Accepts either a (host, body) DataFrame — the web-scale path, e.g. a
     lakehouse robots table refreshed per round — or a small dict (test /
     config convenience). Parsing always runs distributed; the driver never
-    holds parsed rules."""
+    holds parsed rules. The frame is lazy: every plan that reads it runs
+    ``parse_robots_udf`` again, so a caller that reads it more than once
+    persists it (``run_crawl`` does, once per rules version)."""
     if robots is None:
         return None
     if isinstance(robots, dict):

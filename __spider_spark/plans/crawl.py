@@ -424,6 +424,31 @@ def _budgets_df(spark: SparkSession, cfg: CrawlConfig,
     )
 
 
+def _rules_dims(spark: SparkSession, cfg: CrawlConfig, robots
+                ) -> tuple[DataFrame | None, DataFrame | None]:
+    """The robots rules dim and the budget dim derived from it, persisted
+    so ``parse_robots_udf`` runs once per rules version, not in every plan
+    that reads them (the gate's broadcast, and the budget dim's filter and
+    projection, each evaluate it). ``persist`` keeps lineage, so a lost
+    block is recomputed — ``localCheckpoint`` would not survive executor
+    loss. budget_carry budgets change every round and are derived per
+    round instead."""
+    rules_df = robots_rules_df(spark, robots)
+    if rules_df is not None:
+        rules_df = rules_df.persist()
+    budgets_df = (None if cfg.budget_carry
+                  else _budgets_df(spark, cfg, rules_df))
+    if budgets_df is not None:
+        budgets_df = budgets_df.persist()
+    return rules_df, budgets_df
+
+
+def _unpersist(*dfs: DataFrame | None) -> None:
+    for df in dfs:
+        if df is not None:
+            df.unpersist()
+
+
 def _flaky_df(spark: SparkSession, cfg: CrawlConfig) -> DataFrame | None:
     """(url_hash, fail_times) dimension for the simulated transient
     failures; at scale this would be the real network's behavior."""
@@ -799,8 +824,13 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
                  or (seen is not None
                      and seen.filter(F.col("outcome") == "fetched")
                              .limit(1).count() > 0)))
+        # the liveness probe is the plain anti-join: on no-robots rounds
+        # ``flagged`` is the uncached sketch-routed plan, and probing it
+        # would re-run the sketch UDF for an existence check
+        live = (flagged if blocked is not None
+                else filter_unseen(frontier, seen))
         if not recrawl_pending and not (
-                cfg.budget_carry and flagged.limit(1).count() > 0):
+                cfg.budget_carry and live.limit(1).count() > 0):
             if blocked is not None:
                 flagged.unpersist()
             discovered.unpersist()
@@ -1044,21 +1074,21 @@ def run_crawl(spark: SparkSession, lake: Lakehouse, pages: DataFrame,
         detail_idx = (detail_index(detail_pages)
                       .repartition(n_part, "detail_hash").persist())
     alias_df = aliases_df(spark, cfg.aliases)
-    # session-state dims, parsed distributed; robots_refresh (S14/S15
-    # analogue) may swap in fresh rules between rounds
-    rules_df = robots_rules_df(spark, cfg.robots or None)
-    budgets_df = _budgets_df(spark, cfg, rules_df)
+    # session-state dims, parsed distributed once per rules version;
+    # robots_refresh (S14/S15 analogue) may swap in fresh rules between
+    # rounds, and then the old pair is released
+    rules_df, budgets_df = _rules_dims(spark, cfg, cfg.robots or None)
     flaky_df = _flaky_df(spark, cfg)
     out = []
     while lake.latest_round() < n_rounds:
         if cfg.robots_refresh is not None:
             refreshed = cfg.robots_refresh(spark, lake.latest_round() + 1)
             if refreshed is not None:
-                rules_df = robots_rules_df(spark, refreshed)
-                budgets_df = _budgets_df(spark, cfg, rules_df)
+                _unpersist(rules_df, budgets_df)
+                rules_df, budgets_df = _rules_dims(spark, cfg, refreshed)
         if cfg.budget_carry:
             # the budget dim is a pure function of the round number — a
-            # tiny per-round recompute of the host dimension, no state
+            # JVM-only projection of the cached rules, no state
             budgets_df = _budgets_df(spark, cfg, rules_df,
                                      round_k=lake.latest_round() + 1)
         row = run_round(spark, lake, idx, cfg, bloom,
@@ -1087,6 +1117,5 @@ def run_crawl(spark: SparkSession, lake: Lakehouse, pages: DataFrame,
                 lake.expire_snapshots(cfg.expire_keep_last)
     if own_idx:
         idx.unpersist()
-    if detail_idx is not None:
-        detail_idx.unpersist()
+    _unpersist(detail_idx, rules_df, budgets_df)
     return out

@@ -72,6 +72,45 @@ def test_cuckoo_fold_is_vectorized(monkeypatch):
     assert empty.contains_many(old).all() and empty.contains_many(new).all()
 
 
+def test_cuckoo_overflow_check_is_vectorized():
+    """Past the load limit, miss checks against the overflow pairs stay on
+    numpy: the answers equal a per-key bucket-or-pair check, every key is
+    maybe-seen, and contains_many never asks the overflow dict for a
+    pair."""
+    class CountingDict(dict):
+        lookups = 0
+
+        def __contains__(self, pair):
+            CountingDict.lookups += 1
+            return super().__contains__(pair)
+
+        def get(self, *a):
+            CountingDict.lookups += 1
+            return super().get(*a)
+
+        def __getitem__(self, pair):
+            CountingDict.lookups += 1
+            return super().__getitem__(pair)
+
+    rng = np.random.default_rng(11)
+    keys = rng.integers(-2 ** 63, 2 ** 63 - 1, 3_800, dtype=np.int64)
+    probes = np.concatenate(
+        [keys, rng.integers(-2 ** 63, 2 ** 63 - 1, 96_200, dtype=np.int64)])
+    cf = CuckooFilter(1 << 10)
+    cf.add_many(keys)
+    assert cf.overflow, "3,800 keys in 4,096 slots must overflow"
+    cf.overflow = CountingDict(cf.overflow)
+    got = cf.contains_many(probes)
+    assert CountingDict.lookups == 0
+    f, i1, i2 = cf._parts(probes)
+    want = [fp in cf.buckets[a] or fp in cf.buckets[b]
+            or (int(a), int(fp)) in cf.overflow
+            or (int(b), int(fp)) in cf.overflow
+            for fp, a, b in zip(f, i1, i2)]
+    assert got.tolist() == want
+    assert got[:len(keys)].all()
+
+
 def test_cuckoo_fpr_is_small():
     keys = np.arange(10_000, dtype=np.int64) * 0x9E3779B9
     probe = np.arange(10_000, dtype=np.int64) * 0x9E3779B9 + 1

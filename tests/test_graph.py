@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from __spider_spark.operators.graph import pagerank, reprioritize_frontier
 
 # graph: 1->2, 1->3, 2->3, 3->1  (classic 3-node cycle with a fork)
@@ -78,6 +80,19 @@ def test_connected_components_star_log_rounds(spark):
            for r in connected_components_star(path, stats=stats).collect()}
     assert len(out) == n and set(out.values()) == {0}
     assert stats["rounds"] <= 2 * math.ceil(math.log2(n)), stats
+
+
+def test_connected_components_star_raises_without_fixpoint(spark):
+    """Running out of rounds raises instead of returning a partial
+    labeling; the default round budget converges on the same path."""
+    from __spider_spark.operators.graph import connected_components_star
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components_star(path, max_iter=2)
+    out = {r.node: r.component
+           for r in connected_components_star(path).collect()}
+    assert len(out) == 64 and set(out.values()) == {0}
 
 
 def _union_find_components(edges):

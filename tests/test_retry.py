@@ -154,12 +154,34 @@ QUERY_SITE = {
     "http://q.test/page?sessionid=abc": "<html><body><h1>s</h1></body></html>",
     "http://q.test/page?id=1": "<html><body><h1>p</h1></body></html>",
 }
-QUERY_ROBOTS = {"q.test": "User-agent: *\nDisallow: /*?sessionid="}
+# the Crawl-delay (budget 3 at 60 s rounds) never clips this 3-page site;
+# it gives the budget dim a row
+QUERY_ROBOTS = {"q.test": "User-agent: *\nDisallow: /*?sessionid=\n"
+                          "Crawl-delay: 20"}
 
 
-def test_robots_query_string_rule(spark):
+def test_robots_query_string_rule(spark, monkeypatch):
     """Google REP matches path+query: Disallow: /*?sessionid= must block
-    the session URL and allow the plain one — engine AND sim agree."""
+    the session URL and allow the plain one — engine AND sim agree. Every
+    round reads the rules and budget dims persisted once by run_crawl,
+    and they hold exactly what the uncached derivation does."""
+    from pyspark import StorageLevel
+
+    from __spider_spark.operators.robots import robots_rules_df
+    from __spider_spark.plans import crawl
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    dims = []
+    run_round = crawl.run_round
+
+    def spy(*a, rules_df=None, budgets_df=None, **kw):
+        dims.append([(df.is_cached, df.storageLevel != StorageLevel.NONE,
+                      rows(df)) for df in (rules_df, budgets_df)])
+        return run_round(*a, rules_df=rules_df, budgets_df=budgets_df, **kw)
+
+    monkeypatch.setattr(crawl, "run_round", spy)
     pages = {canonicalize_one(u): h.encode() for u, h in QUERY_SITE.items()}
     sim = simulate_crawl(pages, ["http://q.test/"], 3, default_budget=10,
                          robots=dict(QUERY_ROBOTS))
@@ -173,8 +195,13 @@ def test_robots_query_string_rule(spark):
     seeds_df = spark.createDataFrame(
         [(1, "http://q.test/")], "seed_index long, url string")
     lake = Lakehouse(tempfile.mkdtemp(prefix="lake_qrob_"))
-    run_crawl(spark, lake, pages_df, seeds_df,
-              CrawlConfig(default_budget=10, robots=dict(QUERY_ROBOTS)), 3)
+    cfg = CrawlConfig(default_budget=10, robots=dict(QUERY_ROBOTS))
+    run_crawl(spark, lake, pages_df, seeds_df, cfg, 3)
+    rules = robots_rules_df(spark, dict(QUERY_ROBOTS))
+    want = [(True, True, rows(rules)),
+            (True, True, rows(crawl._budgets_df(spark, cfg, rules)))]
+    assert len(dims) >= 2 and all(d == want for d in dims), dims
+    assert want[1][2] == ["Row(host='q.test', budget=3)"]
     seen = {r.url: r.outcome for r in lake.read(spark, "seen").collect()}
     assert seen["http://q.test/page?sessionid=abc"] == "robots_blocked"
     assert seen["http://q.test/page?id=1"] == "fetched"
@@ -224,8 +251,11 @@ def test_per_round_robots_refresh(spark):
         return {"r.test": "User-agent: *\nDisallow:"}
 
     cfg = CrawlConfig(default_budget=10, robots_refresh=refresh)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     run_crawl(spark, lake, pages_df, seeds_df, cfg, 3)
     seen = {r.url: r.outcome for r in lake.read(spark, "seen").collect()}
     assert seen["http://r.test/"] == "fetched"          # round 1: open
     assert seen["http://r.test/ok"] == "robots_blocked"  # round 2: closed
+    # every refreshed rules/budget pair was released, the last one too
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     lake.destroy()
