@@ -139,11 +139,10 @@ def connected_components_star(
         e = small
         if not changed:
             break
-    else:
-        if max_iter:  # every round, the last one included, changed edges
-            raise RuntimeError(
-                f"connected_components_star: no fixpoint after "
-                f"{max_iter} rounds; raise max_iter")
+    else:  # every round, the last one included, changed edges
+        raise RuntimeError(
+            f"connected_components_star: no fixpoint after "
+            f"{max_iter} rounds; raise max_iter")
     if stats is not None:
         stats["rounds"] = rounds
     return (

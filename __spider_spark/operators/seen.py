@@ -176,14 +176,7 @@ class PartitionedSketch:
 
     def udf(self, spark: SparkSession):
         """Arrow-batched predicate: True = maybe seen (must go to the
-        anti-join), False = definitely unseen (skips the join).
-
-        Marked nondeterministic so Catalyst leaves it where
-        :func:`filter_unseen` puts it: a deterministic predicate is copied
-        from the candidates onto the seen side of the anti-join (one
-        Python pass over the corpus-sized seen table per routed round) and
-        pushed below the merge-on-read frontier dedup (one dedup shuffle
-        per branch)."""
+        anti-join), False = definitely unseen (skips the join)."""
         bc = spark.sparkContext.broadcast(
             {p: s.tobytes() for p, s in self.parts.items()})
         n_parts, decode = self.n_parts, self._decode
@@ -201,7 +194,7 @@ class PartitionedSketch:
                     out[idx] = decode(raw).contains_many(arr[idx])
             return pd.Series(out)
 
-        return maybe_seen.asNondeterministic()
+        return maybe_seen
 
 
 class SeenBloom(PartitionedSketch):

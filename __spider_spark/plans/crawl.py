@@ -431,15 +431,19 @@ def _rules_dims(spark: SparkSession, cfg: CrawlConfig, robots
     that reads them (the gate's broadcast, and the budget dim's filter and
     projection, each evaluate it). ``persist`` keeps lineage, so a lost
     block is recomputed — ``localCheckpoint`` would not survive executor
-    loss. budget_carry budgets change every round and are derived per
-    round instead."""
+    loss. The budget dim is read only through a broadcast and is cached as
+    one partition: AQE does not coalesce a cached plan's output, so its
+    window shuffle would otherwise keep ``spark.sql.shuffle.partitions``
+    partitions and every round's broadcast would run that many tasks.
+    budget_carry budgets change every round and are derived per round
+    instead."""
     rules_df = robots_rules_df(spark, robots)
     if rules_df is not None:
         rules_df = rules_df.persist()
     budgets_df = (None if cfg.budget_carry
                   else _budgets_df(spark, cfg, rules_df))
     if budgets_df is not None:
-        budgets_df = budgets_df.persist()
+        budgets_df = budgets_df.coalesce(1).persist()
     return rules_df, budgets_df
 
 
@@ -824,13 +828,8 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
                  or (seen is not None
                      and seen.filter(F.col("outcome") == "fetched")
                              .limit(1).count() > 0)))
-        # the liveness probe is the plain anti-join: on no-robots rounds
-        # ``flagged`` is the uncached sketch-routed plan, and probing it
-        # would re-run the sketch UDF for an existence check
-        live = (flagged if blocked is not None
-                else filter_unseen(frontier, seen))
         if not recrawl_pending and not (
-                cfg.budget_carry and live.limit(1).count() > 0):
+                cfg.budget_carry and flagged.limit(1).count() > 0):
             if blocked is not None:
                 flagged.unpersist()
             discovered.unpersist()

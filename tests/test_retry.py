@@ -164,7 +164,9 @@ def test_robots_query_string_rule(spark, monkeypatch):
     """Google REP matches path+query: Disallow: /*?sessionid= must block
     the session URL and allow the plain one — engine AND sim agree. Every
     round reads the rules and budget dims persisted once by run_crawl,
-    and they hold exactly what the uncached derivation does."""
+    and they hold exactly what the uncached derivation does. The budget
+    dim is cached as one partition, so its per-round broadcast is one
+    task, not one per shuffle partition."""
     from pyspark import StorageLevel
 
     from __spider_spark.operators.robots import robots_rules_df
@@ -173,12 +175,13 @@ def test_robots_query_string_rule(spark, monkeypatch):
     def rows(df):
         return sorted(map(repr, df.collect()))
 
-    dims = []
+    dims, budget_parts = [], []
     run_round = crawl.run_round
 
     def spy(*a, rules_df=None, budgets_df=None, **kw):
         dims.append([(df.is_cached, df.storageLevel != StorageLevel.NONE,
                       rows(df)) for df in (rules_df, budgets_df)])
+        budget_parts.append(budgets_df.rdd.getNumPartitions())
         return run_round(*a, rules_df=rules_df, budgets_df=budgets_df, **kw)
 
     monkeypatch.setattr(crawl, "run_round", spy)
@@ -202,6 +205,7 @@ def test_robots_query_string_rule(spark, monkeypatch):
             (True, True, rows(crawl._budgets_df(spark, cfg, rules)))]
     assert len(dims) >= 2 and all(d == want for d in dims), dims
     assert want[1][2] == ["Row(host='q.test', budget=3)"]
+    assert set(budget_parts) == {1}, budget_parts
     seen = {r.url: r.outcome for r in lake.read(spark, "seen").collect()}
     assert seen["http://q.test/page?sessionid=abc"] == "robots_blocked"
     assert seen["http://q.test/page?id=1"] == "fetched"

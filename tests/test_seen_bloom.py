@@ -53,33 +53,6 @@ def test_filter_unseen_exact(spark):
         with_bloom.select("url_hash")).count() == 0
 
 
-def test_sketch_probe_stays_off_the_seen_side(spark):
-    """The routing predicate is evaluated over the candidates only:
-    Catalyst must not copy it onto the seen side of the anti-join (a
-    Python pass over the whole seen table every routed round)."""
-    cand = spark.range(0, 1000).select(
-        (F.col("id") * 7919).alias("url_hash"), F.col("id").alias("payload"))
-    seen = spark.range(0, 500).select((F.col("id") * 2 * 7919).alias("url_hash"))
-    sketch = SeenBloom(n_parts=4, bits_per_part=1 << 14)
-    sketch.rebuild(seen)
-    plan = filter_unseen(cand, seen, sketch.udf(spark)) \
-        ._jdf.queryExecution().optimizedPlan()
-
-    def nodes(p):
-        yield p
-        for i in range(p.children().size()):
-            yield from nodes(p.children().apply(i))
-
-    scans = []
-    for n in nodes(plan):
-        if n.nodeName() == "ArrowEvalPython" and "maybe_seen" in n.toString():
-            leaves = n.collectLeaves()
-            scans += [leaves.apply(i).toString().strip()
-                      for i in range(leaves.size())]
-    assert scans, plan.toString()
-    assert all(s.startswith("Range (0, 1000,") for s in scans), scans
-
-
 @pytest.mark.parametrize("make", [
     pytest.param(lambda: SeenBloom(8, 1 << 14, 5), id="bloom"),
     pytest.param(lambda: SeenCuckoo(8, 1 << 10), id="cuckoo"),
