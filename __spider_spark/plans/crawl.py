@@ -36,10 +36,10 @@ Scale notes (the 100 TB / 10^10-URL case):
 from __future__ import annotations
 
 import functools
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import extract_page
@@ -62,26 +62,17 @@ from ..sources.lakehouse import Lakehouse, StagedFragment
 from .detail import detail_index, fetch_details
 
 
-# optional machine-readable sink for per-phase timings: set to a list and
-# _prof appends (label, seconds) tuples — bench.py aggregates these into
-# BENCH_r{N}.json so round-over-round driver-cost progress is checkable
-PROFILE_ACC: list[tuple[str, float]] | None = None
-
-
-def _prof(label: str, t0: float) -> float:
-    """Opt-in stage timing, collected into PROFILE_ACC when it is set."""
-    if PROFILE_ACC is None:
-        return t0
-    t = time.perf_counter()
-    PROFILE_ACC.append((label, t - t0))
-    return t
-
-
 FRONTIER_COLS = ["url", "url_hash", "host", "priority", "round",
                  "parent_url", "seed_index", "attempts"]
 # a fetched row's outcome; every one but retried_503 is terminal and marks
 # the URL seen
 OUTCOMES = ("fetched", "fetched_404", "retried_503", "failed_gave_up")
+# a discovered link enters the frontier at its parent's priority times this
+PRIORITY_DECAY = 0.5
+# PageRank damping of the frontier priority blend
+BLEND_DAMPING = 0.85
+# the priority a page due for a refresh re-enters the frontier at
+RECRAWL_PRIORITY = 1.0
 
 
 def _outcome(max_attempts: int) -> Column:
@@ -113,7 +104,6 @@ class CrawlConfig:
     default_budget: int = 4
     budgets: dict[str, int] = field(default_factory=dict)  # host -> budget
     robots: dict[str, str] = field(default_factory=dict)   # host -> robots.txt
-    priority_decay: float = 0.5
     salt_buckets: int = 8
     # scheduling-round wall budget used to turn robots Crawl-delay
     # directives into per-host budgets (reference analogue: DOWNLOAD_DELAY)
@@ -219,7 +209,6 @@ class CrawlConfig:
     blend_pagerank_every: int | None = None
     blend_weight: float = 0.5
     blend_iters: int = 5
-    blend_damping: float = 0.85
     # host-alias dimension (reference: two-airport aliasing map,
     # ctripSpider.py:56-70 applied at :141-146; ylSpider06.py:465-468):
     # host -> canonical host, applied to every frontier insert BEFORE
@@ -252,9 +241,8 @@ class CrawlConfig:
     # behavior; its hourly cron re-runs the WHOLE frontier instead,
     # start_spider_demo.sh:2-3). Due URLs leave the seen set (durable +
     # filter edit when the sketch supports deletion) and re-enter the
-    # frontier at recrawl_priority; politeness clips them like any rows.
+    # frontier at RECRAWL_PRIORITY; politeness clips them like any rows.
     recrawl_ttl_rounds: int | None = None
-    recrawl_priority: float = 1.0
 
     def __post_init__(self) -> None:
         if self.seen_filter not in ("bloom", "cuckoo"):
@@ -475,6 +463,146 @@ def pages_index(pages: DataFrame) -> DataFrame:
     )
 
 
+def _refresh_due(cfg: CrawlConfig, k: int, seen: DataFrame,
+                 frontier: DataFrame, bloom: PartitionedSketch | None,
+                 cached: list[DataFrame]
+                 ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """Recrawl, before the wave: successfully-fetched URLs older than ttl
+    rounds are unseen and re-injected into the frontier at
+    RECRAWL_PRIORITY; returns the round's seen view and frontier and the
+    re-injected rows (None when nothing is due). The due set is a pure
+    function of (seen table, k), so kill-and-resume replays it; at steady
+    state it is the pages fetched exactly ttl rounds ago — wave-sized.
+    Politeness clips the re-fetches like any rows; a clipped due URL stays
+    in the frontier (and out of seen) until a later round fetches it."""
+    seen = resolve_seen(seen)
+    due = (seen.filter((F.col("outcome") == "fetched")
+                       & (F.col("round_seen") <= k - cfg.recrawl_ttl_rounds))
+           .select("url_hash", "url").persist())
+    cached.append(due)
+    n_due = due.count()
+    if not n_due:
+        return seen, frontier, None
+    seen = seen.join(due.select("url_hash"), "url_hash", "left_anti")
+    refreshed = _entries(due.withColumn("host", url_host(F.col("url"))),
+                         RECRAWL_PRIORITY, k)
+    # the refresh row REPLACES any stale frontier entry for the url (mor
+    # keeps fetched entries physically until a fold; letting the old row
+    # win the dedup would fork lineage and crawl order between cow and
+    # mor — pinned by test_recrawl_with_mor_frontier_matches_cow)
+    frontier = _dedup_frontier(
+        frontier.join(due.select("url_hash"), "url_hash", "left_anti")
+        .unionByName(refreshed))
+    if (hasattr(bloom, "delete")
+            and n_due <= max(int(cfg.bloom_inline_max), 0)):
+        # cuckoo: unsee as a bounded filter EDIT (the count gate above
+        # proves the collect is bounded). The Bloom filter can't delete —
+        # stale bits there just cost false-positive routing through the
+        # anti-join, which stays exact either way.
+        bloom.delete([r["url_hash"] for r in
+                      due.select("url_hash").collect()])
+    return seen, frontier, refreshed
+
+
+def _refresh_appends(refreshed: DataFrame, k: int,
+                     fold_frontier: bool) -> dict[str, DataFrame]:
+    """Recrawl, at commit: the unsee is an O(due) tombstone append to seen
+    (resolve_seen folds it at read time; a seen rewrite would be O(corpus)
+    every round). A mor round also appends the re-injected rows to its
+    frontier delta: the base may drop them at the next fold, and losing
+    them would strand a politeness-clipped due URL forever."""
+    adds = {} if fold_frontier else {"frontier": refreshed}
+    adds["seen"] = refreshed.select(
+        "url_hash", "url", F.lit("unseen").alias("outcome"),
+        F.lit(k).alias("round_seen"))
+    return adds
+
+
+def _curate(wide: DataFrame) -> DataFrame:
+    """Inline curation: lang-ID, quality score, token count and
+    fingerprint stamped after each row's ``text`` in the staged write — JVM
+    Column exprs, no later corpus scan. The tokens are projected once for
+    the three token stats (see textstats.token_count_from)."""
+    from ..functions.textstats import (fingerprint, lang_guess_from,
+                                       quality_score_from, token_count_from,
+                                       tokens)
+    t, toks = F.col("text"), F.col("__toks")
+    cols = wide.columns
+    at = cols.index("text") + 1
+    return wide.select("*", tokens(t).alias("__toks")).select(
+        *cols[:at],
+        lang_guess_from(t, toks).alias("lang_guess"),
+        F.round(quality_score_from(toks), 6).alias("quality"),
+        token_count_from(toks).alias("n_tokens"),
+        fingerprint(t).alias("fingerprint"),
+        *cols[at:])
+
+
+def _content_dedup(spark: SparkSession, lake: Lakehouse, ok: DataFrame,
+                   components: bool, cached: list[DataFrame]
+                   ) -> tuple[dict[str, DataFrame], dict[str, DataFrame]]:
+    """Per-wave delta near-dedup of the round's fetched pages against the
+    persisted band index; returns the round's (appends, replaces), which
+    ride its atomic commit, so index, pairs and corpus never diverge.
+    ``components`` also folds the wave's pairs into the live cluster
+    table (O(wave) contracted star + one relabel join); a round that found
+    no pair leaves that table as it is."""
+    from ..operators.dedup import delta_near_dedup
+    wave_docs = ok.select(F.col("url_hash").alias("doc_id"), "text")
+    corpus = lake.read(spark, "results")
+    texts = wave_docs
+    if corpus is not None:
+        texts = texts.unionByName(
+            corpus.filter(F.col("status") == 200)
+            .select(F.col("url_hash").alias("doc_id"), "text"))
+    wave_bands, new_pairs = delta_near_dedup(
+        wave_docs, texts, lake.read(spark, "content_bands"))
+    if not components:
+        return {"content_bands": wave_bands, "content_dups": new_pairs}, {}
+    from ..operators.graph import (connected_components_star,
+                                   delta_connected_components)
+    # new_pairs is consumed twice (the append and the fold) — pin it so
+    # the band join doesn't recompute
+    new_pairs = new_pairs.persist()
+    cached.append(new_pairs)
+    appends = {"content_bands": wave_bands, "content_dups": new_pairs}
+    edges = new_pairs.select(F.col("doc_a").alias("src"),
+                             F.col("doc_b").alias("dst"))
+    assign = lake.read(spark, "content_components")
+    if new_pairs.limit(1).count() == 0:
+        return appends, {}
+    folded = (connected_components_star(edges) if assign is None
+              else delta_connected_components(assign, edges)).persist()
+    cached.append(folded)
+    return appends, {"content_components": folded}
+
+
+def _pagerank_blend(spark: SparkSession, lake: Lakehouse, cfg: CrawlConfig,
+                    k: int, discovered: DataFrame, new_frontier: DataFrame,
+                    n_discovered: int) -> tuple[DataFrame, DataFrame | None]:
+    """The round's discovered-link edges (one row per outlink occurrence:
+    duplicates carry out-degree weight) and, every
+    ``blend_pagerank_every`` rounds, the frontier with PageRank over all
+    edges blended into its priorities (None on other rounds). The blend
+    publishes in the round's own snapshot, so a crash never resumes with
+    an unblended frontier; the simulator mirrors its arithmetic."""
+    round_edges = discovered.select(
+        url_hash_col(F.col("parent_url")).alias("src"),
+        F.col("url_hash").alias("dst"),
+    )
+    if k % cfg.blend_pagerank_every:
+        return round_edges, None
+    prior_edges = lake.read(spark, "edges")
+    if prior_edges is None and n_discovered == 0:
+        return round_edges, new_frontier
+    from ..operators.graph import reprioritize_frontier
+    all_edges = (round_edges if prior_edges is None
+                 else prior_edges.unionByName(round_edges))
+    return round_edges, reprioritize_frontier(
+        new_frontier, all_edges, cfg.blend_iters, BLEND_DAMPING,
+        cfg.blend_weight)
+
+
 def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
               cfg: CrawlConfig, bloom: PartitionedSketch | None = None,
               rules_df: DataFrame | None = None,
@@ -483,8 +611,8 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
               alias_df: DataFrame | None = None,
               detail_idx: DataFrame | None = None) -> dict | None:
     """Execute one scheduling round; returns the committed metrics row
-    (None when the frontier is exhausted — crawl done)."""
-    t0 = time.perf_counter()
+    (None when the frontier is exhausted — crawl done). Every frame the
+    round persists is released when it returns or raises."""
     k = lake.latest_round() + 1
     frontier = lake.read(spark, "frontier")
     if frontier is None:
@@ -494,525 +622,340 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
         # fragments; apply the deterministic dedup lazily (same rule the
         # cow mode applies at write time — see CrawlConfig.frontier_mode)
         frontier = _dedup_frontier(frontier)
-    seen = lake.read(spark, "seen")
-    refreshed = None
-    if cfg.recrawl_ttl_rounds and seen is not None:
-        # refresh policy: successfully-fetched URLs older than ttl rounds
-        # are UNSEEN (subtracted from this round's anti-join side; made
-        # durable as APPENDED tombstone rows resolved read-side — never a
-        # rewrite of the O(corpus) seen table, see resolve_seen) and
-        # re-injected into the frontier at recrawl_priority. Deterministic:
-        # the due set is a pure function of (seen table, k), so
-        # kill-and-resume replays it identically. Politeness clips the
-        # re-fetches like any other wave rows; a clipped due URL stays in
-        # the frontier (and out of seen) until a later round fetches it.
-        # At steady state the due set per round ≈ the pages fetched
-        # exactly ttl rounds ago — wave-sized, not corpus-sized.
-        seen = resolve_seen(seen)
-        due = (seen.filter(
-                   (F.col("outcome") == "fetched")
-                   & (F.col("round_seen") <= k - cfg.recrawl_ttl_rounds))
-               .select("url_hash", "url").localCheckpoint())
-        n_due = due.count()
-        if n_due:
-            seen = seen.join(due.select("url_hash"), "url_hash",
-                             "left_anti")
-            refreshed = _entries(
-                due.withColumn("host", url_host(F.col("url"))),
-                float(cfg.recrawl_priority), k)
-            # the refresh row REPLACES any stale frontier entry for the
-            # url (mor keeps fetched entries physically until a fold;
-            # letting the old row win the dedup would fork lineage and
-            # crawl order between cow and mor — pinned by
-            # test_recrawl_with_mor_frontier_matches_cow)
-            frontier = _dedup_frontier(
-                frontier.join(due.select("url_hash"), "url_hash",
-                              "left_anti")
-                .unionByName(refreshed))
-            if bloom is not None and hasattr(bloom, "delete"):
-                if n_due <= max(int(cfg.bloom_inline_max), 0):
-                    # cuckoo: unsee as a bounded filter EDIT (the count
-                    # gate above proves the collect is bounded). The Bloom
-                    # filter can't delete — stale bits there just cost
-                    # false-positive routing through the anti-join, which
-                    # stays exact either way.
-                    bloom.delete([r["url_hash"] for r in
-                                  due.select("url_hash").collect()])
-    t0 = _prof("read state", t0)
+    cached: list[DataFrame] = []
+    try:
+        seen = lake.read(spark, "seen")
+        refreshed = None
+        if cfg.recrawl_ttl_rounds and seen is not None:
+            seen, frontier, refreshed = _refresh_due(
+                cfg, k, seen, frontier, bloom, cached)
 
-    # 1+2. candidates = frontier ∖ seen (Bloom-prefiltered anti-join, J6),
-    #      then the robots gate (reference disables robots, settings.py:21;
-    #      we don't): rules DIM broadcast-joined on host + one Arrow-batched
-    #      predicate over path?query. Flag once, cache, filter twice.
-    bloom_udf = None
-    if (cfg.use_bloom and seen is not None and bloom is not None
-            and bloom.n_keys >= cfg.bloom_min_seen):
-        bloom_udf = bloom.udf(spark)
-    candidates = filter_unseen(frontier, seen, bloom_udf)
-    # the blocked count is a branch of the metrics job, not an observation
-    # on the flagged cache: CollectMetrics under .cache() yields a
-    # schemaless metrics row when the cache materializes through a non-SQL
-    # sub-job
-    from pyspark.sql import Observation
-    if rules_df is None:
-        # no robots dim: every candidate is allowed and ``blocked`` is
-        # empty BY CONSTRUCTION. A lit(True) gate column would lose its
-        # literal-ness through the cache boundary and leave every blocked
-        # branch (seen union, metrics aggregate, bloom collect input) a
-        # real scan+filter; so no gate column and no cache (the
-        # clipped-wave persist downstream is the only multi-consumer
-        # materialization point), and blocked = None prunes every
-        # downstream branch at plan-build time. The flagged cache exists
-        # exactly when blocked is not None.
-        flagged = allowed = candidates
-        blocked = None
-    else:
-        flagged = robots_gate(candidates, rules_df).cache()
-        allowed = flagged.filter(F.col("__allowed")).drop("__allowed")
-        blocked = flagged.filter(~F.col("__allowed")).drop("__allowed")
+        # 1+2. candidates = frontier ∖ seen (sketch-routed anti-join),
+        #      then the robots gate: rules dim broadcast-joined on host +
+        #      one Arrow-batched predicate. Flag once, cache, filter twice.
+        bloom_udf = None
+        if (cfg.use_bloom and seen is not None and bloom is not None
+                and bloom.n_keys >= cfg.bloom_min_seen):
+            bloom_udf = bloom.udf(spark)
+        candidates = filter_unseen(frontier, seen, bloom_udf)
+        # the blocked count is a branch of the metrics job, not an
+        # observation on the flagged cache: CollectMetrics under .cache()
+        # yields a schemaless metrics row when the cache materializes
+        # through a non-SQL sub-job
+        if rules_df is None:
+            # no robots dim: ``blocked`` is empty by construction. A
+            # lit(True) gate column would lose its literal-ness through the
+            # cache and leave every blocked branch a real scan+filter; so
+            # no gate column, no cache, and blocked = None prunes every
+            # downstream branch at plan-build time.
+            flagged = allowed = candidates
+            blocked = None
+        else:
+            flagged = robots_gate(candidates, rules_df).cache()
+            cached.append(flagged)
+            allowed = flagged.filter(F.col("__allowed")).drop("__allowed")
+            blocked = flagged.filter(~F.col("__allowed")).drop("__allowed")
 
-    # 3. politeness clip → this round's wave, with a deterministic total
-    #    fetch order (O3 invariant). The clipped wave is persisted because
-    #    global_rank consumes it twice — the per-bucket counts and the
-    #    ranked rows — so an unpersisted clip chain (two windows + the
-    #    Bloom-routed anti-join, Python UDF included on Bloom rounds)
-    #    would execute TWICE per round (guide §2.4: remove recomputed
-    #    subtrees). The wave is budget-bounded (≤ budget × hosts) by
-    #    construction, so the cache is wave-sized, never frontier-sized;
-    #    released right after the staged write materializes.
-    clipped = clip_wave(allowed, budgets_df, cfg.default_budget,
-                        cfg.salt_buckets).persist()
-    # total fetch order in parallel (a bare Window.orderBy would funnel the
-    # whole wave through one task); identical ranks at any parallelism
-    wave = global_rank(
-        clipped, [F.col("priority").desc(), F.col("url_hash").asc()],
-        rank_col="fetch_order")
+        # 3. politeness clip → this round's wave, with a deterministic
+        #    total fetch order. Persisted because global_rank reads it twice
+        #    (bucket counts and ranked rows), which would otherwise run the
+        #    clip chain twice; budget-bounded, so the cache is wave-sized.
+        clipped = clip_wave(allowed, budgets_df, cfg.default_budget,
+                            cfg.salt_buckets).persist()
+        cached.append(clipped)
+        # parallel total order (a bare Window.orderBy would funnel the wave
+        # through one task); identical ranks at any parallelism
+        wave = global_rank(
+            clipped, [F.col("priority").desc(), F.col("url_hash").asc()],
+            rank_col="fetch_order")
 
-    # 4+5. simulated fetch: wave ⋈ pages (url_hash); missing page -> 404
-    #      (the reference's sentinel response, YlSpiderMiddleware.py:186-195,
-    #      becomes a status column, never a magic URL); a flaky page serves
-    #      503 until its fail_times is exhausted (transient-failure class,
-    #      YlSpiderMiddleware.py:80-109). Text + outlinks come from ONE
-    #      fused parse (extract_page); html is read exactly once, and only
-    #      failed fetches keep their raw body (err_html) for the quarantine
-    #      table — the staged wave artifact never holds happy-path payloads.
-    fetched = wave.join(pages_idx, "url_hash", "left")
-    if flaky_df is not None:
-        fetched = fetched.join(F.broadcast(flaky_df), "url_hash", "left")
-    else:
-        fetched = fetched.withColumn("fail_times", F.lit(None).cast("int"))
+        # 4+5. simulated fetch: wave ⋈ pages (url_hash); a missing page is
+        #      a 404 status (the reference's sentinel response,
+        #      YlSpiderMiddleware.py:186-195); a flaky page serves 503 until
+        #      its fail_times is exhausted (YlSpiderMiddleware.py:80-109).
+        #      Text + outlinks come from ONE fused parse (extract_page).
+        fetched = wave.join(pages_idx, "url_hash", "left")
+        if flaky_df is not None:
+            fetched = fetched.join(F.broadcast(flaky_df), "url_hash", "left")
+        else:
+            fetched = fetched.withColumn("fail_times",
+                                         F.lit(None).cast("int"))
 
-    # every attempt is logged (503s included — the reference logs failed
-    # tries too), so fetch_order stays gap-free within the round
-    curation_names: list[str] = []
-    curation_toks = []
-    curation_cols = []
-    if cfg.curate:
-        from ..functions.textstats import (
-            fingerprint,
-            lang_guess_from,
-            quality_score_from,
-            token_count_from,
-            tokens,
-        )
-        # tokens projected once for all three token stats (see the note
-        # above textstats.token_count_from)
-        curation_toks = [tokens(F.col("page.text")).alias("__toks")]
-        t, toks = F.col("text"), F.col("__toks")
-        curation_names = ["lang_guess", "quality", "n_tokens", "fingerprint"]
-        curation_cols = [
-            lang_guess_from(t, toks).alias("lang_guess"),
-            F.round(quality_score_from(toks), 6).alias("quality"),
-            token_count_from(toks).alias("n_tokens"),
-            fingerprint(t).alias("fingerprint"),
-        ]
-    # the round's wave artifact: ONE distributed pass does fetch join +
-    # fused extract + curation and WRITES the fragment (staged); every
-    # downstream consumer is a column-pruned read of that parquet, and the
-    # ``results`` table publishes the same files through a manifest
-    # projection (StagedFragment.cols) — the page text crosses memory once
-    # per round: no wide in-memory cache, no cache re-read, no results
-    # rewrite in the commit. This is also the 100 TB shape: a full wave's
-    # payloads never sit in executor cache.
-    # err_html (raw body kept for the quarantine table) can only be
-    # non-null when a transient-failure (503) serves a real body — a 404
-    # has no body at all — so without a flaky dim the column is provably
-    # all-null and is not even written.
-    keep_err_html = flaky_df is not None
-    status_expr = (
-        F.when(F.col("html").isNull(), F.lit(404))
-         .when(F.col("attempts") < F.coalesce(F.col("fail_times"),
-                                              F.lit(0)), F.lit(503))
-         .otherwise(F.lit(200)))
-    wide = (
-        fetched
-        .select("*", status_expr.alias("status"))
-        .select("*", extract_page(
-            F.when(F.col("status") == 200, F.col("html"))).alias("page"))
-        .select("*", *curation_toks)
-        .select(
-            "url", "url_hash", "host",
-            F.lit(k).alias("round"), "fetch_order", "status",
-            F.col("page.text").alias("text"),
-            *curation_cols,
-            F.struct(
-                F.col("parent_url"),
-                F.spark_partition_id().alias("partition_id"),
-                F.col("seed_index"),
-            ).alias("lineage"),
-            F.col("page.links").alias("links"),
-            F.col("page.detail_href").alias("detail_href"),
-            "priority", "attempts",
-            *([F.when(F.col("status") != 200, F.col("html"))
-               .alias("err_html")] if keep_err_html else []),
-        )
-    )
-    results_cols = ("url", "url_hash", "host", "round", "fetch_order",
-                    "status", "text", *curation_names, "lineage")
-    # the wave's outcome counts ride the staged write as observed metrics
-    # (CollectMetrics — a free driver-side accumulator on the job that
-    # runs anyway), so no job re-reads the fragment to group by outcome.
-    # The outcome is never written: the observation counts it and the
-    # fragment's read projects it.
-    outcome = _outcome(cfg.max_attempts)
-    obs = Observation()
-    wide = wide.observe(
-        obs, *[F.count(F.when(outcome == o, 1)).alias(o) for o in OUTCOMES])
-    t0 = _prof("plan building", t0)
-    frag = lake.stage(wide, "results")
-    clipped.unpersist()
-    counts = {o: int(c) for o, c in obs.get.items()}
-    t0 = _prof("stage wave artifact (fetch, extract, write)", t0)
-    extracted = lake.read_fragment(spark, frag).select(
-        "*", outcome.alias("outcome"),
-        *([] if keep_err_html
-          else [F.lit(None).cast("binary").alias("err_html")]))
-
-    # 5b. retry pyramid: a transient failure with tries left re-enters the
-    #     frontier with decayed priority and attempts+1 (never marked seen);
-    #     one that exhausted max_attempts is quarantined below.
-    retries = _entries(
-        extracted.filter(F.col("outcome") == "retried_503"),
-        F.col("priority") * F.lit(cfg.retry_decay), k + 1,
-        attempts=F.col("attempts") + 1,
-        parent_url=F.col("lineage.parent_url"),
-        seed_index=F.col("lineage.seed_index"))
-
-    # 5c. error/artifact quarantine (reference persists failed raw bodies,
-    #     ctripSpider.py:318-332, ylSpider06.py:422-435): permanent 404s and
-    #     gave-up transients land in the ``errors`` table WITH the raw html
-    #     payload, in the same atomic commit.
-    errors = (
-        extracted.filter(F.col("outcome").isin("fetched_404",
-                                               "failed_gave_up"))
-        .select(
-            "url", "url_hash", "host", F.lit(k).alias("round"),
-            "status",
-            (F.col("attempts") + 1).alias("attempts"),
-            F.when(F.col("status") == 404, F.lit("http_404"))
-             .otherwise(F.lit("gave_up_transient")).alias("error"),
-            F.col("err_html").alias("html"),
-        )
-    )
-
-    # 6. discover outlinks → next-round frontier entries
-    discovered = (
-        extracted.filter(F.col("status") == 200)
-        .select(
-            F.explode("links").alias("raw_link"),
-            F.col("priority").alias("parent_priority"),
-            F.col("url").alias("parent_url"),
-            F.col("lineage.seed_index").alias("seed_index"),
-        )
-        # hrefs may be relative / scheme-relative / fragment-only — resolve
-        # against the parent page (RFC 3986 §5) before canonicalizing;
-        # non-fetchable schemes (mailto:, javascript:) resolve to NULL
-        .select(resolve_link(F.col("parent_url"),
-                             F.col("raw_link")).alias("url"),
-                "parent_priority", "parent_url", "seed_index")
-        .filter(F.col("url").isNotNull() & (F.col("url") != ""))
-        .select("*", url_host(F.col("url")).alias("host"))
-    )
-    # discovered links pass the alias dim too — a link to an aliased
-    # mirror must collapse to the canonical host's identity
-    discovered = apply_host_aliases(discovered, alias_df)
-    # cached: discovery (link resolve + canonicalize + hash, the round's
-    # other Arrow-UDF pass) feeds the distinct-discovered metric, the
-    # frontier merge, and (blend mode) the edges append — without the
-    # cache each consumer would re-run the Python resolve/hash work.
-    discovered = _entries(
-        discovered.select("*", url_hash_col(F.col("url")).alias("url_hash")),
-        F.col("parent_priority") * F.lit(cfg.priority_decay), k + 1,
-        parent_url=F.col("parent_url"),
-        seed_index=F.col("seed_index")).cache()
-
-    # 7. state transition: terminal outcomes (fetched / 404 / gave-up /
-    #    robots-blocked) become seen; retries do NOT. frontier' =
-    #    ((frontier ∪ discovered) ∖ waved ∖ seen) ∪ retries, deduped with
-    #    attempts ranked first so rediscovery can't reset a retry counter.
-    newly_seen = (extracted.filter(F.col("outcome") != "retried_503")
-                  .select("url_hash", "url", "outcome"))
-    if blocked is not None:
-        newly_seen = newly_seen.unionByName(
-            blocked.select("url_hash", "url")
-            .withColumn("outcome", F.lit("robots_blocked")))
-    newly_seen = newly_seen.withColumn("round_seen", F.lit(k))
-    removal_keys = newly_seen.select("url_hash").unionByName(
-        extracted.select("url_hash"))
-    if seen is not None:
-        removal_keys = removal_keys.unionByName(seen.select("url_hash"))
-    new_frontier = _dedup_frontier(
-        frontier.unionByName(discovered)
-        .join(removal_keys, "url_hash", "left_anti")
-        .unionByName(retries)
-    )
-
-    # 8. metrics (reference analogue: running counters A1,
-    #    ctripSpider.py:51,234-250). All distributed — only per-outcome
-    #    counts and P small Bloom bitmaps ever reach the driver, so waves of
-    #    any size scale (never collect() wave rows).
-    t0 = _prof("plan building", t0)
-    # ONE counts-only metrics job, which also materializes the discovery
-    # cache (link resolve + canonicalize + hash — the round's second
-    # Arrow-UDF pass). The wave's outcome counts arrived free with the
-    # staged write (observed metrics above), so this job aggregates only
-    # the two relations the wave artifact can't see: robots-blocked rows
-    # (cached flagged) and the distinct-discovered count (must be exact —
-    # the metrics table is simulator-pinned — and distinct aggregates are
-    # not allowed in observations). It collects counts only, never keys:
-    # a collect_list of newly-seen hashes here would funnel every hash of
-    # the round into one reduce task per outcome group; the sketch fold
-    # below gates on these counts and collects its keys separately.
-    metrics_agg = (discovered.agg(F.count_distinct("url_hash").alias("n"))
-                   .select(F.lit("discovered").alias("outcome"), "n"))
-    if blocked is not None:
-        metrics_agg = metrics_agg.unionByName(
-            blocked.agg(F.count("*").alias("n"))
-            .select(F.lit("robots_blocked").alias("outcome"), "n"))
-    metric_rows = metrics_agg.collect()
-    outcome_counts = {r["outcome"]: r["n"] for r in metric_rows}
-    t0 = _prof("metrics counts (incl discovery materialize)", t0)
-    n_ok = counts["fetched"]
-    n_blocked = int(outcome_counts.get("robots_blocked", 0))
-    n_discovered = int(outcome_counts.get("discovered", 0))
-    metrics_row = {
-        "round": k, "wave": sum(counts.values()),
-        "fetched_200": n_ok, "fetched_404": counts["fetched_404"],
-        "retried_503": counts["retried_503"],
-        "failed_gave_up": counts["failed_gave_up"],
-        "robots_blocked": n_blocked, "discovered": n_discovered,
-    }
-    # terminal outcomes plus robots-blocked rows: the keys marked seen
-    n_new_seen = metrics_row["wave"] - counts["retried_503"] + n_blocked
-    import pyarrow as pa
-    metrics = pa.table({k: [v] for k, v in metrics_row.items()})
-
-    if metrics_row["wave"] == 0 and n_blocked == 0 and n_discovered == 0:
-        # distinguish "frontier exhausted" from "every host accrued a
-        # zero budget THIS round" (only possible with budget_carry and
-        # rate < 1 hosts): the latter must commit an empty round so the
-        # round counter advances and the host is fetched when its budget
-        # accrues to 1 — terminating would strand a slow-host frontier.
-        # a refresh crawl must TICK through empty rounds, not terminate:
-        # pages become due only when the round counter reaches their
-        # fetch round + ttl, so "nothing fetchable right now" is the
-        # steady state between refresh waves, not exhaustion
-        # `refreshed is not None` matters on its own: if EVERY due page
-        # was politeness-clipped this round (wave == 0), terminating here
-        # would discard the uncommitted refresh — the empty round must
-        # commit the seen subtraction + frontier re-injection so a later
-        # round fetches them when budget accrues
-        recrawl_pending = bool(
-            cfg.recrawl_ttl_rounds
-            and (refreshed is not None
-                 or (seen is not None
-                     and seen.filter(F.col("outcome") == "fetched")
-                             .limit(1).count() > 0)))
-        if not recrawl_pending and not (
-                cfg.budget_carry and flagged.limit(1).count() > 0):
-            if blocked is not None:
-                flagged.unpersist()
-            discovered.unpersist()
-            lake.discard_staged(frag)
-            return None  # frontier exhausted; nothing to commit
-
-    # results publish = manifest projection of the already-written wave
-    # artifact (zero extra write; see the staged-write comment above).
-    # In the common bounded-wave case the driver sketch's newly-seen keys
-    # ride the seen WRITE as an observed collect_list — no dedicated
-    # collect job at all. The count gate runs BEFORE any job: every term
-    # of n_new_seen came from jobs already finished, so the collect
-    # buffer is provably ≤ bloom_inline_max keys when the write launches.
-    # The observed copy feeds ONLY the seen append; every other consumer
-    # (removal_keys, the big-wave sketch build) keeps the unobserved
-    # plan, so the observation fires exactly once, on the committed write.
-    obs_seen = None
-    seen_append = newly_seen
-    if (bloom is not None and 0 < n_new_seen
-            <= max(int(cfg.bloom_inline_max), 0)):
-        obs_seen = Observation()
-        seen_append = newly_seen.observe(
-            obs_seen, F.collect_list("url_hash").alias("h"))
-    appends = {"seen": seen_append,
-               "results": StagedFragment(frag.path, results_cols),
-               "errors": errors, "metrics": metrics}
-    # the metrics counts are already on the driver — drop writes that are
-    # provably empty (each one is a full Spark job + py4j round-trip, and
-    # an error-free round has no `errors` rows)
-    if counts["fetched_404"] + counts["failed_gave_up"] == 0:
-        del appends["errors"]
-    discard_after_round = False
-    if metrics_row["wave"] == 0:          # blocked-only round
-        del appends["results"]
-        # the fragment is still read by this commit's frontier write
-        # (removal_keys) AND by the post-commit Bloom fold (newly_seen):
-        # discard it only once the round is fully done with it
-        discard_after_round = True
-    if n_new_seen == 0:  # all-retry round
-        del appends["seen"]
-    if cfg.curate_repetition and n_ok > 0:
-        from ..operators.curation import repetition_stats
-        appends["repetition"] = repetition_stats(
-            extracted.filter(F.col("status") == 200)
-            .select("url_hash", "text"), id_col="url_hash",
-        ).withColumn("round", F.lit(k))
-    replace_components = None
-    if cfg.content_dedup and n_ok > 0:
-        # per-wave delta dedup against the persisted band index; both
-        # tables ride the round's atomic commit, so index and corpus can
-        # never desynchronize across a crash (same guarantee seen gets)
-        from ..operators.dedup import delta_near_dedup
-        wave_docs = extracted.filter(F.col("status") == 200).select(
-            F.col("url_hash").alias("doc_id"), "text")
-        corpus = lake.read(spark, "results")
-        texts = wave_docs
-        if corpus is not None:
-            texts = texts.unionByName(
-                corpus.filter(F.col("status") == 200)
-                .select(F.col("url_hash").alias("doc_id"), "text"))
-        wave_bands, new_pairs = delta_near_dedup(
-            wave_docs, texts, lake.read(spark, "content_bands"))
-        appends["content_bands"] = wave_bands
-        appends["content_dups"] = new_pairs
-        if cfg.content_components:
-            # fold the wave's pairs into the live cluster assignment:
-            # O(wave) contracted star + ONE relabel join over the
-            # pair-nodes-sized table; rides the same atomic commit, so
-            # clusters can never desynchronize from the pair log.
-            # new_pairs is consumed twice (append above + fold here) —
-            # pin it so the band join doesn't recompute
-            new_pairs = new_pairs.localCheckpoint()
-            appends["content_dups"] = new_pairs
-            from ..operators.graph import (
-                connected_components_star,
-                delta_connected_components,
+        # every attempt is logged (503s included), so fetch_order stays
+        # gap-free. ONE pass does fetch join + extract + curation and
+        # WRITES the wave artifact (staged); every consumer is a
+        # column-pruned read of it, and ``results`` publishes the same
+        # files through a manifest projection (StagedFragment.cols), so the
+        # page text crosses memory once per round and never sits in cache.
+        # err_html (the quarantined raw body) is non-null only when a 503
+        # serves a body, so without a flaky dim it is not even written.
+        keep_err_html = flaky_df is not None
+        status_expr = (
+            F.when(F.col("html").isNull(), F.lit(404))
+             .when(F.col("attempts") < F.coalesce(F.col("fail_times"),
+                                                  F.lit(0)), F.lit(503))
+             .otherwise(F.lit(200)))
+        wide = (
+            fetched
+            .select("*", status_expr.alias("status"))
+            .select("*", extract_page(
+                F.when(F.col("status") == 200, F.col("html"))).alias("page"))
+            .select(
+                "url", "url_hash", "host",
+                F.lit(k).alias("round"), "fetch_order", "status",
+                F.col("page.text").alias("text"),
+                F.struct(
+                    F.col("parent_url"),
+                    F.spark_partition_id().alias("partition_id"),
+                    F.col("seed_index"),
+                ).alias("lineage"),
+                F.col("page.links").alias("links"),
+                F.col("page.detail_href").alias("detail_href"),
+                "priority", "attempts",
+                *([F.when(F.col("status") != 200, F.col("html"))
+                   .alias("err_html")] if keep_err_html else []),
             )
-            edges = new_pairs.select(F.col("doc_a").alias("src"),
-                                     F.col("doc_b").alias("dst"))
-            assign = lake.read(spark, "content_components")
-            if new_pairs.limit(1).count() > 0:
-                folded = (connected_components_star(edges)
-                          if assign is None
-                          else delta_connected_components(assign, edges))
-                replace_components = folded.localCheckpoint()
-    # mor rounds append their delta instead of rewriting the frontier;
-    # blend rounds and the fold cadence still materialize (see config)
-    fold_frontier = (
-        cfg.frontier_mode != "mor"
-        or (cfg.blend_pagerank_every
-            and k % cfg.blend_pagerank_every == 0)
-        or (cfg.frontier_fold_every
-            and k % cfg.frontier_fold_every == 0)
-    )
-    if cfg.blend_pagerank_every:
-        # discovered-link edge relation for the PageRank blend: one row per
-        # resolved outlink occurrence (duplicates carry out-degree weight)
-        round_edges = discovered.select(
-            url_hash_col(F.col("parent_url")).alias("src"),
-            F.col("url_hash").alias("dst"),
         )
-        appends["edges"] = round_edges
-        if k % cfg.blend_pagerank_every == 0:
-            # PageRank blend applied INSIDE this round's atomic snapshot:
-            # the blended frontier and the round's appends publish in ONE
-            # snapshot, so a crash can never resume with an unblended
-            # frontier and resume-determinism holds through blend rounds.
-            # The simulator mirrors the same arithmetic (10-dp rounding
-            # pins parallel-sum noise), so order equivalence holds.
-            prior_edges = lake.read(spark, "edges")
-            if prior_edges is not None or n_discovered > 0:
-                all_edges = (round_edges if prior_edges is None
-                             else prior_edges.unionByName(round_edges))
-                from ..operators.graph import reprioritize_frontier
-                new_frontier = reprioritize_frontier(
-                    new_frontier, all_edges, cfg.blend_iters,
-                    cfg.blend_damping, cfg.blend_weight)
-    if detail_idx is not None and n_ok > 0:
-        # S6 keyed second-stage fetch: detail enrichment for this round's
-        # successful listing fetches, committed in the SAME atomic snapshot
-        # (the reference's detail callback writes into the same row batch)
-        appends["details"] = fetch_details(
-            extracted.filter(F.col("status") == 200), detail_idx
-        ).withColumn("round", F.lit(k))
-    if fold_frontier:
-        replace = {"frontier": new_frontier}
-    else:
-        replace = {}
-        delta_parts = []
-        if n_discovered + counts["retried_503"] > 0:
-            delta_parts.append(discovered.unionByName(retries))
-        if refreshed is not None:
-            # re-injected refresh rows must be durable in the mor delta
-            # too: the base may drop them at the next fold, and they are
-            # already subtracted from seen — losing the delta would strand
-            # a politeness-clipped due URL forever
-            delta_parts.append(refreshed)
-        if delta_parts:
+        if cfg.curate:
+            wide = _curate(wide)
+        results_cols = tuple(wide.columns[:wide.columns.index("lineage") + 1])
+        # the wave's outcome counts ride the staged write as observed
+        # metrics, so no job re-reads the fragment to group by outcome;
+        # the outcome is never written, the fragment's read projects it
+        outcome = _outcome(cfg.max_attempts)
+        obs = Observation()
+        wide = wide.observe(
+            obs,
+            *[F.count(F.when(outcome == o, 1)).alias(o) for o in OUTCOMES])
+        frag = lake.stage(wide, "results")
+        counts = {o: int(c) for o, c in obs.get.items()}
+        extracted = lake.read_fragment(spark, frag).select(
+            "*", outcome.alias("outcome"),
+            *([] if keep_err_html
+              else [F.lit(None).cast("binary").alias("err_html")]))
+        ok = extracted.filter(F.col("status") == 200)
+
+        # 5b. retry pyramid: a transient failure with tries left re-enters
+        #     the frontier with decayed priority and attempts+1 (never
+        #     marked seen); one that exhausted max_attempts is quarantined
+        #     below.
+        retries = _entries(
+            extracted.filter(F.col("outcome") == "retried_503"),
+            F.col("priority") * F.lit(cfg.retry_decay), k + 1,
+            attempts=F.col("attempts") + 1,
+            parent_url=F.col("lineage.parent_url"),
+            seed_index=F.col("lineage.seed_index"))
+
+        # 5c. error/artifact quarantine (reference persists failed raw
+        #     bodies, ctripSpider.py:318-332, ylSpider06.py:422-435):
+        #     permanent 404s and gave-up transients land in the ``errors``
+        #     table WITH the raw html payload, in the same atomic commit.
+        errors = (
+            extracted.filter(F.col("outcome").isin("fetched_404",
+                                                   "failed_gave_up"))
+            .select(
+                "url", "url_hash", "host", F.lit(k).alias("round"),
+                "status",
+                (F.col("attempts") + 1).alias("attempts"),
+                F.when(F.col("status") == 404, F.lit("http_404"))
+                 .otherwise(F.lit("gave_up_transient")).alias("error"),
+                F.col("err_html").alias("html"),
+            )
+        )
+
+        # 6. discover outlinks → next-round frontier entries
+        discovered = (
+            ok.select(
+                F.explode("links").alias("raw_link"),
+                F.col("priority").alias("parent_priority"),
+                F.col("url").alias("parent_url"),
+                F.col("lineage.seed_index").alias("seed_index"),
+            )
+            # hrefs may be relative / scheme-relative / fragment-only —
+            # resolve against the parent page (RFC 3986 §5) before
+            # canonicalizing; non-fetchable schemes (mailto:, javascript:)
+            # resolve to NULL
+            .select(resolve_link(F.col("parent_url"),
+                                 F.col("raw_link")).alias("url"),
+                    "parent_priority", "parent_url", "seed_index")
+            .filter(F.col("url").isNotNull() & (F.col("url") != ""))
+            .select("*", url_host(F.col("url")).alias("host"))
+        )
+        # discovered links pass the alias dim too — a link to an aliased
+        # mirror must collapse to the canonical host's identity
+        discovered = apply_host_aliases(discovered, alias_df)
+        # cached: discovery (link resolve + canonicalize + hash, the round's
+        # other Arrow-UDF pass) feeds the distinct-discovered metric, the
+        # frontier merge, and (blend mode) the edges append — without the
+        # cache each consumer would re-run the Python resolve/hash work.
+        discovered = _entries(
+            discovered.select("*",
+                              url_hash_col(F.col("url")).alias("url_hash")),
+            F.col("parent_priority") * F.lit(PRIORITY_DECAY), k + 1,
+            parent_url=F.col("parent_url"),
+            seed_index=F.col("seed_index")).cache()
+        cached.append(discovered)
+
+        # 7. state transition: terminal outcomes (fetched / 404 / gave-up /
+        #    robots-blocked) become seen; retries do NOT. frontier' =
+        #    ((frontier ∪ discovered) ∖ waved ∖ seen) ∪ retries, deduped
+        #    with attempts ranked first so rediscovery can't reset a retry
+        #    counter.
+        newly_seen = (extracted.filter(F.col("outcome") != "retried_503")
+                      .select("url_hash", "url", "outcome"))
+        removal_keys = extracted.select("url_hash")
+        if blocked is not None:
+            newly_seen = newly_seen.unionByName(
+                blocked.select("url_hash", "url")
+                .withColumn("outcome", F.lit("robots_blocked")))
+            removal_keys = removal_keys.unionByName(
+                blocked.select("url_hash"))
+        newly_seen = newly_seen.withColumn("round_seen", F.lit(k))
+        if seen is not None:
+            removal_keys = removal_keys.unionByName(seen.select("url_hash"))
+        new_frontier = _dedup_frontier(
+            frontier.unionByName(discovered)
+            .join(removal_keys, "url_hash", "left_anti")
+            .unionByName(retries)
+        )
+
+        # 8. metrics (reference analogue: running counters A1,
+        #    ctripSpider.py:51,234-250): ONE counts-only job, which also
+        #    materializes the discovery cache. It aggregates only what the
+        #    staged write's observation can't see: robots-blocked rows and
+        #    the exact distinct-discovered count (distinct aggregates are
+        #    not allowed in observations). It collects no keys: a
+        #    collect_list here would funnel every hash of the round into
+        #    one reduce task; the sketch fold below collects them.
+        metrics_agg = (discovered.agg(F.count_distinct("url_hash").alias("n"))
+                       .select(F.lit("discovered").alias("outcome"), "n"))
+        if blocked is not None:
+            metrics_agg = metrics_agg.unionByName(
+                blocked.agg(F.count("*").alias("n"))
+                .select(F.lit("robots_blocked").alias("outcome"), "n"))
+        outcome_counts = {r["outcome"]: r["n"] for r in metrics_agg.collect()}
+        n_ok = counts["fetched"]
+        n_blocked = int(outcome_counts.get("robots_blocked", 0))
+        n_discovered = int(outcome_counts.get("discovered", 0))
+        metrics_row = {
+            "round": k, "wave": sum(counts.values()),
+            "fetched_200": n_ok, "fetched_404": counts["fetched_404"],
+            "retried_503": counts["retried_503"],
+            "failed_gave_up": counts["failed_gave_up"],
+            "robots_blocked": n_blocked, "discovered": n_discovered,
+        }
+        # terminal outcomes plus robots-blocked rows: the keys marked seen
+        n_new_seen = metrics_row["wave"] - counts["retried_503"] + n_blocked
+
+        if metrics_row["wave"] == 0 and n_blocked == 0 and refreshed is None:
+            # an empty wave discovers nothing. The frontier is exhausted
+            # unless the round must still commit to advance the counter:
+            # - budget_carry: every host accrued a zero budget THIS round;
+            # - recrawl: pages become due only when the counter reaches
+            #   their fetch round + ttl. A round that re-injected due pages
+            #   always commits: if politeness clipped them all, stopping
+            #   would lose the unsee and the re-injection.
+            probes = []
+            if cfg.recrawl_ttl_rounds and seen is not None:
+                probes.append(seen.filter(F.col("outcome") == "fetched"))
+            if cfg.budget_carry:
+                probes.append(flagged)
+            if not any(p.limit(1).count() > 0 for p in probes):
+                lake.discard_staged(frag)
+                return None  # frontier exhausted; nothing to commit
+
+        # In the common bounded-wave case the sketch's newly-seen keys ride
+        # the seen WRITE as an observed collect_list — no collect job. The
+        # count gate uses only finished jobs' counts, so the buffer is
+        # provably ≤ bloom_inline_max keys. Only the seen append is
+        # observed, so the observation fires once, on the committed write.
+        obs_seen = None
+        seen_append = newly_seen
+        if (bloom is not None and 0 < n_new_seen
+                <= max(int(cfg.bloom_inline_max), 0)):
+            obs_seen = Observation()
+            seen_append = newly_seen.observe(
+                obs_seen, F.collect_list("url_hash").alias("h"))
+        appends = {"seen": seen_append,
+                   "results": StagedFragment(frag.path, results_cols),
+                   "errors": errors,
+                   "metrics": pa.table({c: [v]
+                                        for c, v in metrics_row.items()})}
+        # the metrics counts are already on the driver — drop writes that
+        # are provably empty (each one is a full Spark job + py4j
+        # round-trip, and an error-free round has no `errors` rows)
+        if counts["fetched_404"] + counts["failed_gave_up"] == 0:
+            del appends["errors"]
+        discard_after_round = False
+        if metrics_row["wave"] == 0:          # blocked-only round
+            del appends["results"]
+            # the fragment is still read by this commit's frontier write
+            # (removal_keys) AND by the post-commit Bloom fold (newly_seen):
+            # discard it only once the round is fully done with it
+            discard_after_round = True
+        if n_new_seen == 0:  # all-retry round
+            del appends["seen"]
+        if cfg.curate_repetition and n_ok:
+            # the Gopher repetition battery over the wave's fetched texts,
+            # a sidecar keyed by url_hash (see CrawlConfig)
+            from ..operators.curation import repetition_stats
+            appends["repetition"] = repetition_stats(
+                ok.select("url_hash", "text"), id_col="url_hash",
+            ).withColumn("round", F.lit(k))
+        components = {}
+        if cfg.content_dedup and n_ok:
+            adds, components = _content_dedup(
+                spark, lake, ok, cfg.content_components, cached)
+            appends.update(adds)
+        blended = None
+        if cfg.blend_pagerank_every:
+            appends["edges"], blended = _pagerank_blend(
+                spark, lake, cfg, k, discovered, new_frontier, n_discovered)
+        if detail_idx is not None and n_ok:
+            # S6 keyed second-stage fetch, committed in the round's own
+            # snapshot (the reference's detail callback writes the same
+            # row batch)
+            appends["details"] = fetch_details(ok, detail_idx).withColumn(
+                "round", F.lit(k))
+        # mor rounds append their delta instead of rewriting the frontier;
+        # blend rounds and the fold cadence still materialize (see config)
+        fold_frontier = (
+            blended is not None
+            or cfg.frontier_mode != "mor"
+            or (cfg.frontier_fold_every
+                and k % cfg.frontier_fold_every == 0)
+        )
+        replace = ({"frontier": new_frontier if blended is None else blended}
+                   if fold_frontier else {})
+        replace.update(components)
+        if not fold_frontier and n_discovered + counts["retried_503"] > 0:
             # round delta only — O(wave) write; dedup scoped to the round
             # (cross-round resolution happens in the read view). An
             # all-terminal round appends nothing: the frontier shrinks
             # logically via the read-side seen anti-join alone.
-            appends["frontier"] = _dedup_frontier(
-                functools.reduce(DataFrame.unionByName, delta_parts))
-    if replace_components is not None:
-        # no-dup rounds skip the rewrite entirely (the table is only as
-        # stale as the last round that actually found a pair)
-        replace["content_components"] = replace_components
-    if refreshed is not None:
-        # the unsee is an O(due) tombstone APPEND in the same atomic
-        # snapshot (a crash can never leave a URL both unseen and
-        # unfetched); resolve_seen folds it at read time. Never a
-        # rewrite: at steady state every round has due pages, and a
-        # seen replace would be an O(corpus) write per round.
-        tombstones = due.select(
-            "url_hash", "url",
-            F.lit("unseen").alias("outcome"),
-            F.lit(k).alias("round_seen"))
-        appends["seen"] = (
-            tombstones if "seen" not in appends
-            else appends["seen"].unionByName(tombstones))
-    lake.commit(k, append=appends, replace=replace)
-    t0 = _prof("commit (5 table writes)", t0)
-    if bloom is not None and n_new_seen > 0:
-        if obs_seen is not None:
-            # the keys were collected by the seen write inside the commit
-            # (observed metric, bounded by the pre-job count gate above);
-            # folding them is a pure driver-side numpy OR — zero jobs.
-            bloom.update(obs_seen.get["h"])
-            t0 = _prof("bloom fold (observed, no job)", t0)
-        else:
-            # big-wave fallback: executor-built sketch delta over this
-            # round's newly-seen keys, merged into the driver filter (no
-            # row collect) — dispatched through the filter object so
-            # Bloom and cuckoo share the crawl plan
-            bloom.merge_raw(bloom.delta_raw(newly_seen), n_new_seen)
-            t0 = _prof("bloom delta build+merge", t0)
-    if blocked is not None:
-        flagged.unpersist()
-    discovered.unpersist()
-    if discard_after_round:
-        lake.discard_staged(frag)
-    return metrics_row
+            appends["frontier"] = discovered.unionByName(retries)
+        if refreshed is not None:
+            for name, df in _refresh_appends(refreshed, k,
+                                             fold_frontier).items():
+                appends[name] = (df if name not in appends
+                                 else appends[name].unionByName(df))
+        if "frontier" in appends:
+            appends["frontier"] = _dedup_frontier(appends["frontier"])
+        lake.commit(k, append=appends, replace=replace)
+        if bloom is not None and n_new_seen > 0:
+            if obs_seen is not None:
+                # keys collected by the seen write: a driver-side fold,
+                # zero jobs
+                bloom.update(obs_seen.get["h"])
+            else:
+                # big-wave fallback: executor-built sketch delta, merged
+                # into the driver filter (no row collect)
+                bloom.merge_raw(bloom.delta_raw(newly_seen), n_new_seen)
+        if discard_after_round:
+            lake.discard_staged(frag)
+        return metrics_row
+    finally:
+        _unpersist(*cached)
 
 
 def build_pages_index(spark: SparkSession, pages: DataFrame,
@@ -1033,14 +976,14 @@ def run_crawl(spark: SparkSession, lake: Lakehouse, pages: DataFrame,
               pages_idx: DataFrame | None = None) -> list[dict]:
     """Run/resume a crawl for up to n_rounds (idempotent across restarts:
     picks up from the last committed snapshot — SURVEY.md §2.9 resume)."""
+    # sweep what a crash in a previous process left: fragments orphaned
+    # between stage() and commit() (a wave-sized leak per crash otherwise)
+    # and a manifest written but never published. Safe here by
+    # construction: this process hasn't staged anything yet, so nothing
+    # can be legitimately in flight.
+    lake.remove_orphans()
     if lake.latest_round() < 0:
         init_crawl(spark, lake, seeds, cfg)
-    else:
-        # resume: sweep fragments orphaned by a crash between stage() and
-        # commit() in the previous process (a wave-sized leak per crash
-        # otherwise). Safe here by construction: this process hasn't
-        # staged anything yet, so nothing can be legitimately in flight.
-        lake.remove_orphans()
     bloom = None
     if cfg.use_bloom:
         if cfg.seen_filter == "cuckoo":
@@ -1065,56 +1008,59 @@ def run_crawl(spark: SparkSession, lake: Lakehouse, pages: DataFrame,
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     own_idx = pages_idx is None
     idx = build_pages_index(spark, pages, n_part) if own_idx else pages_idx
-    detail_idx = None
-    if detail_pages is not None:
-        # same bucketing discipline as the listing store: partition the
-        # detail index ON its join key once, so each round's detail fetch
-        # only shuffles the (small) wave side
-        detail_idx = (detail_index(detail_pages)
-                      .repartition(n_part, "detail_hash").persist())
-    alias_df = aliases_df(spark, cfg.aliases)
-    # session-state dims, parsed distributed once per rules version;
-    # robots_refresh (S14/S15 analogue) may swap in fresh rules between
-    # rounds, and then the old pair is released
-    rules_df, budgets_df = _rules_dims(spark, cfg, cfg.robots or None)
-    flaky_df = _flaky_df(spark, cfg)
-    out = []
-    while lake.latest_round() < n_rounds:
-        if cfg.robots_refresh is not None:
-            refreshed = cfg.robots_refresh(spark, lake.latest_round() + 1)
-            if refreshed is not None:
-                _unpersist(rules_df, budgets_df)
-                rules_df, budgets_df = _rules_dims(spark, cfg, refreshed)
-        if cfg.budget_carry:
-            # the budget dim is a pure function of the round number — a
-            # JVM-only projection of the cached rules, no state
-            budgets_df = _budgets_df(spark, cfg, rules_df,
-                                     round_k=lake.latest_round() + 1)
-        row = run_round(spark, lake, idx, cfg, bloom,
-                        rules_df=rules_df, budgets_df=budgets_df,
-                        flaky_df=flaky_df, alias_df=alias_df,
-                        detail_idx=detail_idx)
-        if row is None:
-            break
-        out.append(row)
-        k = lake.latest_round()
-        # (PageRank blend happens INSIDE run_round's atomic commit —
-        # see the blend block there for the crash-window rationale.)
-        if cfg.compact_every and k > 0 and k % cfg.compact_every == 0:
-            # ONE atomic maintenance commit over every append-heavy table:
-            # readers keep the old snapshot until the manifest rename,
-            # time-travel to pre-compaction versions still works, and a
-            # crash mid-sweep can't leave the tables asymmetrically
-            # compacted (single snapshot published per pass)
-            lake.compact_many(
-                spark, ["seen", "results", "errors", "details", "metrics",
-                        "edges", "content_bands", "content_dups",
-                        "repetition"])
-            if cfg.expire_keep_last:
-                # safe point: the round's commit landed and no staged
-                # fragment is in flight (expire reaps unreferenced dirs)
-                lake.expire_snapshots(cfg.expire_keep_last)
-    if own_idx:
-        idx.unpersist()
-    _unpersist(detail_idx, rules_df, budgets_df)
-    return out
+    # released on every exit: a crawl that raises must not leave the
+    # page store cached in the driver's JVM
+    detail_idx = rules_df = budgets_df = None
+    try:
+        if detail_pages is not None:
+            # same bucketing discipline as the listing store: partition the
+            # detail index ON its join key once, so each round's detail fetch
+            # only shuffles the (small) wave side
+            detail_idx = (detail_index(detail_pages)
+                          .repartition(n_part, "detail_hash").persist())
+        alias_df = aliases_df(spark, cfg.aliases)
+        # session-state dims, parsed distributed once per rules version;
+        # robots_refresh (S14/S15 analogue) may swap in fresh rules between
+        # rounds, and then the old pair is released
+        rules_df, budgets_df = _rules_dims(spark, cfg, cfg.robots or None)
+        flaky_df = _flaky_df(spark, cfg)
+        out = []
+        while lake.latest_round() < n_rounds:
+            if cfg.robots_refresh is not None:
+                refreshed = cfg.robots_refresh(spark, lake.latest_round() + 1)
+                if refreshed is not None:
+                    _unpersist(rules_df, budgets_df)
+                    rules_df, budgets_df = _rules_dims(spark, cfg, refreshed)
+            if cfg.budget_carry:
+                # the budget dim is a pure function of the round number — a
+                # JVM-only projection of the cached rules, no state
+                budgets_df = _budgets_df(spark, cfg, rules_df,
+                                         round_k=lake.latest_round() + 1)
+            row = run_round(spark, lake, idx, cfg, bloom,
+                            rules_df=rules_df, budgets_df=budgets_df,
+                            flaky_df=flaky_df, alias_df=alias_df,
+                            detail_idx=detail_idx)
+            if row is None:
+                break
+            out.append(row)
+            k = lake.latest_round()
+            # (PageRank blend happens INSIDE run_round's atomic commit —
+            # see _pagerank_blend for the crash-window rationale.)
+            if cfg.compact_every and k > 0 and k % cfg.compact_every == 0:
+                # ONE atomic maintenance commit over every append-heavy table:
+                # readers keep the old snapshot until the manifest rename,
+                # time-travel to pre-compaction versions still works, and a
+                # crash mid-sweep can't leave the tables asymmetrically
+                # compacted (single snapshot published per pass)
+                lake.compact_many(
+                    spark, ["seen", "results", "errors", "details", "metrics",
+                            "edges", "content_bands", "content_dups",
+                            "repetition"])
+                if cfg.expire_keep_last:
+                    # safe point: the round's commit landed and no staged
+                    # fragment is in flight (expire reaps unreferenced dirs)
+                    lake.expire_snapshots(cfg.expire_keep_last)
+        return out
+    finally:
+        _unpersist(idx if own_idx else None, detail_idx, rules_df,
+                   budgets_df)

@@ -148,9 +148,11 @@ class Lakehouse:
     ) -> None:
         """Atomically advance all tables: write data dirs first (in parallel
         — Spark schedules concurrent jobs from separate driver threads, so
-        independent table writes overlap), then publish one manifest via
-        atomic rename. A crash before the final ``os.replace`` leaves the
-        previous snapshot intact."""
+        independent table writes overlap), then create the next manifest
+        exclusively and publish it via atomic rename of ``LATEST``. A crash
+        before the final ``os.replace`` leaves the previous snapshot
+        intact; a writer whose manifest version is already taken raises
+        ``FileExistsError`` and publishes nothing."""
         snap = self.snapshot()
         tables: dict[str, list] = {
             k: list(v) for k, v in snap["tables"].items()
@@ -178,9 +180,15 @@ class Lakehouse:
         v = self._latest_version() + 1
         manifest = {"round": round_id, "tables": tables, "props": props or {}}
         mp = self._manifest_path(v)
-        tmp = mp.with_suffix(".json.tmp")
+        tmp = mp.with_name(f".{mp.name}.{uuid.uuid4().hex}")
         tmp.write_text(json.dumps(manifest, indent=1))
-        os.replace(tmp, mp)
+        # single writer: the link creates vN.json exclusively, so a second
+        # writer that picked the same N raises FileExistsError instead of
+        # silently overwriting the first one's snapshot
+        try:
+            os.link(tmp, mp)
+        finally:
+            tmp.unlink()
         latest_tmp = self.root / "_manifests" / f".LATEST.{uuid.uuid4().hex}"
         latest_tmp.write_text(f"v{v:06d}")
         os.replace(latest_tmp, self.root / "_manifests" / "LATEST")
@@ -285,9 +293,16 @@ class Lakehouse:
 
         Only safe when no fragment can legitimately be in flight — e.g. at
         crawl resume, before the first ``stage()`` of the new process
-        (:func:`plans.crawl.run_crawl` calls it there). With zero committed
-        manifests every dir is presumed in flight and nothing is touched.
-        Returns {"data_dirs": n, "bytes": n} reclaimed."""
+        (:func:`plans.crawl.run_crawl` calls it there). Manifests newer
+        than ``LATEST`` were never published (a crash between writing one
+        and replacing ``LATEST``) and are deleted too, or the exclusive
+        create in :meth:`commit` would refuse every later commit. With
+        zero committed manifests every data dir is presumed in flight and
+        none is touched. Returns {"data_dirs": n, "bytes": n} reclaimed."""
+        latest = self._latest_version()
+        for p in (self.root / "_manifests").glob("v*.json"):
+            if int(p.stem.lstrip("v")) > latest:
+                p.unlink()
         versions = self.versions()
         if not versions:
             return {"data_dirs": 0, "bytes": 0}

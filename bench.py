@@ -92,14 +92,12 @@ def bench_queries(
     return times, raw
 
 
-def bench_crawl(spark) -> tuple[float, float, int, dict[str, float]]:
+def bench_crawl(spark) -> tuple[float, float, int]:
     """3 scheduling rounds over a generated page store; returns
-    (elapsed_sec, urls_per_sec, urls_fetched, phase_seconds). Page-store
-    generation is pre-materialized to parquet so only the engine is
-    timed; per-phase timings (summed across rounds) come from the crawl
-    plan's _prof hooks so driver-cost progress is machine-checkable
-    round over round."""
-    from __spider_spark.plans import crawl as crawlmod
+    (elapsed_sec, urls_per_sec, urls_fetched). Page-store generation is
+    pre-materialized to parquet so only the engine is timed. Per-layer
+    spans and job counts of a crawl round come from
+    ``perfbench/run.py --trace 1``."""
     tmp = tempfile.mkdtemp(prefix="bench_pages_")
     pages_path = f"{tmp}/pages"
     generate_pages(spark, CRAWL_PAGES, n_hosts=64).write.mode(
@@ -109,19 +107,12 @@ def bench_crawl(spark) -> tuple[float, float, int, dict[str, float]]:
     cfg = CrawlConfig(default_budget=CRAWL_SEEDS, salt_buckets=16,
                       bloom_parts=16)
     seeds = seeds_df(spark, CRAWL_PAGES, CRAWL_SEEDS, 64)
-    acc: list[tuple[str, float]] = []
-    crawlmod.PROFILE_ACC = acc
     t0 = time.perf_counter()
     metrics = run_crawl(spark, lake, pages, seeds, cfg, CRAWL_ROUNDS)
     elapsed = time.perf_counter() - t0
-    crawlmod.PROFILE_ACC = None
-    phases: dict[str, float] = {}
-    for label, sec in acc:
-        phases[label] = round(phases.get(label, 0.0) + sec, 3)
     fetched = sum(m["wave"] for m in metrics)
     lake.destroy()
-    return (round(elapsed, 3), round(fetched / elapsed, 1), fetched,
-            phases)
+    return round(elapsed, 3), round(fetched / elapsed, 1), fetched
 
 
 def main() -> None:
@@ -139,7 +130,7 @@ def main() -> None:
     # crawl best-of-2, same rationale as bench_queries (each run gets a
     # fresh page store + lakehouse; generation is outside the timer)
     runs = [bench_crawl(spark) for _ in range(2)]
-    crawl_sec, urls_per_sec, fetched, phases = min(runs, key=lambda r: r[0])
+    crawl_sec, urls_per_sec, fetched = min(runs, key=lambda r: r[0])
     times["crawl_3rounds"] = crawl_sec
     raw["crawl_3rounds"] = [r[0] for r in runs]
     total = round(sum(times.values()), 3)
@@ -156,7 +147,6 @@ def main() -> None:
         "crawl_urls_per_sec": urls_per_sec,
         "crawl_urls_per_sec_runs": [r[1] for r in runs],
         "crawl_urls_fetched": fetched,
-        "crawl_phase_sec": phases,
         "cpus": int(cpus),
     }))
 

@@ -5,7 +5,7 @@ noop-sink timing live here — guide §1.4/§1.5).
 Usage:
   python bench_extra.py plans <outdir> [query ...]   # .explain("formatted")
   python bench_extra.py time [query ...]             # noop-isolated best-of-N
-  python bench_extra.py crawl                        # crawl w/ phase profile
+  python bench_extra.py crawl                        # timed 3-round crawl
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
 (default 32), BENCH_EXTRA_RUNS (default 3).
@@ -105,7 +105,6 @@ def cmd_time(names: list[str]) -> None:
 
 
 def cmd_crawl() -> None:
-    from __spider_spark.plans import crawl as crawlmod
     from __spider_spark.plans.crawl import CrawlConfig, run_crawl
     from __spider_spark.sources.lakehouse import Lakehouse
     from __spider_spark.sources.pages import generate_pages, seeds_df
@@ -123,20 +122,13 @@ def cmd_crawl() -> None:
         cfg = CrawlConfig(default_budget=n_seeds, salt_buckets=16,
                           bloom_parts=16)
         seeds = seeds_df(spark, n_pages, n_seeds, 64)
-        acc: list[tuple[str, float]] = []
-        crawlmod.PROFILE_ACC = acc
         t0 = time.perf_counter()
         metrics = run_crawl(spark, lake, pages, seeds, cfg, n_rounds)
         elapsed = round(time.perf_counter() - t0, 3)
-        crawlmod.PROFILE_ACC = None
-        phases: dict[str, float] = {}
-        for label, sec in acc:
-            phases[label] = round(phases.get(label, 0.0) + sec, 3)
         fetched = sum(m["wave"] for m in metrics)
         lake.destroy()
         results.append({"sec": elapsed,
-                        "urls_per_sec": round(fetched / elapsed, 1),
-                        "phases": phases})
+                        "urls_per_sec": round(fetched / elapsed, 1)})
         print(json.dumps(results[-1]), flush=True)
     best = min(results, key=lambda r: r["sec"])
     print(json.dumps({"best": best, "all": [r["sec"] for r in results]}))

@@ -19,8 +19,12 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
+    # one JVM runs the whole suite: cap its heap well inside the RAM of a
+    # small box, where the library's 32g default lets it grow until the
+    # kernel's OOM killer ends the session mid-suite
     s = get_spark(app_name="__spider_spark-tests", master="local[4]",
-                  shuffle_partitions=8)
+                  shuffle_partitions=8,
+                  extra_conf={"spark.driver.memory": "8g"})
     yield s
     s.stop()
 

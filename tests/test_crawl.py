@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import tempfile
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -188,7 +189,28 @@ def test_unpublished_manifest_is_not_a_version(spark):
     assert lake.versions() == [2]
     assert lake.latest_round() == 2
     assert lake.read(spark, "t").count() == 10
+    # the sweep deleted the unpublished v3, so the next commit can take it
+    assert not lake._manifest_path(3).exists()
+    lake.commit(3, append={"t": pa.table({"x": pa.array([7], pa.int64())})})
+    assert lake.versions() == [2, 3]
+    assert lake.read(spark, "t").count() == 11
     lake.destroy()
+
+
+def test_second_writer_is_refused(tmp_path):
+    """Two writers that pick the same manifest version: the second one
+    raises and the first one's snapshot stays byte-identical."""
+    first = Lakehouse(tmp_path)
+    first.commit(1, append={"t": pa.table({"x": [1]})})
+    manifest = first._manifest_path(1).read_bytes()
+    stale = Lakehouse(tmp_path)
+    stale._latest_version = lambda: 0     # read LATEST before the commit
+    with pytest.raises(FileExistsError):
+        stale.commit(1, append={"t": pa.table({"x": [2]})})
+    assert first._manifest_path(1).read_bytes() == manifest
+    assert first.versions() == [1]
+    assert first.snapshot()["tables"]["t"] == json.loads(manifest)[
+        "tables"]["t"]
 
 
 def test_lakehouse_time_travel(spark, crawled):
@@ -709,3 +731,77 @@ def test_inline_repetition_sidecar(spark):
         ok.select("url_hash", "text"), id_col="url_hash").collect()))
     assert got == want
     lake.destroy()
+
+
+def test_crawl_that_raises_releases_its_caches(spark, monkeypatch):
+    """A crawl whose round-2 commit raises releases every frame it
+    persisted: the page store index, the rules and budget dims and the
+    round's own caches."""
+    commit = Lakehouse.commit
+
+    def failing_commit(self, round_id, *a, **kw):
+        if round_id == 2:
+            raise RuntimeError("injected commit failure")
+        return commit(self, round_id, *a, **kw)
+
+    monkeypatch.setattr(Lakehouse, "commit", failing_commit)
+    # ids, not a count: the context cleaner may drop RDDs that earlier
+    # tests leaked while this crawl runs
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    lake = Lakehouse(tempfile.mkdtemp(prefix="lake_raise_"))
+    with pytest.raises(RuntimeError, match="injected"):
+        run_crawl(spark, lake, generate_pages(spark, 60, 4),
+                  make_seeds(spark, 60, 8, 4), _cfg(), 3)
+    assert lake.latest_round() == 1
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+               ) <= persisted
+    lake.destroy()
+
+
+# Spark jobs each round of the 3-round crawl below launched before its
+# optional features moved out of run_round (counted the same way).
+JOBS_PER_ROUND = {"robots": [30, 27, 27], "no_robots": [25, 23, 23]}
+
+
+@pytest.mark.parametrize("variant", sorted(JOBS_PER_ROUND))
+def test_jobs_per_round_pinned(spark, monkeypatch, variant):
+    """A structural guard box load cannot make flaky: no round of a small
+    crawl launches more Spark jobs than the pinned counts. Jobs are the
+    diff of all known job ids around each run_round call; the commit
+    pool's threads carry no job group, so ungrouped ids are counted too."""
+    from __spider_spark.plans import crawl
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"jobs-per-round-{variant}"
+
+    def known():
+        return {j for g in (None, "", group)
+                for j in tracker.getJobIdsForGroup(g)}
+
+    per_round = []
+    run_round = crawl.run_round
+
+    def counted(*a, **kw):
+        before = known()
+        try:
+            return run_round(*a, **kw)
+        finally:
+            per_round.append(len(known() - before))
+
+    monkeypatch.setattr(crawl, "run_round", counted)
+    n = 200
+    cfg = _cfg()
+    if variant == "no_robots":
+        cfg.robots = {}
+    lake = Lakehouse(tempfile.mkdtemp(prefix="lake_jobs_"))
+    sc.setJobGroup(group, "count crawl jobs per round")
+    try:
+        run_crawl(spark, lake, generate_pages(spark, n, HOSTS),
+                  make_seeds(spark, n, SEEDS, HOSTS), cfg, 3)
+    finally:
+        sc.setJobGroup("", "")
+    lake.destroy()
+    pinned = JOBS_PER_ROUND[variant]
+    assert len(per_round) == len(pinned)
+    assert all(got <= cap for got, cap in zip(per_round, pinned)), (
+        per_round, pinned)

@@ -6,6 +6,8 @@ the same crawl under Bloom commits identical tables)."""
 
 from __future__ import annotations
 
+import os
+import sys
 import tempfile
 
 from pyspark.sql import functions as F
@@ -33,12 +35,31 @@ def _run(spark, pages, seeds, rounds, filt):
     return cfg, lake
 
 
-def test_recrawl_refetches_on_cadence_and_resumes(spark):
+def test_recrawl_refetches_on_cadence_and_resumes(spark, monkeypatch):
     N, HOSTS, SEEDS, ROUNDS = 60, 4, 60, 5
     pages = generate_pages(spark, N, HOSTS)
     seeds = seeds_df(spark, N, SEEDS, HOSTS)
 
+    # the crawl loop persists (lineage kept), never localCheckpoints: a
+    # local checkpoint does not survive executor loss
+    crawl_checkpoints = []
+    df_class = type(pages)   # the session's concrete DataFrame class
+    local_checkpoint = df_class.localCheckpoint
+
+    def spy(self, *a, **kw):
+        caller = sys._getframe(1).f_code.co_filename
+        if caller.endswith(os.path.join("plans", "crawl.py")):
+            crawl_checkpoints.append(caller)
+        return local_checkpoint(self, *a, **kw)
+
+    monkeypatch.setattr(df_class, "localCheckpoint", spy)
+    # ids, not a count: the context cleaner may drop RDDs that earlier
+    # tests leaked while this crawl runs
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     cfg, lake = _run(spark, pages, seeds, ROUNDS, "cuckoo")
+    assert crawl_checkpoints == []
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+               ) <= persisted
     results = lake.read(spark, "results").filter(F.col("status") == 200)
     rounds_per_url = {
         r["url_hash"]: sorted(r["rs"])
