@@ -11,7 +11,7 @@ surveyed in SURVEY.md) as an idiomatic Spark engine:
   family (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity
   search (brute-force + persisted-bucket LSH + k-means IVF ANN), robots
   rules dim, host aliasing, retry/quarantine audit, link-graph PageRank,
-  NMS, multimodal column plumbing (stdlib BMP/WAV decode).
+  NMS.
 - ``sources/``    — page-store generator (Common-Crawl-shaped, deterministic),
   testdata loaders, and a snapshot/atomic-commit lakehouse layer
   (Iceberg-semantics over parquet; swap to a real Iceberg catalog on a
@@ -19,8 +19,8 @@ surveyed in SURVEY.md) as an idiomatic Spark engine:
 - ``plans/``      — the round-based crawl driver (frontier → seen-anti-join →
   politeness → fetch → extract → discover → atomic commit) with retry
   pyramid, error quarantine, keyed second-stage detail fetch,
-  per-partition lineage + metrics and restart equivalence.
-- ``streaming/``  — micro-batch round loop utilities.
+  per-partition lineage + metrics and restart equivalence. Each round is
+  the engine's micro-batch; there is no Structured Streaming path.
 
 Everything is DataFrame + pandas/Arrow UDFs; no per-row Python UDFs, no RDDs,
 no custom Catalyst rules (design conclusion of SURVEY.md §4).

@@ -109,9 +109,11 @@ def canonicalize_one(url: str | None) -> str | None:
         port = parts.port
     except ValueError:
         port = None
-    netloc = host
+    # hostname drops an IPv6 literal's brackets; without them the port
+    # and the address's own colons run together
+    netloc = f"[{host}]" if ":" in host else host
     if port is not None and str(port) != _DEFAULT_PORTS.get(scheme, ""):
-        netloc = f"{host}:{port}"
+        netloc = f"{netloc}:{port}"
     path = _normalize_percent(_remove_dot_segments(parts.path))
     if not path:
         path = "/"

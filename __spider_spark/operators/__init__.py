@@ -1,2 +1,2 @@
 """Relational operators: URL-seen dedup, politeness, robots, dedup family,
-similarity search, multimodal plumbing."""
+similarity search."""

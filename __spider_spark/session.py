@@ -46,6 +46,14 @@ def _package_zip() -> str:
     return str(out)
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical memory, in whole GiB, at least 1g: local
+    mode runs every task inside the driver JVM, and a fixed default larger
+    than the machine lets the heap grow until the kernel kills it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 2 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "__spider_spark",
     master: str | None = None,
@@ -77,7 +85,8 @@ def get_spark(
         # partition-size discipline for the 100 TB case: bounded input splits
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # local mode = driver-only: one JVM holds everything
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions",
                 os.environ.get("SPIDER_EXTRA_JAVA", ""))

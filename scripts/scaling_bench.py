@@ -102,7 +102,7 @@ def main() -> None:
             cmd,
             capture_output=True, text=True, check=True, cwd=str(REPO),
             env={**_os.environ,
-                 "SPARK_DRIVER_MEM": "8g" if mode == "cluster" else "32g",
+                 **({"SPARK_DRIVER_MEM": "8g"} if mode == "cluster" else {}),
                  "PYSPARK_PYTHON": sys.executable},
         )
         wall = time.perf_counter() - t0

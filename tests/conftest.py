@@ -19,9 +19,8 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    # one JVM runs the whole suite: cap its heap well inside the RAM of a
-    # small box, where the library's 32g default lets it grow until the
-    # kernel's OOM killer ends the session mid-suite
+    # one JVM runs the whole suite: a fixed heap cap keeps its footprint
+    # the same on every box instead of half of whatever RAM it has
     s = get_spark(app_name="__spider_spark-tests", master="local[4]",
                   shuffle_partitions=8,
                   extra_conf={"spark.driver.memory": "8g"})

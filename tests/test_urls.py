@@ -35,6 +35,10 @@ CASES = [
     ("Example.com/x", "http://example.com/x"),
     # whitespace
     ("  http://example.com/a  ", "http://example.com/a"),
+    # IPv6 literals keep their brackets, with or without a port
+    ("http://[2001:db8::1]/x", "http://[2001:db8::1]/x"),
+    ("http://[2001:db8::1]:8080/x", "http://[2001:db8::1]:8080/x"),
+    ("HTTP://[2001:DB8::A]:80/y", "http://[2001:db8::a]/y"),
 ]
 
 
@@ -46,6 +50,15 @@ def test_canonicalize_cases():
 def test_host_of():
     assert host_of_one("HTTP://WWW.Example.COM:80/x") == "www.example.com"
     assert host_of_one("example.com/x") == "example.com"
+    # distinct IPv6 hosts keep distinct politeness budgets
+    a, b = (canonicalize_one(f"http://[2001:db8::{n}]:8080/x") for n in (1, 2))
+    assert host_of_one(a) == "2001:db8::1"
+    assert host_of_one(b) == "2001:db8::2"
+
+
+_IPV6_HOSTS = st.builds(
+    lambda addr, upper, port: f"[{str(addr).upper() if upper else addr}]{port}",
+    st.ip_addresses(v=6), st.booleans(), st.sampled_from(["", ":80", ":8080"]))
 
 
 @settings(max_examples=200, deadline=None)
@@ -53,8 +66,11 @@ def test_host_of():
     st.builds(
         lambda scheme, host, path, q: f"{scheme}://{host}/{path}?{q}",
         st.sampled_from(["http", "HTTP", "https"]),
-        st.text(alphabet=string.ascii_letters + string.digits + ".-",
-                min_size=1, max_size=20).filter(lambda s: not s.startswith("-")),
+        st.one_of(
+            st.text(alphabet=string.ascii_letters + string.digits + ".-",
+                    min_size=1, max_size=20
+                    ).filter(lambda s: not s.startswith("-")),
+            _IPV6_HOSTS),
         st.text(alphabet=string.ascii_letters + string.digits + "/._~%25",
                 max_size=30),
         st.text(alphabet=string.ascii_letters + string.digits + "=&%41",
