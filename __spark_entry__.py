@@ -126,8 +126,7 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(".example.com/c/"), F.col("c_custkey"),
         ).alias("u")
     ).select(url_hash_col(F.col("u")).alias("url_hash"))
-    wave = clip_wave(filter_unseen(frontier, seen), None,
-                     default_budget=3, salt_buckets=8)
+    wave = clip_wave(filter_unseen(frontier, seen), None, default_budget=3)
     # parallel deterministic total order — a bare Window.orderBy would pull
     # the whole wave through ONE task (the exact wall operators/order.py
     # removes from the crawl path)
@@ -257,7 +256,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.concat(F.lit("user"), F.col("user_id")).alias("host"),
             F.col("value").alias("priority"),
         )
-        wave = clip_wave(ev, None, default_budget=3, salt_buckets=8)
+        wave = clip_wave(ev, None, default_budget=3)
         return wave.select(F.col("host"), F.col("url_hash"),
                            F.round(F.col("priority"), 2).alias("priority_r"))
     q["q09_politeness_clip"] = q09

@@ -7,7 +7,7 @@ surveyed in SURVEY.md) as an idiomatic Spark engine:
   canonicalization, hashing, HTML text extraction, language-ID, quality
   scoring, token counting, fingerprinting, vector math.
 - ``operators/``  — relational operators: URL-seen anti-join + partitioned
-  Bloom filter, politeness budget clipping (salted window rank), dedup
+  Bloom filter, politeness budget clipping (one per-host top-k window), dedup
   family (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity
   search (brute-force + persisted-bucket LSH + k-means IVF ANN), robots
   rules dim, host aliasing, retry/quarantine audit, link-graph PageRank,

@@ -53,21 +53,16 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     would fit in one task wave anyway). A 100 TB corpus fails both —
     thousands of row groups already feed every core — so the at-scale
     path never pays the extra exchange."""
-    try:
-        sess = df.sparkSession
-        target = sess.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() >= max(2, target // 2):
-            return df
-        try:
-            max_bytes = int(sess.conf.get(
-                "spark.sql.files.maxPartitionBytes"))
-        except ValueError:
-            max_bytes = 128 * 1024 * 1024
-        size = int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-        if size > target * max_bytes:
-            return df
-    except Exception:
+    sess = df.sparkSession
+    target = sess.sparkContext.defaultParallelism
+    qe = df._jdf.queryExecution()
+    # both read on the JVM side: the planned RDD's partition count (no
+    # Python RDD), and the typed byte size (no string parsing)
+    if qe.toRdd().getNumPartitions() >= max(2, target // 2):
+        return df
+    max_bytes = sess._jsparkSession.sessionState().conf() \
+        .filesMaxPartitionBytes()
+    if qe.optimizedPlan().stats().sizeInBytes() > target * max_bytes:
         return df
     return df.repartition(target)
 

@@ -1,4 +1,4 @@
-"""Politeness budget clipping: salted two-phase top-k per host.
+"""Politeness budget clipping: one top-k window per host.
 
 Reference analogue: throughput throttling via ``CONCURRENT_REQUESTS=4..6`` /
 ``DOWNLOAD_DELAY=2..3s`` (/root/reference/settings.py:32,37-38) plus ad-hoc
@@ -9,14 +9,14 @@ host per scheduling round**, picked deterministically by
 any parallelism (SURVEY.md §2.5/O3).
 
 Skew (SURVEY.md §7 hard part (e)): a hot host holding 50% of the frontier
-would put 50% of rows in one window partition. Salting fixes the
-*parallelism*, not the *budget*: phase 1 ranks within ``(host, salt)`` where
-``salt = pmod(url_hash, S)`` and keeps ``budget`` rows per salt bucket
-(a safe over-selection of ≤ budget*S per host, each bucket processed on a
-different core/executor); phase 2 re-ranks only those ≤ budget*S survivors
-per *unsalted* host and keeps ``budget``. Phase-2 partitions are tiny by
-construction, so the hot host can no longer straggle a stage. AQE skew-join
-handling remains on as a backstop (session.py).
+would put 50% of rows in one window partition. Besides ``__rn <=
+__budget`` the filter carries the literal ``__rn <= max_budget``, the
+largest budget in force, which never drops a row but lets Spark plan a
+``WindowGroupLimit``: a partial top-k per map partition before the
+``host`` exchange, so the hot host ships at most ``max_budget`` rows per
+map task. Spark plans it for bounds up to
+``spark.sql.optimizer.windowGroupLimitThreshold`` (1000); above, the
+clip is a plain window. AQE skew handling stays on as a backstop.
 
 Budgets come from a small per-host config relation (FIXTURES.md §5)
 broadcast-joined onto the frontier (reference analogue: the broadcast
@@ -34,31 +34,30 @@ def clip_wave(
     frontier: DataFrame,
     budgets: DataFrame | None = None,
     default_budget: int = 4,
-    salt_buckets: int = 8,
+    salt_buckets: int | None = None,  # ignored: kept while perfbench passes it
+    *,
+    max_budget: int | None = None,
 ) -> DataFrame:
     """Select this round's fetch wave: ≤ budget(host) URLs per host,
     deterministic order (priority DESC, url_hash ASC). Input must carry
-    (host, url_hash, priority); all columns pass through."""
-    df = frontier
-    if budgets is not None:
-        df = df.join(F.broadcast(budgets), "host", "left").withColumn(
+    (host, url_hash, priority); all columns pass through. ``max_budget``
+    is the largest of ``budgets`` and ``default_budget`` (the latter when
+    ``budgets`` is None); without it the rank has no literal bound."""
+    if budgets is None:
+        df = frontier.withColumn("__budget", F.lit(default_budget))
+        max_budget = default_budget
+    else:
+        df = frontier.join(F.broadcast(budgets), "host", "left").withColumn(
             "__budget", F.coalesce(F.col("budget"), F.lit(default_budget))
         ).drop("budget")
-    else:
-        df = df.withColumn("__budget", F.lit(default_budget))
-
-    salt = F.pmod(F.col("url_hash"), F.lit(salt_buckets))
-    w1 = Window.partitionBy("host", salt).orderBy(
+    w = Window.partitionBy("host").orderBy(
         F.col("priority").desc(), F.col("url_hash").asc()
     )
-    survivors = df.withColumn("__rn1", F.row_number().over(w1)).filter(
-        F.col("__rn1") <= F.col("__budget")
-    )
-    w2 = Window.partitionBy("host").orderBy(
-        F.col("priority").desc(), F.col("url_hash").asc()
-    )
+    keep = F.col("__rn") <= F.col("__budget")
+    if max_budget is not None:
+        keep &= F.col("__rn") <= F.lit(max_budget)
     return (
-        survivors.withColumn("__rn2", F.row_number().over(w2))
-        .filter(F.col("__rn2") <= F.col("__budget"))
-        .drop("__rn1", "__rn2", "__budget")
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(keep)
+        .drop("__rn", "__budget")
     )

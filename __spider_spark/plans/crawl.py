@@ -26,8 +26,8 @@ Scale notes (the 100 TB / 10^10-URL case):
   * scheduling never touches ``html`` — the fetch join reads it only for
     the politeness-clipped wave (column-pruning discipline, SURVEY.md §4);
   * every join/agg keys on ``url_hash`` (long), never on url strings;
-  * the hot-host frontier skew is neutralized in the politeness clip
-    (salted two-phase top-k), and the seen anti-join is Bloom-prefiltered;
+  * the hot-host frontier skew is cut map-side, before the politeness
+    clip's exchange, and the seen anti-join is Bloom-prefiltered;
   * on a real cluster the pages store and seen table are bucketed by
     ``url_hash`` so the fetch join and anti-join co-locate without a
     full shuffle of the big side.
@@ -35,11 +35,10 @@ Scale notes (the 100 TB / 10^10-URL case):
 
 from __future__ import annotations
 
-import functools
 from dataclasses import dataclass, field
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import extract_page
@@ -104,7 +103,7 @@ class CrawlConfig:
     default_budget: int = 4
     budgets: dict[str, int] = field(default_factory=dict)  # host -> budget
     robots: dict[str, str] = field(default_factory=dict)   # host -> robots.txt
-    salt_buckets: int = 8
+    salt_buckets: int | None = None  # ignored: kept while perfbench passes it
     # scheduling-round wall budget used to turn robots Crawl-delay
     # directives into per-host budgets (reference analogue: DOWNLOAD_DELAY)
     round_seconds: float = 60.0
@@ -391,40 +390,36 @@ def _budgets_df(spark: SparkSession, cfg: CrawlConfig,
     when cfg.budget_carry) makes the robots-derived budgets schedule-
     aware — see budgets_from_rules; explicit config budgets are per-round
     constants either way."""
-    parts = []
-    if rules_df is not None:
-        parts.append(
-            budgets_from_rules(rules_df, cfg.round_seconds, round_k)
-            .withColumn("__prec", F.lit(0)))
-    if cfg.budgets:
-        parts.append(
-            spark.createDataFrame(list(cfg.budgets.items()),
-                                  "host string, budget int")
-            .withColumn("__prec", F.lit(1)))
-    if not parts:
-        return None
-    merged = functools.reduce(DataFrame.unionByName, parts)
-    w = Window.partitionBy("host").orderBy(F.col("__prec").desc())
-    return (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__prec")
-    )
+    explicit = (spark.createDataFrame(list(cfg.budgets.items()),
+                                      "host string, budget int")
+                if cfg.budgets else None)
+    if rules_df is None:
+        return explicit
+    derived = budgets_from_rules(rules_df, cfg.round_seconds, round_k)
+    if explicit is None:
+        return derived
+    return (derived.filter(~F.col("host").isin(list(cfg.budgets)))
+            .unionByName(explicit))
+
+
+def _max_budget(cfg: CrawlConfig, budgets_df: DataFrame | None) -> int:
+    """The largest budget in force, clip_wave's literal rank bound."""
+    if budgets_df is None:
+        return cfg.default_budget
+    return budgets_df.select(F.greatest(
+        F.max("budget"), F.lit(cfg.default_budget))).first()[0]
 
 
 def _rules_dims(spark: SparkSession, cfg: CrawlConfig, robots
-                ) -> tuple[DataFrame | None, DataFrame | None]:
+                ) -> tuple[DataFrame | None, DataFrame | None, int]:
     """The robots rules dim and the budget dim derived from it, persisted
     so ``parse_robots_udf`` runs once per rules version, not in every plan
     that reads them (the gate's broadcast, and the budget dim's filter and
-    projection, each evaluate it). ``persist`` keeps lineage, so a lost
-    block is recomputed — ``localCheckpoint`` would not survive executor
-    loss. The budget dim is read only through a broadcast and is cached as
-    one partition: AQE does not coalesce a cached plan's output, so its
-    window shuffle would otherwise keep ``spark.sql.shuffle.partitions``
-    partitions and every round's broadcast would run that many tasks.
-    budget_carry budgets change every round and are derived per round
-    instead."""
+    projection, each evaluate it), and the largest budget in force, whose
+    job fills the budget dim's cache. ``persist`` keeps lineage, so a lost
+    block is recomputed. The budget dim is only broadcast and is cached as
+    one partition, so each round's broadcast is one task. budget_carry
+    budgets change every round and are derived per round instead."""
     rules_df = robots_rules_df(spark, robots)
     if rules_df is not None:
         rules_df = rules_df.persist()
@@ -432,7 +427,7 @@ def _rules_dims(spark: SparkSession, cfg: CrawlConfig, robots
                   else _budgets_df(spark, cfg, rules_df))
     if budgets_df is not None:
         budgets_df = budgets_df.coalesce(1).persist()
-    return rules_df, budgets_df
+    return rules_df, budgets_df, _max_budget(cfg, budgets_df)
 
 
 def _unpersist(*dfs: DataFrame | None) -> None:
@@ -607,6 +602,7 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
               cfg: CrawlConfig, bloom: PartitionedSketch | None = None,
               rules_df: DataFrame | None = None,
               budgets_df: DataFrame | None = None,
+              max_budget: int | None = None,
               flaky_df: DataFrame | None = None,
               alias_df: DataFrame | None = None,
               detail_idx: DataFrame | None = None) -> dict | None:
@@ -661,7 +657,7 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
         #    (bucket counts and ranked rows), which would otherwise run the
         #    clip chain twice; budget-bounded, so the cache is wave-sized.
         clipped = clip_wave(allowed, budgets_df, cfg.default_budget,
-                            cfg.salt_buckets).persist()
+                            max_budget=max_budget).persist()
         cached.append(clipped)
         # parallel total order (a bare Window.orderBy would funnel the wave
         # through one task); identical ranks at any parallelism
@@ -1022,7 +1018,8 @@ def run_crawl(spark: SparkSession, lake: Lakehouse, pages: DataFrame,
         # session-state dims, parsed distributed once per rules version;
         # robots_refresh (S14/S15 analogue) may swap in fresh rules between
         # rounds, and then the old pair is released
-        rules_df, budgets_df = _rules_dims(spark, cfg, cfg.robots or None)
+        rules_df, budgets_df, max_budget = _rules_dims(
+            spark, cfg, cfg.robots or None)
         flaky_df = _flaky_df(spark, cfg)
         out = []
         while lake.latest_round() < n_rounds:
@@ -1030,16 +1027,18 @@ def run_crawl(spark: SparkSession, lake: Lakehouse, pages: DataFrame,
                 refreshed = cfg.robots_refresh(spark, lake.latest_round() + 1)
                 if refreshed is not None:
                     _unpersist(rules_df, budgets_df)
-                    rules_df, budgets_df = _rules_dims(spark, cfg, refreshed)
+                    rules_df, budgets_df, max_budget = _rules_dims(
+                        spark, cfg, refreshed)
             if cfg.budget_carry:
                 # the budget dim is a pure function of the round number — a
                 # JVM-only projection of the cached rules, no state
                 budgets_df = _budgets_df(spark, cfg, rules_df,
                                          round_k=lake.latest_round() + 1)
+                max_budget = _max_budget(cfg, budgets_df)
             row = run_round(spark, lake, idx, cfg, bloom,
                             rules_df=rules_df, budgets_df=budgets_df,
-                            flaky_df=flaky_df, alias_df=alias_df,
-                            detail_idx=detail_idx)
+                            max_budget=max_budget, flaky_df=flaky_df,
+                            alias_df=alias_df, detail_idx=detail_idx)
             if row is None:
                 break
             out.append(row)

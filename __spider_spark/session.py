@@ -2,7 +2,7 @@
 
 Defaults target the sandbox (single JVM, local[N]) but every knob is the one
 you would set on a 1000-executor cluster: AQE on (skew-join splitting is the
-backstop behind our explicit host-salting), Arrow execution for pandas UDFs,
+backstop behind the politeness clip's map-side per-host limit), Arrow execution for pandas UDFs,
 explicit shuffle partitioning, and a pinned session timezone so timestamp
 formatting is deterministic (the reference pins Asia/Shanghai wall-clock
 stamps, ctripSpider.py:158-159 — we pin UTC for reproducibility).

@@ -104,8 +104,7 @@ def bench_crawl(spark) -> tuple[float, float, int]:
         "overwrite").parquet(pages_path)
     pages = spark.read.parquet(pages_path)
     lake = Lakehouse(tempfile.mkdtemp(prefix="bench_lake_"))
-    cfg = CrawlConfig(default_budget=CRAWL_SEEDS, salt_buckets=16,
-                      bloom_parts=16)
+    cfg = CrawlConfig(default_budget=CRAWL_SEEDS, bloom_parts=16)
     seeds = seeds_df(spark, CRAWL_PAGES, CRAWL_SEEDS, 64)
     t0 = time.perf_counter()
     metrics = run_crawl(spark, lake, pages, seeds, cfg, CRAWL_ROUNDS)

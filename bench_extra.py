@@ -119,8 +119,7 @@ def cmd_crawl() -> None:
     results = []
     for _ in range(RUNS):
         lake = Lakehouse(tempfile.mkdtemp(prefix="bx_lake_"))
-        cfg = CrawlConfig(default_budget=n_seeds, salt_buckets=16,
-                          bloom_parts=16)
+        cfg = CrawlConfig(default_budget=n_seeds, bloom_parts=16)
         seeds = seeds_df(spark, n_pages, n_seeds, 64)
         t0 = time.perf_counter()
         metrics = run_crawl(spark, lake, pages, seeds, cfg, n_rounds)

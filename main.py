@@ -42,7 +42,7 @@ def main() -> None:
 
     pages = spark.read.parquet(args.pages_parquet)
     lake = Lakehouse(args.lake)
-    cfg = CrawlConfig(default_budget=args.budget, salt_buckets=16)
+    cfg = CrawlConfig(default_budget=args.budget)
     seeds = seeds_df(spark, args.n_pages, args.seeds, 64)
     metrics = run_crawl(spark, lake, pages, seeds, cfg, args.rounds)
     for row in metrics:

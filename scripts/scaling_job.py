@@ -89,7 +89,7 @@ def main() -> None:
     # curate=True = the production shape: lang-ID/quality/token-count/
     # fingerprint stamped per fetched page in the same pass (all JVM
     # Column exprs) — the work a 100 TB crawl actually does per URL
-    cfg = CrawlConfig(default_budget=n_seeds, salt_buckets=16, bloom_parts=16,
+    cfg = CrawlConfig(default_budget=n_seeds, bloom_parts=16,
                       bloom_inline_max=1 << 20, curate=True)
     seeds = seeds_df(spark, n_pages, n_seeds, 64)
     # input staging, NOT timed: the bucketed page index is built once per

@@ -758,9 +758,9 @@ def test_crawl_that_raises_releases_its_caches(spark, monkeypatch):
     lake.destroy()
 
 
-# Spark jobs each round of the 3-round crawl below launched before its
-# optional features moved out of run_round (counted the same way).
-JOBS_PER_ROUND = {"robots": [30, 27, 27], "no_robots": [25, 23, 23]}
+# Spark jobs each round of the 3-round crawl below launches with the
+# one-window politeness clip (counted the same way, identical on two runs).
+JOBS_PER_ROUND = {"robots": [26, 26, 26], "no_robots": [22, 22, 22]}
 
 
 @pytest.mark.parametrize("variant", sorted(JOBS_PER_ROUND))

@@ -20,6 +20,7 @@ from __spider_spark.operators.dedup import (
     minhash_signatures,
     near_dedup_keep,
     ngram_jaccard_pairs,
+    spread_small_input,
 )
 
 
@@ -200,3 +201,17 @@ def test_lsh_band_join_skew_split(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_spread_small_input(spark, tmp_path):
+    """A one-file parquet input (one row group, one scan task) is spread
+    over every core; an input that already has at least half that many
+    partitions comes back as the same object."""
+    target = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "one")
+    spark.range(1000).coalesce(1).write.parquet(path)
+    one = spark.read.parquet(path)
+    assert one.rdd.getNumPartitions() == 1
+    assert spread_small_input(one).rdd.getNumPartitions() == target
+    wide = spark.range(0, 1000, numPartitions=max(2, target // 2))
+    assert spread_small_input(wide) is wide

@@ -18,8 +18,7 @@ def _crawl(spark, parts: int):
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
         lake = Lakehouse(tempfile.mkdtemp(prefix=f"lake_par{parts}_"))
-        cfg = CrawlConfig(default_budget=5, salt_buckets=4,
-                          budgets={"host0.test": 2})
+        cfg = CrawlConfig(default_budget=5, budgets={"host0.test": 2})
         run_crawl(spark, lake, generate_pages(spark, 300, 9),
                   seeds_df(spark, 300, 25, 9), cfg, 3)
         res = lake.read(spark, "results")

@@ -81,15 +81,31 @@ def test_rollup_partial_aggregation(spark, sf_dir):
 
 
 def test_politeness_clip_stays_jvm_side(spark):
-    """The budget clip is windows + filters only — no Python UDF stages
-    (ArrowEvalPython/BatchEvalPython) in its plan."""
+    """The budget clip is one window + filters only — no Python UDF stages
+    (ArrowEvalPython/BatchEvalPython) in its plan, one exchange on host and
+    no salt. A bound up to the group-limit threshold brings a map-side
+    WindowGroupLimit before that exchange; one past it does not."""
     from __spider_spark.operators.politeness import clip_wave
+    threshold = int(spark.conf.get(
+        "spark.sql.optimizer.windowGroupLimitThreshold"))
     df = spark.createDataFrame(
         [("http://a/1", 1, "a", 1.0)],
         "url string, url_hash long, host string, priority double")
-    plan = _plan(clip_wave(df, None, 4, 8))
-    assert "EvalPython" not in plan
-    assert "Window" in plan
+    budgets = spark.createDataFrame([("a", 2)], "host string, budget int")
+    for bound in (4, threshold, threshold + 1):
+        clipped = clip_wave(df, budgets, bound, max_budget=bound)
+        plan = _plan(clipped)
+        assert "EvalPython" not in plan
+        assert "Window" in plan
+        executed = clipped._jdf.queryExecution().executedPlan().toString()
+        assert executed.count("Exchange hashpartitioning(") == 1
+        assert "Exchange hashpartitioning(host#" in executed
+        assert "pmod" not in executed
+        limited = bound <= threshold
+        assert ("WindowGroupLimit" in executed) == limited, executed
+        # the partial limit runs map-side, below the exchange
+        below = executed.split("Exchange hashpartitioning(")[1]
+        assert (f"row_number(), {bound}, Partial" in below) == limited
 
 def test_alias_rewrite_broadcasts(spark):
     """The host-alias dim must reach the frontier as a broadcast hash

@@ -1,4 +1,4 @@
-"""Politeness clip: ≤ budget per host, deterministic, salt-invariant (SURVEY §5.1);
+"""Politeness clip: ≤ budget per host, deterministic, a per-host top-k (SURVEY §5.1);
 the wave's global fetch-order rank."""
 
 from __future__ import annotations
@@ -26,27 +26,41 @@ def test_budget_respected_and_deterministic(spark):
     df = _frontier(spark)
     budgets = spark.createDataFrame(
         [("hot.test", 2)], "host string, budget int")
-    wave = clip_wave(df, budgets, default_budget=3, salt_buckets=4)
+    wave = clip_wave(df, budgets, default_budget=3)
     per_host = {r["host"]: r["n"] for r in
                 wave.groupBy("host").agg(F.count("*").alias("n")).collect()}
     assert per_host["hot.test"] == 2
     assert all(v <= 3 for h, v in per_host.items() if h != "hot.test")
 
 
-def test_salting_does_not_change_selection(spark):
-    """Two-phase salted top-k == unsalted top-k (salt changes parallelism,
-    not the result — SURVEY.md §7 hard part (e))."""
-    df = _frontier(spark, n=400)
-    picks = []
-    for s in (1, 4, 16):
-        w = clip_wave(df, None, default_budget=5, salt_buckets=s)
-        picks.append(sorted(r.url_hash for r in w.select("url_hash").collect()))
-    assert picks[0] == picks[1] == picks[2]
+@pytest.mark.parametrize("default,below,above,limited",
+                         [(3, 2, 5, True), (2_000, 150, 2_500, False)])
+def test_clip_is_per_host_topk(spark, default, below, above, limited):
+    """One host window with the literal bound == a per-host top-k by
+    (priority DESC, url_hash ASC) computed in Python, with the bound below
+    the group-limit threshold (map-side limit planned) and above it (plain
+    window); one budget row above the default and one below."""
+    threshold = int(spark.conf.get(
+        "spark.sql.optimizer.windowGroupLimitThreshold"))
+    assert (above <= threshold) == limited
+    df = _frontier(spark, hot_frac=0.6)
+    budget = {"hot.test": below, "cold0.test": above}
+    budgets = spark.createDataFrame(list(budget.items()),
+                                    "host string, budget int")
+    wave = clip_wave(df, budgets, default, max_budget=above)
+    got = sorted(r.url_hash for r in wave.select("url_hash").collect())
+    by_host = {}
+    for r in df.collect():
+        by_host.setdefault(r.host, []).append((-r.priority, r.url_hash))
+    want = sorted(h for host, rows in by_host.items()
+                  for _, h in sorted(rows)[:budget.get(host, default)])
+    assert got == want
+    assert len(by_host["hot.test"]) > below  # the hot host is clipped
 
 
 def test_selection_is_topk_by_priority_then_hash(spark):
     df = _frontier(spark, n=100, hot_frac=1.0)
-    wave = clip_wave(df, None, default_budget=4, salt_buckets=8)
+    wave = clip_wave(df, None, default_budget=4)
     got = sorted(((r.priority, r.url_hash) for r in wave.collect()),
                  key=lambda t: (-t[0], t[1]))
     rows = sorted(((r.priority, r.url_hash) for r in df.collect()),
