@@ -17,7 +17,6 @@ from __future__ import annotations
 from html.parser import HTMLParser
 
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -25,6 +24,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .worker import pandas_udf
 
 DETAIL_SCHEMA = ArrayType(StructType([
     StructField("cabin", StringType()),

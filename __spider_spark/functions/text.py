@@ -34,8 +34,9 @@ from html import unescape
 from html.parser import HTMLParser
 
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+from .worker import pandas_udf
 
 _WS_RE = re.compile(r"\s+")
 

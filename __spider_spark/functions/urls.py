@@ -32,8 +32,9 @@ from urllib.parse import urljoin, urlsplit, urlunsplit
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
+
+from .worker import pandas_udf
 
 _UNRESERVED = set(
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-._~"

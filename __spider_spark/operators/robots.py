@@ -33,7 +33,6 @@ from dataclasses import dataclass, field
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -42,6 +41,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..functions.worker import pandas_udf
 
 
 @dataclass

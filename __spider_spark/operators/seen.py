@@ -39,8 +39,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
+
+from ..functions.worker import drop_zip_finders, pandas_udf
 
 
 class Bloom:
@@ -143,6 +144,7 @@ class PartitionedSketch:
         empty = self._empty
 
         def build(pdf: pd.DataFrame) -> pd.DataFrame:
+            drop_zip_finders()  # applyInPandas bypasses the package pandas_udf
             keys = pdf[key_col].to_numpy(dtype=np.int64)
             sketch = empty()
             sketch.add_many(keys)

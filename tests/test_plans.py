@@ -107,6 +107,50 @@ def test_politeness_clip_stays_jvm_side(spark):
         below = executed.split("Exchange hashpartitioning(")[1]
         assert (f"row_number(), {bound}, Partial" in below) == limited
 
+
+def test_package_udfs_are_what_spark_saw_before(spark):
+    """The package's ``pandas_udf`` wraps each body (functions/worker.py),
+    yet Spark sees the same scalar Arrow UDFs under the same names, and
+    discovery's Arrow eval still names resolve_link and url_host."""
+    from pyspark.util import PythonEvalType
+
+    from __spider_spark.functions.detail import extract_detail
+    from __spider_spark.functions.text import extract_page
+    from __spider_spark.functions.urls import (
+        canonicalize_url,
+        resolve_link,
+        url_host,
+    )
+    from __spider_spark.operators.robots import (
+        _allowed_joined,
+        parse_robots_udf,
+    )
+    from __spider_spark.operators.seen import SeenBloom
+    udfs = {"canonicalize_url": canonicalize_url,
+            "resolve_link": resolve_link, "url_host": url_host,
+            "extract_page": extract_page,
+            "parse_robots_udf": parse_robots_udf,
+            "_allowed_joined": _allowed_joined,
+            "maybe_seen": SeenBloom(4, 1 << 10).udf(spark),
+            "extract_detail": extract_detail}
+    for name, u in udfs.items():
+        assert u.evalType == PythonEvalType.SQL_SCALAR_PANDAS_UDF, name
+        assert u.__name__ == name
+    # the discovery shape of plans/crawl.py: resolve, drop nulls, host
+    links = spark.createDataFrame([("http://a.test/x", "../y")],
+                                  "parent_url string, raw_link string")
+    discovered = (
+        links.select(resolve_link(F.col("parent_url"),
+                                  F.col("raw_link")).alias("url"))
+        .filter(F.col("url").isNotNull())
+        .select("*", url_host(F.col("url")).alias("host")))
+    executed = discovered._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython [resolve_link(" in executed
+    assert "url_host(resolve_link(" in executed
+    assert [tuple(r) for r in discovered.collect()] == [
+        ("http://a.test/y", "a.test")]
+
+
 def test_alias_rewrite_broadcasts(spark):
     """The host-alias dim must reach the frontier as a broadcast hash
     join — a shuffle join on host over a 10^10-row frontier would be a

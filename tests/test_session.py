@@ -3,12 +3,16 @@
 from __future__ import annotations
 
 import ast
+import importlib
 import os
+import sys
 import tempfile
 import time
 import zipfile
+import zipimport
 from pathlib import Path
 
+from __spider_spark.functions.worker import drop_zip_finders
 from __spider_spark.session import _default_driver_memory, _package_zip
 
 REPO = Path(__file__).resolve().parents[1]
@@ -74,6 +78,65 @@ def test_every_package_module_is_reachable():
     unreached = sorted(m for m, p in package.items()
                        if p.name != "__init__.py" and m not in reached)
     assert not unreached, f"nothing outside the tests imports {unreached}"
+
+
+def test_package_udfs_use_the_package_decorator():
+    """Every Arrow UDF in the package is made with
+    ``functions/worker.pandas_udf``, which drops the worker's zip finders;
+    one made with pyspark's ``pandas_udf`` or ``udf`` would re-read
+    pyspark.zip and the spark-core jar in every task again."""
+    banned = {"pandas_udf", "udf"}
+    offenders = []
+    for path in sorted((REPO / "__spider_spark").rglob("*.py")):
+        rel = path.relative_to(REPO).as_posix()
+        if rel == "__spider_spark/functions/worker.py":
+            continue
+        tree = ast.parse(path.read_text())
+        aliases = set()  # names bound to pyspark.sql.functions, e.g. F
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            if node.module == "pyspark.sql.functions":
+                offenders += [f"{rel}: import {a.name}"
+                              for a in node.names if a.name in banned]
+            elif node.module == "pyspark.sql":
+                aliases.update(a.asname or a.name for a in node.names
+                               if a.name == "functions")
+        offenders += [
+            f"{rel}:{node.lineno}: {node.value.id}.{node.attr}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute) and node.attr in banned
+            and isinstance(node.value, ast.Name) and node.value.id in aliases]
+    assert not offenders, offenders
+
+
+def test_drop_zip_finders(tmp_path):
+    """Only zip finders go: other finders, loaded modules and later
+    imports from the same zip are unaffected."""
+    archive = tmp_path / "zipped_mods.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipped_first.py", "X = 1\n")
+        z.writestr("zipped_second.py", "Y = 2\n")
+    saved = list(sys.path)
+    sys.path.insert(0, str(archive))
+    try:
+        first = importlib.import_module("zipped_first")
+        assert isinstance(sys.path_importer_cache[str(archive)],
+                          zipimport.zipimporter)
+        others = {p: f for p, f in sys.path_importer_cache.items()
+                  if not isinstance(f, zipimport.zipimporter)}
+        drop_zip_finders()
+        assert not [p for p, f in sys.path_importer_cache.items()
+                    if isinstance(f, zipimport.zipimporter)]
+        for p, f in others.items():
+            assert sys.path_importer_cache[p] is f, p
+        assert sys.modules["zipped_first"] is first
+        assert importlib.import_module("zipped_second").Y == 2
+    finally:
+        sys.path[:] = saved
+        for m in ("zipped_first", "zipped_second"):
+            sys.modules.pop(m, None)
+        sys.path_importer_cache.pop(str(archive), None)
 
 
 def test_default_driver_memory_fits_the_machine():
