@@ -628,9 +628,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # relation — the driver's hash match is a proof of lossless recall.
     # (q38 slot: see q13 note.)
     def q38(spark, sf):
-        from __spider_spark.operators.dedup import simhash_pairs
+        from __spider_spark.operators.dedup import delta_simhash_pairs
         sim = simhash(_t(spark, sf, "documents"), "text", "doc_id")
-        return simhash_pairs(sim, n_bands=4, max_hamming=3)
+        return delta_simhash_pairs(sim, None, n_bands=4, max_hamming=3)[1]
     q["q38_simhash_pairs"] = q38
 
     # end-to-end near-dedup: LSH candidates -> exact-Jaccard verify ->

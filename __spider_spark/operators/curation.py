@@ -21,7 +21,7 @@ twins (oracle-checked bit-for-bit), and all are single-shuffle-or-less:
   * ``contamination``      — flag corpus docs sharing >= 1 word-k-gram
     with any eval/benchmark doc (the decontamination step before
     training). Shingles reuse the dedup family's extractor
-    (operators/dedup.py:shingles, same DuckDB twin), the join keys on the
+    (operators/dedup.py:shingles_from, same DuckDB twin), the join keys on the
     64-bit ``hash60`` of the shingle (never the string), and the eval
     side is typically tiny -> broadcastable. Scale shape: one explode
     (map-side) + distinct + equi-join on an 8-byte key + one groupBy —

@@ -1,16 +1,24 @@
 """Deduplication family for web-scale corpora.
 
 The crawl engine dedups URLs (operators/seen.py); a training-data pipeline
-must also dedup *content*. Four operators, all shuffle-conscious:
+must also dedup *content*. The operators, all shuffle-conscious:
 
   * exact_dedup        — hash-groupBy on a content fingerprint (1 shuffle)
   * minhash_signatures — word-shingle MinHash, JVM-side md5-derived hashes
   * lsh_candidate_pairs— banded LSH: same-band equi-join (shuffle on small
                           band keys, never O(n²))
   * ngram_jaccard_pairs— exact Jaccard via shingle equi-join + count ratio
+  * near_dedup_keep    — MinHash → LSH → Jaccard verify → keep min id
   * simhash            — 60-bit SimHash via per-bit majority vote
-  * simhash_pairs      — bit-sampling LSH bands over simhash + lossless
-                          bit_count(xor) Hamming verify (pigeonhole regime)
+  * delta_near_dedup / delta_simhash_pairs — the per-wave forms against a
+                          persisted band index (MinHash + Jaccard; SimHash
+                          bands + lossless bit_count(xor) Hamming verify);
+                          with no index they are the batch finders
+
+Every pair finder takes its candidates from one band-collision join,
+``_band_pairs``: the content twin of the crawl's URL-seen set is the
+incremental band index, and a batch run is that index with nothing in it
+yet.
 
 Everything is built from pyspark.sql.functions (no Python in the hot path);
 the hash is the md5-prefix ``hash60`` so the DuckDB oracle can reproduce
@@ -97,16 +105,9 @@ def shingles_from(toks: Column, k: int = 3) -> Column:
     )
 
 
-def shingles(col: Column, k: int = 3) -> Column:
-    """Word k-shingles of the text: array of space-joined k-grams.
-    Docs shorter than k tokens get a single shingle = whole text.
-    For exploding consumers prefer the projected-tokens form —
-    see :func:`shingles_from`."""
-    return shingles_from(tokens(col), k)
-
-
 def shingles_sql(expr: str, k: int = 3) -> str:
-    """DuckDB twin of ``shingles`` (list slicing is 1-based inclusive)."""
+    """DuckDB twin of ``shingles_from(tokens(expr))`` (list slicing is
+    1-based inclusive)."""
     toks = (
         f"CASE WHEN lower(trim({expr})) = '' THEN []::VARCHAR[] "
         f"ELSE regexp_split_to_array(lower(trim({expr})), '\\s+') END"
@@ -185,32 +186,61 @@ def band_keys(sig_df: DataFrame, n_bands: int = 4, rows_per_band: int = 4,
     )
 
 
+def _band_pairs(bands: DataFrame, key_col: str,
+                index_bands: DataFrame | None = None,
+                carry: tuple[str, ...] = ()) -> DataFrame:
+    """Distinct (doc_a, doc_b), doc_a < doc_b, of docs sharing a
+    (band, ``key_col``); each ``carry`` column rides along as
+    ``<col>_a``/``<col>_b``.
+
+    Within ``bands`` this is an equi-join on (band, key) — the only
+    shuffle is on band keys; no cartesian anywhere. The join is hinted
+    sort-merge on purpose: both sides are the SAME band relation, so the
+    planner's broadcast choice would build the whole upstream chain twice
+    (one copy inside the broadcast, one as probe side — two full scans +
+    hash passes, no exchange reuse), while a shuffle join makes the two
+    exchanges canonically identical and ReusedExchange computes the chain
+    ONCE (guide §2.4 "share one exchange"; plan-pinned by
+    tests/test_dedup_scale.py, which also pins AQE skew-splitting of this
+    join under a hot band).
+
+    Given ``index_bands`` (a persisted band index whose doc ids are
+    disjoint from ``bands``'), index ⋈ bands adds the cross pairs: the
+    index side recomputes nothing, and doc_a/doc_b go by id order, not
+    arrival order, so the pairs accumulated over waves equal one call
+    over all docs."""
+    keys = ["band", key_col]
+    a = bands.alias("a").hint("merge")
+    b = bands.alias("b")
+    pairs = (
+        a.join(b, keys)
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"),
+                *[F.col(f"{s}.{c}").alias(f"{c}_{s}")
+                  for s in "ab" for c in carry])
+    )
+    if index_bands is not None:
+        def side(df, name):
+            return df.select(*keys, F.struct("doc_id", *carry).alias(name))
+
+        # structs order by their first field, the doc id
+        cross = side(index_bands, "old").join(side(bands, "new"), keys)
+        lo, hi = F.least("old", "new"), F.greatest("old", "new")
+        pairs = pairs.unionByName(cross.select(
+            lo["doc_id"].alias("doc_a"), hi["doc_id"].alias("doc_b"),
+            *[doc[c].alias(f"{c}_{s}")
+              for s, doc in (("a", lo), ("b", hi)) for c in carry]))
+    return pairs.distinct()
+
+
 def lsh_candidate_pairs(
     sig_df: DataFrame, n_bands: int = 4, rows_per_band: int = 4
 ) -> DataFrame:
     """Banded LSH over MinHash signatures: docs sharing any band collide.
-    Output: distinct (doc_a, doc_b) with doc_a < doc_b.
-
-    The self-join is an equi-join on (band, band_key) — the only shuffle is
-    on band keys; no cartesian anywhere. The join is hinted sort-merge on
-    purpose: both sides are the SAME band relation, so the planner's
-    broadcast choice would build the whole signature chain twice (one copy
-    inside the broadcast, one as probe side — two full scans+md5 passes,
-    no exchange reuse), while a shuffle join makes the two exchanges
-    canonically identical and ReusedExchange computes the signature chain
-    ONCE (guide §2.4 "share one exchange"; plan-pinned by
-    tests/test_dedup_scale.py, which also pins AQE skew-splitting of this
-    join under a hot band)."""
-    bands = band_keys(sig_df, n_bands, rows_per_band)
-    a = bands.alias("a").hint("merge")
-    b = bands.alias("b")
-    return (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    Output: distinct (doc_a, doc_b) with doc_a < doc_b (see
+    :func:`_band_pairs` for the join shape)."""
+    return _band_pairs(band_keys(sig_df, n_bands, rows_per_band), "band_key")
 
 
 def ngram_jaccard_pairs(
@@ -285,69 +315,15 @@ def near_dedup_keep(
     Jaccard verify → keep the lowest id of every near-dup pair.
 
     The 100 TB pipeline shape: the only O(n²)-looking step (Jaccard) runs
-    ONLY on LSH-colliding pairs. Output: (doc_id) of survivors."""
-    sig = minhash_signatures(df, text_col, id_col, n_hashes, k)
-    cand = lsh_candidate_pairs(sig, n_bands, rows_per_band)
-    dup_pairs = ngram_jaccard_pairs(df, text_col, id_col, k, threshold,
-                                    candidates=cand)
+    ONLY on LSH-colliding pairs. The pairs are :func:`delta_near_dedup`'s
+    over an empty index — the whole corpus as one wave. Output: (doc_id)
+    of survivors."""
+    _, dup_pairs = delta_near_dedup(df, df, None, text_col, id_col,
+                                    n_hashes, n_bands, rows_per_band, k,
+                                    threshold)
     losers = dup_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     return df.select(F.col(id_col).alias("doc_id")) \
              .join(losers, "doc_id", "left_anti")
-
-
-def simhash_pairs(
-    sim_df: DataFrame, n_bands: int = 4, max_hamming: int = 3,
-    n_bits: int = 60,
-) -> DataFrame:
-    """SimHash near-dup pairs via bit-sampling LSH: split each simhash
-    into ``n_bands`` contiguous bit-bands; docs sharing ANY band become
-    candidates (equi-join on (band, band_key) — same shuffle shape as
-    :func:`lsh_candidate_pairs`, never O(n²)); verify with
-    ``bit_count(a XOR b) <= max_hamming`` — pure Column exprs, no UDF.
-    Input: (doc_id, simhash) from :func:`simhash`.
-    Output: (doc_a, doc_b, hamming) with doc_a < doc_b.
-
-    Pigeonhole guarantee: ``max_hamming`` differing bits can touch at most
-    ``max_hamming`` bands, so with ``max_hamming < n_bands`` every
-    qualifying pair shares at least one intact band — the band pruning is
-    LOSSLESS, and a brute-force all-pairs Hamming join computes the
-    identical relation (which is exactly what the DuckDB oracle does;
-    hash-equality of the two is a proof of lossless recall). A laxer
-    threshold (max_hamming >= n_bands) turns this into the standard
-    approximate trade-off; the default stays in the exact regime.
-    """
-    if n_bits % n_bands:
-        raise ValueError(f"n_bits={n_bits} not divisible by n_bands={n_bands}")
-    band_bits = n_bits // n_bands
-    mask = (1 << band_bits) - 1
-    bands = sim_df.select(
-        F.col("doc_id"), F.col("simhash"),
-        F.posexplode(F.array(*[
-            F.shiftright(F.col("simhash"), b * band_bits)
-            .bitwiseAND(F.lit(mask)).cast("long")
-            for b in range(n_bands)
-        ])).alias("band", "band_key"),
-    )
-    # merge-hinted for the same reason as lsh_candidate_pairs: identical
-    # shuffle subtrees on both sides -> ReusedExchange computes the
-    # simhash chain once instead of twice (broadcast would fork it)
-    a = bands.alias("a").hint("merge")
-    b = bands.alias("b")
-    cand = (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.col("a.simhash").alias("__sa"),
-                F.col("b.simhash").alias("__sb"))
-        .distinct()
-    )
-    ham = F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb")))
-    return (
-        cand.withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
 
 
 def simhash(df: DataFrame, text_col: str, id_col: str,
@@ -386,7 +362,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str,
 
 # -- incremental (per-wave) near-dedup -----------------------------------
 #
-# near_dedup_keep recomputes signatures over the WHOLE corpus every run —
+# A batch pass recomputes signatures over the WHOLE corpus every run —
 # fine for a batch job, wrong for a crawl that grows 10 TB/day (VERDICT r5
 # next-round #2). The incremental form persists the banded signature index
 # as a lakehouse table (the content analogue of the durable URL seen-set,
@@ -405,7 +381,10 @@ def simhash(df: DataFrame, text_col: str, id_col: str,
 # Union over waves == the full recompute exactly: a pair (a, b) is found
 # when its later doc's wave arrives (same wave -> within; different waves
 # -> cross), and band keys / Jaccard are pure per-doc / per-pair functions
-# — pinned by tests/test_dedup_incremental.py and oracle query q55.
+# — pinned by tests/test_dedup_incremental.py and oracle query q55. The
+# batch finders are the same pass over an empty index: near_dedup_keep is
+# delta_near_dedup(corpus, corpus, None), and the SimHash pairs of a whole
+# corpus are delta_simhash_pairs(corpus, None).
 
 _BAND_COL_RE = re.compile(r"^band_key_h(\d+)_b(\d+)_r(\d+)_k(\d+)$")
 
@@ -451,31 +430,7 @@ def delta_near_dedup(
     sig = minhash_signatures(wave_df, text_col, id_col, n_hashes, k)
     wave_bands = band_keys(sig, n_bands, rows_per_band, key_col=kcol)
 
-    # merge-hinted self-join: ReusedExchange computes the wave's signature
-    # chain once (same rationale as lsh_candidate_pairs)
-    a = wave_bands.alias("a").hint("merge")
-    b = wave_bands.alias("b")
-    cand = (
-        a.join(b, ["band", kcol])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-    )
-    if index_bands is not None:
-        # index ⋈ wave on (band, band_key): the index side never
-        # recomputes anything; at scale both sides are bucketable on the
-        # band key. doc_a/doc_b by id order, not arrival order, so the
-        # accumulated pair set is identical to the full recompute's.
-        cross = (
-            index_bands.select(F.col("doc_id").alias("__old"),
-                               "band", kcol)
-            .join(wave_bands.select(F.col("doc_id").alias("__new"),
-                                    "band", kcol), ["band", kcol])
-            .select(F.least("__old", "__new").alias("doc_a"),
-                    F.greatest("__old", "__new").alias("doc_b"))
-        )
-        cand = cand.unionByName(cross)
-    cand = cand.distinct()
+    cand = _band_pairs(wave_bands, kcol, index_bands)
 
     # exact-Jaccard verify over candidate docs ONLY: restrict the text
     # relation to candidate ids BEFORE the shingle explode, so the corpus
@@ -499,9 +454,8 @@ def simhash_band_col_name(n_bands: int = 4, n_bits: int = 60) -> str:
     return f"sim_band_key_b{n_bands}_n{n_bits}"
 
 
-def simhash_band_keys(sim_df: DataFrame, n_bands: int = 4,
-                      n_bits: int = 60,
-                      key_col: str | None = None) -> DataFrame:
+def simhash_band_keys(sim_df: DataFrame, n_bands: int, n_bits: int,
+                      key_col: str) -> DataFrame:
     """Bit-sampling bands over a (doc_id, simhash) relation:
     (doc_id, simhash, band, <key_col>) — the simhash rides along so the
     Hamming verify needs no lookup. Pure per-doc function (incremental-
@@ -509,8 +463,6 @@ def simhash_band_keys(sim_df: DataFrame, n_bands: int = 4,
     if n_bits % n_bands:
         raise ValueError(
             f"n_bits={n_bits} not divisible by n_bands={n_bands}")
-    if key_col is None:
-        key_col = simhash_band_col_name(n_bands, n_bits)
     band_bits = n_bits // n_bands
     mask = (1 << band_bits) - 1
     return sim_df.select(
@@ -527,14 +479,26 @@ def delta_simhash_pairs(
     wave_sim_df: DataFrame, index_bands: DataFrame | None,
     n_bands: int = 4, max_hamming: int = 3, n_bits: int = 60,
 ) -> tuple[DataFrame, DataFrame]:
-    """Incremental :func:`simhash_pairs`: band the WAVE's simhashes only,
-    collide them against the persisted band index (cross) and themselves
-    (within), verify with ``bit_count(xor) <= max_hamming``. Returns
-    ``(wave_bands, new_pairs)`` — the caller appends the bands to the
-    index. Union over waves == the batch ``simhash_pairs`` exactly, with
-    the same pigeonhole-lossless guarantee (band keys are pure per-doc
-    functions; every qualifying pair still shares an intact band when its
-    later doc arrives). Stamped band column; mixed parameters raise."""
+    """SimHash near-dup pairs via bit-sampling LSH, one wave at a time:
+    split each of the WAVE's simhashes into ``n_bands`` contiguous
+    bit-bands, collide them against the persisted band index (cross) and
+    themselves (within) — docs sharing ANY band become candidates, never
+    O(n²) — and verify with ``bit_count(a XOR b) <= max_hamming``, pure
+    Column exprs, no UDF. Input: (doc_id, simhash) from :func:`simhash`.
+    Returns ``(wave_bands, new_pairs)``, pairs (doc_a, doc_b, hamming)
+    with doc_a < doc_b; the caller appends the bands to the index. With
+    ``index_bands=None`` this is the batch finder over the whole input.
+
+    Pigeonhole guarantee: ``max_hamming`` differing bits can touch at most
+    ``max_hamming`` bands, so with ``max_hamming < n_bands`` every
+    qualifying pair shares at least one intact band — the band pruning is
+    LOSSLESS, and a brute-force all-pairs Hamming join computes the
+    identical relation (which is exactly what the DuckDB oracle does;
+    hash-equality of the two is a proof of lossless recall). A laxer
+    threshold (max_hamming >= n_bands) turns this into the standard
+    approximate trade-off; the default stays in the exact regime. Band
+    keys are pure per-doc functions, so the union over waves equals one
+    batch call. Stamped band column; mixed parameters raise."""
     kcol = simhash_band_col_name(n_bands, n_bits)
     if index_bands is not None:
         stamped = [c for c in index_bands.columns
@@ -544,36 +508,8 @@ def delta_simhash_pairs(
                 f"simhash band index stamped {stamped} but this pass "
                 f"computes {kcol!r} — rebuild or match parameters")
     wave_bands = simhash_band_keys(wave_sim_df, n_bands, n_bits, kcol)
-    # merge-hinted self-join: ReusedExchange computes the wave's band
-    # relation once (same rationale as lsh_candidate_pairs)
-    a = wave_bands.alias("a").hint("merge")
-    b = wave_bands.alias("b")
-    cand = (
-        a.join(b, ["band", kcol])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.col("a.simhash").alias("__sa"),
-                F.col("b.simhash").alias("__sb"))
-    )
-    if index_bands is not None:
-        old = index_bands.select(F.col("doc_id").alias("__oid"),
-                                 F.col("simhash").alias("__osim"),
-                                 "band", kcol)
-        new = wave_bands.select(F.col("doc_id").alias("__nid"),
-                                F.col("simhash").alias("__nsim"),
-                                "band", kcol)
-        cross = old.join(new, ["band", kcol]).select(
-            F.least("__oid", "__nid").alias("doc_a"),
-            F.greatest("__oid", "__nid").alias("doc_b"),
-            F.when(F.col("__oid") < F.col("__nid"), F.col("__osim"))
-             .otherwise(F.col("__nsim")).alias("__sa"),
-            F.when(F.col("__oid") < F.col("__nid"), F.col("__nsim"))
-             .otherwise(F.col("__osim")).alias("__sb"),
-        )
-        cand = cand.unionByName(cross)
-    cand = cand.distinct()
-    ham = F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb")))
+    cand = _band_pairs(wave_bands, kcol, index_bands, carry=("simhash",))
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     pairs = (
         cand.withColumn("hamming", ham.cast("int"))
         .filter(F.col("hamming") <= max_hamming)

@@ -1,6 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, mirroring a production ANN layout:
+Every top-k here is :func:`cosine_topk` over a candidate frame; the ANN
+paths, mirroring a production layout, differ only in which rows they
+hand it:
 
   * ``cosine_topk``      — brute-force exact top-k against a query vector;
     the dot product is JVM-side ``aggregate(zip_with(...))`` (no UDF, no
@@ -11,8 +13,12 @@ Two paths, mirroring a production ANN layout:
     The hyperplanes are derived deterministically from md5, so results are
     reproducible across cluster sizes. This is the 100 TB scale path: the
     bucket join prunes the scan by ~2^n_planes.
+  * ``ivf_topk`` / ``ivf_serve_topk`` — IVF: only the ``n_probe`` clusters
+    whose centroids are nearest the query are scanned. ``ivf_write_index``
+    trains the k-means quantizer and writes the cluster-partitioned table
+    once, so a served probe is a partition-pruned scan.
 
-Both compute in double precision and round to 4 dp so rankings are stable
+All compute in double precision and round to 4 dp so rankings are stable
 across engines (the DuckDB oracle uses list_cosine_similarity on DOUBLE[]).
 """
 
@@ -217,6 +223,20 @@ def ivf_assign(emb_df: DataFrame, centroids: list[list[float]],
     return emb_df.withColumn("ivf_cluster", F.array_max(cells)["cluster"])
 
 
+def _nearest_clusters(query: list[float], centroids: list[list[float]],
+                      n_probe: int) -> list[int]:
+    """The ``n_probe`` centroid indices most cosine-similar to the query,
+    driver-side (ties -> lower index)."""
+    def cos(a: list[float], b: list[float]) -> float:
+        dot = sum(x * y for x, y in zip(a, b))
+        na = math.sqrt(sum(x * x for x in a)) or 1.0
+        nb = math.sqrt(sum(x * x for x in b)) or 1.0
+        return dot / (na * nb)
+
+    return sorted(range(len(centroids)),
+                  key=lambda c: (-cos(query, centroids[c]), c))[:n_probe]
+
+
 def ivf_topk(
     emb_df: DataFrame, query: list[float], k: int = 10,
     n_clusters: int = 8, n_probe: int = 2,
@@ -230,25 +250,10 @@ def ivf_topk(
     ``ivf_cluster`` so a probe is a partition-pruned scan."""
     if centroids is None:
         centroids = ivf_centroids(emb_df, n_clusters, id_col, emb_col)
-
-    def cos(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a)) or 1.0
-        nb = math.sqrt(sum(x * x for x in b)) or 1.0
-        return dot / (na * nb)
-
-    ranked = sorted(range(len(centroids)),
-                    key=lambda c: (-cos(query, centroids[c]), c))
-    probes = ranked[:n_probe]
+    probes = _nearest_clusters(query, centroids, n_probe)
     cand = ivf_assign(emb_df, centroids, emb_col) \
         .filter(F.col("ivf_cluster").isin(probes)).drop("ivf_cluster")
-    if exclude_id is not None:
-        cand = cand.filter(F.col(id_col) != exclude_id)
-    scored = cand.select(
-        F.col(id_col), cosine_sim_col(F.col(emb_col), query).alias("cosine_sim")
-    )
-    return scored.orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc()) \
-                 .limit(k)
+    return cosine_topk(cand, query, k, id_col, emb_col, exclude_id)
 
 
 def ivf_cluster_col_name(n_clusters: int, n_iter: int) -> str:
@@ -261,22 +266,6 @@ def ivf_cluster_col_name(n_clusters: int, n_iter: int) -> str:
 
 
 _IVF_NAME_RE = re.compile(r"^ivf_cluster_k(\d+)_i(\d+)$")
-
-
-def _assign_with_sim(emb_df: DataFrame, centroids: list[list[float]],
-                     emb_col: str = "embedding") -> DataFrame:
-    """Like :func:`ivf_assign` but keeps the winning cosine as ``__sim``
-    (for assignment-quality stats; one pass, same JVM-side argmax)."""
-    cells = F.array(*[
-        F.struct(
-            cosine_sim_col(F.col(emb_col), c).alias("sim"),
-            F.lit(i).alias("cluster"),
-        )
-        for i, c in enumerate(centroids)
-    ])
-    best = F.array_max(cells)
-    return emb_df.withColumn("ivf_cluster", best["cluster"]) \
-                 .withColumn("__sim", best["sim"])
 
 
 def _success_path(spark, store: str):
@@ -309,104 +298,19 @@ def ivf_write_index(
     centroids = ivf_centroids_kmeans(
         emb_df, n_clusters, n_iter, id_col, emb_col)
     ccol = ivf_cluster_col_name(n_clusters, n_iter)
-    assigned = _assign_with_sim(emb_df, centroids, emb_col) \
-        .withColumnRenamed("ivf_cluster", ccol)
-    assigned.drop("__sim").write.mode("overwrite").partitionBy(ccol) \
-        .parquet(store + "/vectors")
+    ivf_assign(emb_df, centroids, emb_col) \
+        .withColumnRenamed("ivf_cluster", ccol) \
+        .write.mode("overwrite").partitionBy(ccol).parquet(store + "/vectors")
     spark.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)],
         "cluster int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(store + "/centroids")
-    # assignment-quality baseline for ivf_append's drift stat: mean cosine
-    # of each vector to its assigned centroid at BUILD time
-    row = assigned.agg(F.count("*").alias("n"),
-                       F.round(F.avg("__sim"), 8).alias("m")).first()
-    spark.createDataFrame(
-        [(int(row["n"]), float(row["m"]), float(row["m"]))],
-        "n_vectors long, mean_assign_sim double, "
-        "build_mean_assign_sim double",
-    ).coalesce(1).write.mode("overwrite").parquet(store + "/stats")
     # Marker goes through the Hadoop FileSystem resolved from the store
     # URI, not local open(): an hdfs:// or s3a:// store gets its marker in
     # the same filesystem as the tables it attests.
     fs, jpath = _success_path(spark, store)
     fs.create(jpath, True).close()
     return centroids
-
-
-def ivf_append(
-    spark, store: str, new_df: DataFrame,
-    id_col: str = "vec_id", emb_col: str = "embedding",
-) -> dict:
-    """Append new vectors to a persisted :func:`ivf_write_index` store
-    WITHOUT retraining (VERDICT r5 next-round #3: the 10 TB/day corpus
-    can't rebuild its ANN index per wave).
-
-    New rows are assigned to the EXISTING centroids (one scan of the new
-    batch only) and appended partitionBy(cluster), so serving stays a
-    partition-pruned scan and serve-after-append ≡ rebuild-at-the-same-
-    centroids (pytest-pinned). The quantizer is deliberately frozen —
-    moving centroids would invalidate every already-partitioned row.
-
-    Drift stat: the batch's mean cosine-to-assigned-centroid is compared
-    against the BUILD-time mean (persisted in ``store/stats``), so callers
-    know when the data has drifted enough to retrain. Returns
-    {"n_appended", "batch_mean_assign_sim", "build_mean_assign_sim",
-    "drift" (build − batch; positive = new vectors fit worse),
-    "mean_assign_sim" (updated running mean over the whole index)}.
-
-    Atomicity: the ``_SUCCESS`` marker is removed before the append and
-    re-created after vectors + stats are both written — a crash mid-append
-    leaves a torn store that :func:`ivf_serve_topk` and a second
-    ``ivf_append`` both refuse to touch."""
-    fs, jpath = _success_path(spark, store)
-    if not fs.exists(jpath):
-        raise ValueError(
-            f"index store {store} has no _SUCCESS marker — torn build or "
-            f"torn append; rebuild with ivf_write_index")
-    cent_rows = spark.read.parquet(store + "/centroids") \
-        .orderBy("cluster").collect()
-    centroids = [[float(x) for x in r["centroid"]] for r in cent_rows]
-    vectors = spark.read.parquet(store + "/vectors")
-    cand_cols = [c for c in vectors.columns if _IVF_NAME_RE.match(c)]
-    if len(cand_cols) != 1 or int(
-            _IVF_NAME_RE.match(cand_cols[0]).group(1)) != len(centroids):
-        raise ValueError(
-            f"stamped cluster column {cand_cols} inconsistent with "
-            f"{len(centroids)} centroids — torn or mixed index")
-    ccol = cand_cols[0]
-    try:
-        stats = spark.read.parquet(store + "/stats").first()
-    except Exception as exc:
-        raise ValueError(
-            f"index store {store} has no stats table (built before append "
-            f"support?) — rebuild with ivf_write_index") from exc
-    assigned = _assign_with_sim(new_df, centroids, emb_col) \
-        .withColumnRenamed("ivf_cluster", ccol) \
-        .select(*vectors.columns, "__sim").cache()
-    fs.delete(jpath, False)
-    assigned.drop("__sim").write.mode("append").partitionBy(ccol) \
-        .parquet(store + "/vectors")
-    row = assigned.agg(F.count("*").alias("n"),
-                       F.round(F.avg("__sim"), 8).alias("m")).first()
-    assigned.unpersist()
-    n_new, m_new = int(row["n"]), float(row["m"] or 0.0)
-    n_old, m_old = int(stats["n_vectors"]), float(stats["mean_assign_sim"])
-    build_m = float(stats["build_mean_assign_sim"])
-    n_tot = n_old + n_new
-    m_tot = round((n_old * m_old + n_new * m_new) / n_tot, 8) if n_tot \
-        else 0.0
-    spark.createDataFrame(
-        [(n_tot, m_tot, build_m)],
-        "n_vectors long, mean_assign_sim double, "
-        "build_mean_assign_sim double",
-    ).coalesce(1).write.mode("overwrite").parquet(store + "/stats")
-    fs.create(jpath, True).close()
-    return {"n_appended": n_new,
-            "batch_mean_assign_sim": m_new,
-            "build_mean_assign_sim": build_m,
-            "drift": round(build_m - m_new, 8),
-            "mean_assign_sim": m_tot}
 
 
 def ivf_serve_topk(
@@ -422,13 +326,12 @@ def ivf_serve_topk(
     on the store, so only those clusters' files are read (plan-pinned by
     tests/test_analytics.py::test_ivf_persisted_index_prunes_scan). The
     centroid count is cross-checked against the self-describing partition
-    column; a mismatched or torn index raises (including a torn
-    :func:`ivf_append`, which removes the marker for its duration)."""
+    column; a mismatched or torn index raises."""
     fs, jpath = _success_path(spark, store)
     if not fs.exists(jpath):
         raise ValueError(
-            f"index store {store} has no _SUCCESS marker — torn build or "
-            f"torn append; rebuild with ivf_write_index")
+            f"index store {store} has no _SUCCESS marker — torn build; "
+            f"rebuild with ivf_write_index")
     cent_rows = spark.read.parquet(store + "/centroids") \
         .orderBy("cluster").collect()
     centroids = [[float(x) for x in r["centroid"]] for r in cent_rows]
@@ -444,24 +347,9 @@ def ivf_serve_topk(
         raise ValueError(
             f"index column {ccol!r} stamps {k_stamped} clusters but the "
             f"centroid table has {len(centroids)} — torn or mixed index")
-
-    def cos(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a)) or 1.0
-        nb = math.sqrt(sum(x * x for x in b)) or 1.0
-        return dot / (na * nb)
-
-    ranked = sorted(range(len(centroids)),
-                    key=lambda c: (-cos(query, centroids[c]), c))
-    probes = ranked[:n_probe]
-    cand = vectors.filter(F.col(ccol).isin(probes))
-    if exclude_id is not None:
-        cand = cand.filter(F.col(id_col) != exclude_id)
-    scored = cand.select(
-        F.col(id_col),
-        cosine_sim_col(F.col(emb_col), query).alias("cosine_sim"))
-    return scored.orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc()) \
-                 .limit(k)
+    probes = _nearest_clusters(query, centroids, n_probe)
+    return cosine_topk(vectors.filter(F.col(ccol).isin(probes)), query, k,
+                       id_col, emb_col, exclude_id)
 
 
 def lsh_bucket_col_name(n_planes: int = 8, seed: int = 42) -> str:
@@ -542,10 +430,4 @@ def lsh_bucket_topk(
     qb = query_bucket(query, n_planes, seed)
     probes = [qb] + [qb ^ (1 << p) for p in range(min(multiprobe, n_planes))]
     cand = df.filter(F.col("__bucket").isin(probes)).drop("__bucket")
-    if exclude_id is not None:
-        cand = cand.filter(F.col(id_col) != exclude_id)
-    scored = cand.select(
-        F.col(id_col), cosine_sim_col(F.col(emb_col), query).alias("cosine_sim")
-    )
-    return scored.orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc()) \
-                 .limit(k)
+    return cosine_topk(cand, query, k, id_col, emb_col, exclude_id)

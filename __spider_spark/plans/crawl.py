@@ -68,17 +68,26 @@ FRONTIER_COLS = ["url", "url_hash", "host", "priority", "round",
 OUTCOMES = ("fetched", "fetched_404", "retried_503", "failed_gave_up")
 # a discovered link enters the frontier at its parent's priority times this
 PRIORITY_DECAY = 0.5
+# retry pyramid (reference: YlSpiderMiddleware.py:80-109 retries a
+# transient failure 2-3 times before giving up): total tries per URL
+# including the first; a transient (503) failure re-enters the frontier
+# with its priority times RETRY_DECAY until MAX_ATTEMPTS, then quarantines
+MAX_ATTEMPTS = 3
+RETRY_DECAY = 0.5
+# weight of the PageRank share in the frontier priority blend:
+# priority' = (1 - w)·p + w·rank/max_rank
+BLEND_WEIGHT = 0.5
 # PageRank damping of the frontier priority blend
 BLEND_DAMPING = 0.85
 # the priority a page due for a refresh re-enters the frontier at
 RECRAWL_PRIORITY = 1.0
 
 
-def _outcome(max_attempts: int) -> Column:
+def _outcome() -> Column:
     """The outcome of a fetch from its status and the tries it used."""
     return (F.when(F.col("status") == 200, "fetched")
             .when(F.col("status") == 404, "fetched_404")
-            .when(F.col("attempts") + 1 >= max_attempts, "failed_gave_up")
+            .when(F.col("attempts") + 1 >= MAX_ATTEMPTS, "failed_gave_up")
             .otherwise("retried_503"))
 
 
@@ -146,12 +155,6 @@ class CrawlConfig:
     # count and garbage — the same cadence trade as compact_every.
     frontier_mode: str = "cow"
     frontier_fold_every: int | None = None
-    # retry pyramid (reference: YlSpiderMiddleware.py:80-109 retries a
-    # transient failure 2-3 times before giving up): total tries per URL
-    # including the first; a transient (503) failure re-enters the frontier
-    # with priority * retry_decay until max_attempts, then quarantines.
-    max_attempts: int = 3
-    retry_decay: float = 0.5
     # transient-failure injection for the simulated network: canonical
     # url -> number of 503s served before the fetch succeeds
     flaky: dict[str, int] = field(default_factory=dict)
@@ -203,10 +206,9 @@ class CrawlConfig:
     curate_repetition: bool = False
     # link-structure frontier re-prioritization (graph.py): every N rounds
     # blend PageRank over the discovered edge relation into frontier
-    # priorities (priority' = (1-w)p + w·rank/max_rank). None disables —
-    # and then no edges table is accumulated (zero cost when off).
+    # priorities with weight BLEND_WEIGHT. None disables — and then no
+    # edges table is accumulated (zero cost when off).
     blend_pagerank_every: int | None = None
-    blend_weight: float = 0.5
     blend_iters: int = 5
     # host-alias dimension (reference: two-airport aliasing map,
     # ctripSpider.py:56-70 applied at :141-146; ylSpider06.py:465-468):
@@ -595,7 +597,7 @@ def _pagerank_blend(spark: SparkSession, lake: Lakehouse, cfg: CrawlConfig,
                  else prior_edges.unionByName(round_edges))
     return round_edges, reprioritize_frontier(
         new_frontier, all_edges, cfg.blend_iters, BLEND_DAMPING,
-        cfg.blend_weight)
+        BLEND_WEIGHT)
 
 
 def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
@@ -718,7 +720,7 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
         # the wave's outcome counts ride the staged write as observed
         # metrics, so no job re-reads the fragment to group by outcome;
         # the outcome is never written, the fragment's read projects it
-        outcome = _outcome(cfg.max_attempts)
+        outcome = _outcome()
         obs = Observation()
         wide = wide.observe(
             obs,
@@ -733,11 +735,11 @@ def run_round(spark: SparkSession, lake: Lakehouse, pages_idx: DataFrame,
 
         # 5b. retry pyramid: a transient failure with tries left re-enters
         #     the frontier with decayed priority and attempts+1 (never
-        #     marked seen); one that exhausted max_attempts is quarantined
+        #     marked seen); one that exhausted MAX_ATTEMPTS is quarantined
         #     below.
         retries = _entries(
             extracted.filter(F.col("outcome") == "retried_503"),
-            F.col("priority") * F.lit(cfg.retry_decay), k + 1,
+            F.col("priority") * F.lit(RETRY_DECAY), k + 1,
             attempts=F.col("attempts") + 1,
             parent_url=F.col("lineage.parent_url"),
             seed_index=F.col("lineage.seed_index"))

@@ -340,8 +340,5 @@ class Lakehouse:
                 reclaimed["data_dirs"] += 1
         return reclaimed
 
-    def has_table(self, table: str) -> bool:
-        return bool(self.snapshot()["tables"].get(table))
-
     def destroy(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)

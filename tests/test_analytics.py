@@ -494,55 +494,3 @@ def test_decontaminate_join_strategy_is_aqe_decided(spark):
     plan = clean._jdf.queryExecution().optimizedPlan().toString()
     assert "ResolvedHint" not in plan and "broadcast" not in plan.lower()
     assert sorted(r.doc_id for r in clean.collect()) == [2]
-
-
-def test_ivf_append_serves_like_rebuild_at_fixed_centroids(spark, sf_dir,
-                                                           tmp_path):
-    """ivf_append (VERDICT r5 next-round #3): new vectors assigned to the
-    EXISTING centroids and appended partition-wise. Serve-after-append ==
-    rebuild-at-the-same-centroids; the probe scan stays partition-pruned;
-    the drift stat reports batch-vs-build assignment quality; a torn
-    append (marker missing) makes serve AND further appends raise."""
-    import pytest as _pytest
-
-    from __spider_spark.operators.similarity import (
-        ivf_append,
-        ivf_serve_topk,
-        ivf_topk,
-        ivf_write_index,
-    )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = emb.filter(F.col("vec_id") % 4 != 0)
-    extra = emb.filter(F.col("vec_id") % 4 == 0)
-    query = [float(x) for x in
-             emb.filter(F.col("vec_id") == 1).first()["embedding"]]
-    store = str(tmp_path / "emb_ivf_app")
-    cents = ivf_write_index(base, store, n_clusters=8, n_iter=5)
-
-    stat = ivf_append(spark, store, extra)
-    assert stat["n_appended"] == extra.count()
-    assert -1.0 <= stat["drift"] <= 1.0
-    assert stat["build_mean_assign_sim"] > 0
-
-    got = ivf_serve_topk(spark, store, query, k=10, n_probe=2,
-                         exclude_id=1)
-    # rebuild at the SAME (frozen) centroids over the full corpus
-    want = ivf_topk(emb, query, k=10, n_clusters=8, n_probe=2,
-                    exclude_id=1, centroids=cents)
-    assert [tuple(r) for r in got.collect()] == \
-        [tuple(r) for r in want.collect()]
-    # appended store still serves via partition-pruned scans
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "ivf_cluster_k8_i5" in plan.split("PartitionFilters")[1][:400]
-
-    # running stats fold the batch in (weighted mean)
-    stats = spark.read.parquet(store + "/stats").first()
-    assert stats["n_vectors"] == emb.count()
-
-    # torn append: marker removed -> serve and append both refuse
-    (tmp_path / "emb_ivf_app" / "_SUCCESS").unlink()
-    with _pytest.raises(ValueError, match="torn"):
-        ivf_serve_topk(spark, store, query)
-    with _pytest.raises(ValueError, match="torn"):
-        ivf_append(spark, store, extra)

@@ -257,7 +257,7 @@ def test_everything_on_matches_sim(spark):
         default_budget=4, budgets=dict(BUDGETS), robots=dict(ROBOTS),
         use_bloom=True, bloom_parts=4, bloom_bits_per_part=1 << 16,
         bloom_min_seen=0, flaky=dict(flaky),
-        blend_pagerank_every=2, blend_iters=3, blend_weight=0.5,
+        blend_pagerank_every=2, blend_iters=3,
         curate=True, compact_every=2,
     )
     lake = Lakehouse(_tf.mkdtemp(prefix="lake_all_"))
@@ -267,7 +267,6 @@ def test_everything_on_matches_sim(spark):
         _pages_dict(), seed_urls(N, SEEDS, HOSTS), ROUNDS,
         default_budget=4, budgets=dict(BUDGETS), robots=dict(ROBOTS),
         flaky=dict(flaky), blend_pagerank_every=2, blend_iters=3,
-        blend_weight=0.5,
     )
     res = lake.read(spark, "results")
     got = [
@@ -351,8 +350,7 @@ def test_pagerank_blend_order_matches_sim(spark):
     pages = generate_pages(spark, N, HOSTS)
     seeds = make_seeds(spark, N, SEEDS, HOSTS)
     cfg = CrawlConfig(default_budget=4, use_bloom=False,
-                      blend_pagerank_every=1, blend_weight=0.5,
-                      blend_iters=3)
+                      blend_pagerank_every=1, blend_iters=3)
     lake = Lakehouse(_tf.mkdtemp(prefix="lake_pr_"))
     run_crawl(spark, lake, pages, seeds, cfg, ROUNDS)
     got = [
@@ -362,8 +360,7 @@ def test_pagerank_blend_order_matches_sim(spark):
     ]
     blended_sim = simulate_crawl(
         _pages_dict(), seed_urls(N, SEEDS, HOSTS), ROUNDS,
-        default_budget=4, blend_pagerank_every=1, blend_weight=0.5,
-        blend_iters=3)
+        default_budget=4, blend_pagerank_every=1, blend_iters=3)
     assert got == blended_sim.waves
     plain_sim = simulate_crawl(
         _pages_dict(), seed_urls(N, SEEDS, HOSTS), ROUNDS,
@@ -381,7 +378,7 @@ def test_auto_compaction_preserves_crawl(spark):
     pages = generate_pages(spark, N, HOSTS)
     # error-free rounds no longer write empty error fragments at all, so
     # seed errors in TWO rounds: a dead seed (404, round 1) and a flaky
-    # page that exhausts max_attempts (gave-up, round 3)
+    # page that exhausts MAX_ATTEMPTS (gave-up, round 3)
     seeds = make_seeds(spark, N, SEEDS, HOSTS).unionByName(
         spark.createDataFrame(
             [(9001, "http://host0.test/p990001")],
@@ -539,7 +536,7 @@ def test_mor_with_retries_and_blend_matches_sim(spark):
         default_budget=4, budgets=dict(BUDGETS), robots=dict(ROBOTS),
         use_bloom=True, bloom_parts=4, bloom_bits_per_part=1 << 16,
         bloom_min_seen=0, flaky=dict(flaky),
-        blend_pagerank_every=2, blend_iters=3, blend_weight=0.5,
+        blend_pagerank_every=2, blend_iters=3,
         frontier_mode="mor",
     )
     lake = Lakehouse(_tf.mkdtemp(prefix="lake_morb_"))
@@ -549,7 +546,6 @@ def test_mor_with_retries_and_blend_matches_sim(spark):
         _pages_dict(), seed_urls(N, SEEDS, HOSTS), ROUNDS,
         default_budget=4, budgets=dict(BUDGETS), robots=dict(ROBOTS),
         flaky=dict(flaky), blend_pagerank_every=2, blend_iters=3,
-        blend_weight=0.5,
     )
     got = [
         [r.url_hash for r in lake.read(spark, "results")

@@ -148,17 +148,15 @@ def test_crawl_content_dedup_index_and_restart(spark):
 
 
 def test_delta_simhash_accumulates_to_batch(spark):
-    """Incremental simhash_pairs: union of per-wave delta pairs == the
-    batch relation (which the q38 oracle proves equal to brute-force
-    all-pairs Hamming), and a mixed-parameter index raises."""
-    from __spider_spark.operators.dedup import (
-        delta_simhash_pairs,
-        simhash,
-        simhash_pairs,
-    )
+    """Incremental SimHash pairs: union of per-wave delta pairs == one
+    call over all docs with no index (which the q38 oracle proves equal
+    to brute-force all-pairs Hamming), and a mixed-parameter index
+    raises."""
+    from __spider_spark.operators.dedup import delta_simhash_pairs, simhash
     sim = simhash(_docs(spark), "text", "doc_id")
     want = {(r.doc_a, r.doc_b, r.hamming)
-            for r in simhash_pairs(sim, n_bands=4, max_hamming=3).collect()}
+            for r in delta_simhash_pairs(sim, None, n_bands=4,
+                                         max_hamming=3)[1].collect()}
     assert want, "fixture lost its simhash near-dups; test is vacuous"
     index_bands = None
     got = set()

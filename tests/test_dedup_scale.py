@@ -12,6 +12,8 @@ path scores on the surviving pairs.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -104,12 +106,49 @@ def test_near_dedup_keeps_min_id_under_boilerplate(spark, hot_corpus):
     assert survivors == {0} | set(range(10, 200))
 
 
+def test_band_join_reuses_its_exchange(spark, hot_corpus):
+    """Every pair finder's band self-join is merge-hinted, so its two
+    sides plan one exchange and ReusedExchange computes the upstream
+    chain once — with and without a persisted index on the other side."""
+    from __spider_spark.operators.dedup import (
+        delta_near_dedup,
+        delta_simhash_pairs,
+        simhash,
+    )
+    old = hot_corpus.filter(F.col("doc_id") % 2 == 0)
+    new = hot_corpus.filter(F.col("doc_id") % 2 == 1)
+    sim = simhash(hot_corpus, "text", "doc_id")
+    old_sim = sim.filter(F.col("doc_id") % 2 == 0)
+    new_sim = sim.filter(F.col("doc_id") % 2 == 1)
+    sig = minhash_signatures(hot_corpus, "text", "doc_id", n_hashes=16)
+    cases = {
+        "lsh_candidate_pairs": lsh_candidate_pairs(sig, 8, 2),
+        "delta_near_dedup(None)":
+            delta_near_dedup(hot_corpus, hot_corpus, None)[1],
+        "delta_near_dedup(index)": delta_near_dedup(
+            new, hot_corpus, delta_near_dedup(old, old, None)[0])[1],
+        "delta_simhash_pairs(None)": delta_simhash_pairs(sim, None)[1],
+        "delta_simhash_pairs(index)": delta_simhash_pairs(
+            new_sim, delta_simhash_pairs(old_sim, None)[0])[1],
+    }
+    # the reused exchange must be the band shuffle itself: the upstream
+    # groupBy(doc_id) exchange is reused even when the join forks the chain
+    band_reuse = re.compile(r"ReusedExchange .*hashpartitioning\(band#")
+    unreused = []
+    for name, df in cases.items():
+        df.collect()  # inspect the plan that ran, not the initial one
+        if not band_reuse.search(
+                df._jdf.queryExecution().executedPlan().toString()):
+            unreused.append(name)
+    assert not unreused, f"band self-join not reused in {unreused}"
+
+
 def test_simhash_pairs_hand_case(spark):
     """Crafted simhashes: hamming 1 and 3 qualify (including a pair whose
     3 flipped bits land in 3 DIFFERENT bands — only the 4th band is
     intact, the exact case band pruning must still catch); hamming 4+
     is excluded."""
-    from __spider_spark.operators.dedup import simhash_pairs
+    from __spider_spark.operators.dedup import delta_simhash_pairs
     rows = [
         (0, 0),
         (1, 1),                               # ham(0,1)=1
@@ -118,7 +157,8 @@ def test_simhash_pairs_hand_case(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, simhash long")
     got = {(r.doc_a, r.doc_b): r.hamming
-           for r in simhash_pairs(df, n_bands=4, max_hamming=3).collect()}
+           for r in delta_simhash_pairs(df, None, n_bands=4,
+                                        max_hamming=3)[1].collect()}
     assert got[(0, 1)] == 1
     assert got[(0, 2)] == 3
     assert got[(1, 2)] == 2   # differs in bits 0? no: 1 vs (1|1<<15|1<<30)
@@ -126,18 +166,19 @@ def test_simhash_pairs_hand_case(spark):
     # indivisible band split refuses loudly
     import pytest as _p
     with _p.raises(ValueError, match="divisible"):
-        simhash_pairs(df, n_bands=7)
+        delta_simhash_pairs(df, None, n_bands=7)
 
 
 def test_simhash_pairs_lossless_vs_bruteforce(spark, sf_dir):
     """The pigeonhole claim, checked end-to-end on real docs: banded
     candidates + Hamming verify == brute-force all-pairs Hamming."""
-    from __spider_spark.operators.dedup import simhash, simhash_pairs
+    from __spider_spark.operators.dedup import delta_simhash_pairs, simhash
     sim = simhash(
         spark.read.parquet(f"{sf_dir}/documents.parquet"), "text", "doc_id"
     ).cache()
     got = {tuple(r) for r in
-           simhash_pairs(sim, n_bands=4, max_hamming=3).collect()}
+           delta_simhash_pairs(sim, None, n_bands=4,
+                               max_hamming=3)[1].collect()}
     a, b = sim.alias("a"), sim.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     brute = (a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))

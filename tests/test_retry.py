@@ -5,7 +5,7 @@ Reference semantics: a transient failure is retried 2-3 times with backoff
 bodies are persisted per key (/root/reference/spiders/ctripSpider.py:318-332),
 and session state refreshes between batches (get_ctrip_cookie.py:40-67).
 Engine form: 503s re-enter the frontier with decayed priority and
-attempts+1 up to max_attempts, then quarantine into the ``errors`` table
+attempts+1 up to MAX_ATTEMPTS, then quarantine into the ``errors`` table
 (same atomic commit); robots rules are a distributed (host, rules) dim.
 Everything is pinned against the single-process reference simulator.
 """
@@ -23,7 +23,7 @@ from __spider_spark.reference_sim import simulate_crawl
 from __spider_spark.sources.lakehouse import Lakehouse
 
 # tiny site: s0 links to flaky1/flaky2/dead; flaky1 recovers after one 503,
-# flaky2 503s forever (gives up at max_attempts), dead 404s
+# flaky2 503s forever (gives up at MAX_ATTEMPTS), dead 404s
 SITE = {
     "http://r.test/": """<html><body><h1>home</h1>
         <p><a href="/flaky1">f1</a></p>
@@ -54,15 +54,14 @@ def _spark_inputs(spark):
 def retry_sim():
     pages = {canonicalize_one(u): h.encode() for u, h in SITE.items()}
     return simulate_crawl(pages, SEEDS, ROUNDS, default_budget=10,
-                          max_attempts=3, retry_decay=0.5, flaky=FLAKY)
+                          flaky=FLAKY)
 
 
 @pytest.fixture(scope="module")
 def retry_crawled(spark):
     pages_df, seeds_df = _spark_inputs(spark)
     lake = Lakehouse(tempfile.mkdtemp(prefix="lake_retry_"))
-    cfg = CrawlConfig(default_budget=10, max_attempts=3, retry_decay=0.5,
-                      flaky=dict(FLAKY))
+    cfg = CrawlConfig(default_budget=10, flaky=dict(FLAKY))
     metrics = run_crawl(spark, lake, pages_df, seeds_df, cfg, ROUNDS)
     yield lake, metrics
     lake.destroy()
@@ -133,8 +132,7 @@ def test_restart_equivalence_covers_errors(spark, retry_sim):
     final content (quarantine is part of the atomic snapshot)."""
     pages_df, seeds_df = _spark_inputs(spark)
     lake = Lakehouse(tempfile.mkdtemp(prefix="lake_retry_rst_"))
-    cfg = CrawlConfig(default_budget=10, max_attempts=3, retry_decay=0.5,
-                      flaky=dict(FLAKY))
+    cfg = CrawlConfig(default_budget=10, flaky=dict(FLAKY))
     run_crawl(spark, lake, pages_df, seeds_df, cfg, 2)
     run_crawl(spark, lake, pages_df, seeds_df, cfg, ROUNDS)
     got = {(r.url, r.round, r.status, r.attempts, r.error)

@@ -55,6 +55,15 @@ def _imported_modules(path: Path, module: str) -> set[str]:
             for n in names for i in range(n.count(".") + 1)}
 
 
+def _entry_points() -> list[Path]:
+    """The non-test files that use the package: the crawl and query entry
+    points, the scripts and the benchmarks."""
+    return [REPO / "__spark_entry__.py", REPO / "main.py",
+            REPO / "bench.py", REPO / "bench_extra.py",
+            *sorted((REPO / "scripts").glob("*.py")),
+            *sorted((REPO / "perfbench").glob("*.py"))]
+
+
 def test_every_package_module_is_reachable():
     """Each module under the package is imported, directly or through
     other package modules, by the crawl, the queries, the scripts or the
@@ -64,11 +73,7 @@ def test_every_package_module_is_reachable():
                         ).removesuffix(".__init__")
     package = {name(p): p for p in (REPO / "__spider_spark").rglob("*.py")
                if "__pycache__" not in p.parts}
-    roots = [REPO / "__spark_entry__.py", REPO / "main.py",
-             REPO / "bench.py", REPO / "bench_extra.py",
-             *sorted((REPO / "scripts").glob("*.py")),
-             *sorted((REPO / "perfbench").glob("*.py"))]
-    todo = [(p, name(p)) for p in roots]
+    todo = [(p, name(p)) for p in _entry_points()]
     reached: set[str] = set()
     while todo:
         path, module = todo.pop()
@@ -78,6 +83,31 @@ def test_every_package_module_is_reachable():
     unreached = sorted(m for m, p in package.items()
                        if p.name != "__init__.py" and m not in reached)
     assert not unreached, f"nothing outside the tests imports {unreached}"
+
+
+def test_every_operator_and_function_is_named():
+    """Each top-level public function and class in ``operators/`` and
+    ``functions/`` is named (called, imported or referenced) by some
+    non-test file: a definition only its own tests reach has no home."""
+    sources = [*(p for p in (REPO / "__spider_spark").rglob("*.py")
+                 if "__pycache__" not in p.parts), *_entry_points()]
+    named: set[str] = set()
+    for path in sources:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                named.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                named.add(node.attr)
+            elif isinstance(node, ast.alias):
+                named.add(node.name)
+    unnamed = [
+        f"{path.relative_to(REPO).as_posix()}::{node.name}"
+        for sub in ("operators", "functions")
+        for path in sorted((REPO / "__spider_spark" / sub).glob("*.py"))
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+        and not node.name.startswith("_") and node.name not in named]
+    assert not unnamed, f"only their own tests name {unnamed}"
 
 
 def test_package_udfs_use_the_package_decorator():
